@@ -11,9 +11,8 @@ is the thin wiring the driver imports.
 Eager-build contract (for any future driver change): most
 ``queries()[name]`` callables are LAZY — they return an unevaluated
 DataFrame and all Spark work happens when the driver acts on it.  The
-entries named in ``EAGER_BUILD_ENTRIES`` (re-exported here from
-``datalakehouse_spark.registry``) do REAL work at call time: streaming
-drains to a sink (e.g. ``filebus_kafka_ingest``,
+entries whose ``registry.REGISTRY[name].eager`` is set do REAL work at
+call time: streaming drains to a sink (e.g. ``filebus_kafka_ingest``,
 ``streaming_incremental_mv``), persisted index/table builds (IVF/PQ,
 versioned tables), or bounded driver-side literals (sampled split
 points).  Calling one twice executes that work twice, and building all
@@ -34,7 +33,6 @@ if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
 from datalakehouse_spark import registry  # noqa: E402
-from datalakehouse_spark.registry import EAGER_BUILD_ENTRIES  # noqa: E402,F401
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -18,6 +18,7 @@ explicit --waive naming the entry, recorded in the file.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -28,7 +29,7 @@ REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-from datalakehouse_spark.registry import REGISTRY, _load_extensions  # noqa: E402
+from datalakehouse_spark.registry import REGISTRY, _load_extensions, clear_memos  # noqa: E402
 from datalakehouse_spark.session import get_spark  # noqa: E402
 
 _load_extensions()
@@ -199,35 +200,40 @@ def _run(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def cold_reset(name: str) -> None:
-    """Clear the session memo behind a BUILD_ONCE entry so a quiet-JVM
-    re-time measures a genuinely COLD build (the integrity test's
-    _clear_memos pattern).  Round 15: BUILD_ONCE entries used to be
-    exempt from the suspect re-run because a re-run would time a cache
-    HIT for the one entry whose first-run build cost IS the metric —
-    which left them the only entries with no defense against inherited
-    fleet debt (the r15 episode: bpe_vocab_train read 13.1 s in-fleet
-    at position ~230, 1.4 s in a 15-entry fleet, 1.9 s isolated — all
-    the same cold code path).  Clearing the memo removes the objection:
-    the re-time is cold, so the metric is unchanged and the gate keeps
-    comparing first-run build cost against the settled baseline."""
-    import datalakehouse_spark.registry_ext as e1
-    import datalakehouse_spark.registry_ext4 as e4
-    import datalakehouse_spark.registry_ext6 as e6
+def warm_up(spark, names) -> None:
+    """Run every entry once at tiny scale so JVM/codegen warm-up isn't
+    billed to the measured runs; a failing entry is named on stderr
+    (stdout stays the one JSON line)."""
+    for name in names:
+        try:
+            _run(REGISTRY[name].fn(spark, WARMUP_DIR))
+        except Exception as exc:
+            print(f"WARMUP FAIL {name}: {exc}", file=sys.stderr)
 
-    if name == "bpe_vocab_train":
-        e6._BPE_CACHE.clear()
-    elif name == "streaming_near_dup_build":
-        e6._ND_STAGE_CACHE.clear()
-    elif name == "ivf_build_stats":
-        e1._IVF_INDEX_CACHE.clear()
-        e1._COARSE_CACHE.clear()
-        e1._QUERY_VEC_CACHE.clear()
-    elif name == "pq_build_stats":
-        e4._PQ_INDEX_CACHE.clear()
-        e4._IVFPQ_INDEX_CACHE.clear()
-    else:
-        raise ValueError(f"no cold-reset recipe for BUILD_ONCE entry {name}")
+
+def time_entry(spark, name: str, sf_dir: str) -> float:
+    """One end-to-end sample: build + noop-sink execution, in seconds."""
+    t0 = time.perf_counter()
+    _run(REGISTRY[name].fn(spark, sf_dir))
+    return time.perf_counter() - t0
+
+
+def cold_reset(name: str) -> None:
+    """Clear the session memos a build-once entry fills
+    (``QuerySpec.builds``) so a quiet-JVM re-time measures a genuinely
+    COLD build.  Round 15: build-once entries used to be exempt from
+    the suspect re-run because a re-run would time a cache HIT for the
+    one entry whose first-run build cost IS the metric — which left
+    them the only entries with no defense against inherited fleet debt
+    (the r15 episode: bpe_vocab_train read 13.1 s in-fleet at position
+    ~230, 1.4 s in a 15-entry fleet, 1.9 s isolated — all the same
+    cold code path).  Clearing the memo removes the objection: the
+    re-time is cold, so the metric is unchanged and the gate keeps
+    comparing first-run build cost against the settled baseline."""
+    spec = REGISTRY.get(name)
+    if spec is None or not spec.builds:
+        raise ValueError(f"no cold-reset recipe: {name} builds no session memo")
+    clear_memos(spec.builds)
 
 
 def main() -> None:
@@ -244,17 +250,17 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     names = list(REGISTRY)
-    for name in names:  # warmup at tiny scale
-        try:
-            _run(REGISTRY[name].fn(spark, WARMUP_DIR))
-        except Exception:
-            pass
+    warm_up(spark, names)
 
     # Short entries are codegen-compile / scheduling-jitter dominated at
     # local scale (round-4 verdict: ivf entries swung >20% run-to-run),
     # so entries under the threshold report the median of 3 executions.
     # Long entries stay single-shot — their signal-to-jitter is fine and
     # re-running them would triple bench wall time for nothing.
+    # Build-once entries (QuerySpec.builds) are timed once: the first
+    # timing IS the metric, a median over memo hits would hide the build
+    # cost the entry exists to measure.  Iterative multi-job entries
+    # (QuerySpec.min_of_3, round 12, VERDICT r11 #5) record min-of-3.
     RERUN_THRESHOLD_S = 3.0
     # The sub-second tier (VERDICT r14 #7): entries whose BASELINE
     # reference is under this dominate warn_contributors round after
@@ -263,25 +269,6 @@ def main() -> None:
     # minimum, so min-of-3 recovers the code-speed signal the ratchet
     # gate actually compares (the kmeans/pagerank precedent).
     SUB_SECOND_PIN_S = 0.5
-    # Entries whose FIRST run performs a session-cached build (the IVF
-    # index): the first timing IS the metric; a median over cache hits
-    # would hide the build cost the entry exists to measure.
-    BUILD_ONCE = {
-        "ivf_build_stats",
-        "pq_build_stats",
-        "bpe_vocab_train",
-        # round 16: the near-dup ingest's historical-index build +
-        # restage, split out of the drain entry (VERDICT r15 #3)
-        "streaming_near_dup_build",
-    }
-    # Iterative multi-job entries (round 12, VERDICT r11 #5): each
-    # launches many short dependent Spark jobs, so scheduling/GC
-    # ambient compounds across iterations — r11 saw +25%/+34% r-o-r
-    # drift with no code change.  min-of-3 recovers the code-speed
-    # signal (the quantity the ratchet gate compares) where a median
-    # would keep one contaminated run's vote.
-    MIN_OF_3 = {"kmeans_inertia_sweep", "graph_pagerank"}
-
     # Baseline loads BEFORE the timing loop: the sub-second pin keys
     # off each entry's recorded reference (gate comparisons below reuse
     # the same dict).  References only mean anything at their own sf.
@@ -299,36 +286,33 @@ def main() -> None:
         else {}
     )
 
-    def _timed(name: str) -> float:
-        t0 = time.perf_counter()
-        _run(REGISTRY[name].fn(spark, sf_dir))
-        return time.perf_counter() - t0
-
+    timed = functools.partial(time_entry, spark, sf_dir=sf_dir)
     timings: dict[str, float] = {}
     t_total0 = time.perf_counter()
     for name in names:
-        t1 = _timed(name)
-        if name in BUILD_ONCE:
+        spec = REGISTRY[name]
+        t1 = timed(name)
+        if spec.builds:
             timings[name] = round(t1, 3)
-        elif name in MIN_OF_3 or base_refs.get(name, 1.0) < SUB_SECOND_PIN_S:
-            timings[name] = round(min(t1, _timed(name), _timed(name)), 3)
+        elif spec.min_of_3 or base_refs.get(name, 1.0) < SUB_SECOND_PIN_S:
+            timings[name] = round(min(t1, timed(name), timed(name)), 3)
         elif t1 < RERUN_THRESHOLD_S:
-            runs = sorted([t1, _timed(name), _timed(name)])
+            runs = sorted([t1, timed(name), timed(name)])
             timings[name] = round(runs[1], 3)
         else:
             # a slow FIRST run may be an ordering artifact (GC pause
             # inherited from a heavy predecessor — a 0.5 s rollup once
             # recorded 5.6 s this way), so confirm before believing it
-            t2 = _timed(name)
+            t2 = timed(name)
             if t2 < RERUN_THRESHOLD_S:  # outlier: fall back to median-of-3
-                runs = sorted([t1, t2, _timed(name)])
+                runs = sorted([t1, t2, timed(name)])
                 timings[name] = round(runs[1], 3)
             elif abs(t1 - t2) / max(t1, t2) > 0.25:
                 # the two long runs disagree >25% — ambient load is
                 # polluting the signal (round-6 verdict: unchanged
                 # entries drifted a median 1.10x from machine noise);
                 # a third run, min-of-3, before recording a regression
-                timings[name] = round(min(t1, t2, _timed(name)), 3)
+                timings[name] = round(min(t1, t2, timed(name)), 3)
             else:  # genuinely long and stable: steady-state = best of two
                 timings[name] = round(min(t1, t2), 3)
     wall = round(time.perf_counter() - t_total0, 3)
@@ -351,7 +335,7 @@ def main() -> None:
     # regression — a real regression survives, context noise doesn't.
     # Runs to a FIXPOINT: re-timing lowers the median ratio, which can
     # newly flag borderline entries under the recalibrated gate — they
-    # get their re-run too.  BUILD_ONCE entries re-time COLD (session
+    # get their re-run too.  Build-once entries re-time COLD (session
     # memo cleared first, see cold_reset) so the re-run measures the
     # same first-run build cost the entry exists to gate — a real build
     # regression survives a cold quiet-JVM re-time, inherited fleet
@@ -365,16 +349,14 @@ def main() -> None:
             break
         for name in fresh:
             retimed.add(name)
-            if name in BUILD_ONCE:
+            if REGISTRY[name].builds:
                 runs = []
                 for _ in range(2):
                     cold_reset(name)
-                    runs.append(_timed(name))
+                    runs.append(timed(name))
                 timings[name] = round(min(timings[name], *runs), 3)
             else:
-                timings[name] = round(
-                    min(timings[name], _timed(name), _timed(name)), 3
-                )
+                timings[name] = round(min(timings[name], timed(name), timed(name)), 3)
         total = round(sum(timings.values()), 3)
     # The gate and every baseline-derived statistic only mean anything
     # at the baseline's own scale factor (ADVICE r10: an sf0.01 run

@@ -27,8 +27,8 @@ code change:
   recompute chain is itself expensive.
 
 Eagerness stays the caller's choice: eager materialization is only
-legal in ``registry.EAGER_BUILD_ENTRIES`` (jobs run at plan-build
-time); lazy callers (pure-plan entries) get a marked frame that
+legal in entries registered ``eager=True`` (``registry.QuerySpec``;
+jobs run at plan-build time); lazy callers (pure-plan entries) get a marked frame that
 materializes on first action.
 """
 

@@ -230,7 +230,7 @@ def _bucketed_pair_sides(
     projections; measured: the r17 before-plan of
     simhash_near_dup_pairs runs scan→explode→64-vote aggregate→window
     twice).  Callers that pass True run a materialization job at
-    plan-build time and must be in ``registry.EAGER_BUILD_ENTRIES``.
+    plan-build time and must be registered ``eager=True``.
     """
     from datalakehouse_spark.materialize import materialize
 
@@ -532,7 +532,7 @@ def simhash_near_dup_pairs(
     # the before-plan ran scan→token explode→64-sum aggregate→window
     # TWICE (no exchange reuse across the diverging salt projections).
     # This makes the entry an eager-build (shared-scan materialization
-    # shape, registry.EAGER_BUILD_ENTRIES).
+    # shape, registered eager=True).
     lhs, rhs, join_cols = _bucketed_pair_sides(
         blocks, ["block", "key"], id_col, max_bucket_size, hot_bucket,
         materialize_rows=True,

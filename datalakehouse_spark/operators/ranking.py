@@ -31,7 +31,7 @@ of the returned plan sees byte-identical bucket boundaries and offsets.
 The price is two small eager jobs at build time (sample + per-bucket
 count), the same trade ``repartitionByRange`` makes — registry entries
 built on this helper are therefore members of the documented eager-build
-class (``registry.EAGER_BUILD_ENTRIES``).
+class (registered ``eager=True``, ``registry.QuerySpec``).
 
 NULL leading values are bucketed explicitly to the window's default null
 position (Spark: ASC ⇒ NULLS FIRST, DESC ⇒ NULLS LAST), so a nullable

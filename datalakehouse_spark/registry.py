@@ -19,6 +19,9 @@ Determinism contract (applies to every entry):
 
 from __future__ import annotations
 
+import functools
+import inspect
+import os
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -39,171 +42,130 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 @dataclass
 class QuerySpec:
+    """One registry entry and every fact the bench, tools and tests
+    need about it.
+
+    ``eager``: the entry runs Spark jobs at BUILD time (when ``fn`` is
+    called, before the caller acts on the returned DataFrame).  Every
+    other entry must be a pure lazy plan — no collect/count/write at
+    build.  The eager class is legitimate only in the shapes below (in
+    finer detail in docs/SCALE.md "Eager-build entry class"), and each
+    eager entry's registration names its shape:
+
+    * **materializing surfaces** — DML/ingest/maintenance/versioning
+      entries whose OUTPUT is a table state change (merge, roundtrips,
+      compaction, time travel, incremental MV, streaming drains);
+    * **build/serve splits** — ANN index training and query-vector
+      collects, all bounded (k×dim centroids, one probe vector);
+    * **iterative / diagnostic algorithms** — pointer-jumping dedup,
+      pagerank, triangle count, recall ledgers; loop counts and sample
+      caps are constants, never corpus-proportional;
+    * **shared-scan materializations** — a corpus-proportional
+      intermediate computed once and materialized at build because
+      several downstream legs of the SAME entry read it (the LSH
+      shingle frame, the span-digest explode).  Unlike the first three
+      shapes the materialized bytes scale with the corpus; the contract
+      is that they are bounded by what one consumer must hold anyway
+      (disk-spillable), exist only for the entry's lifetime, and never
+      persist across runs.
+
+    ``tests/test_registry_integrity.py`` pins the flag BOTH ways with a
+    job scan of a cold build: a lazy entry that starts running jobs
+    fails, and an eager entry that stops running them must drop the
+    flag.
+
+    ``builds``: the session memos (see ``session_memo``) the entry's
+    first run fills.  Non-empty means the first run's build IS the
+    metric: bench times the entry once, and re-times it cold after
+    ``clear_memos(builds)``.
+
+    ``min_of_3``: an iterative entry launching many short dependent
+    jobs, so scheduling/GC ambient compounds across iterations (r11
+    saw +25%/+34% round-over-round drift with no code change); bench
+    records the min of 3 runs, which recovers the code-speed signal
+    the ratchet gate compares where a median keeps one contaminated
+    run's vote.
+    """
+
     fn: QueryFn
     sql: Optional[str]  # None => non-SQL-expressible, rows-only check
     doc: str = ""
+    eager: bool = False
+    builds: tuple[str, ...] = ()
+    min_of_3: bool = False
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
-#: Entries ALLOWED to run Spark jobs at BUILD time (when ``fn`` is
-#: called, before the driver acts on the returned DataFrame).  Every
-#: other entry must be a pure lazy plan — no collect/count/write at
-#: build.  The eager class is legitimate in exactly four shapes (see
-#: docs/SCALE.md "Eager-build entry class"):
-#:   * **materializing surfaces** — DML/ingest/maintenance/versioning
-#:     entries whose OUTPUT is a table state change (merge, roundtrips,
-#:     compaction, time travel, incremental MV);
-#:   * **build/serve splits** — ANN index training and query-vector
-#:     collects, all bounded (k×dim centroids, one probe vector);
-#:   * **iterative / diagnostic algorithms** — pointer-jumping dedup,
-#:     pagerank, triangle count, recall ledgers; loop counts and sample
-#:     caps are constants, never corpus-proportional;
-#:   * **shared-scan materializations** (round 16, ADVICE r16) — a
-#:     corpus-proportional intermediate computed once and materialized
-#:     at build because several downstream legs of the SAME entry read
-#:     it (the LSH shingle frame, the span-digest explode).  Unlike the
-#:     first three shapes the materialized bytes scale with the corpus;
-#:     the contract is that they are bounded by what one consumer must
-#:     hold anyway (disk-spillable), exist only for the entry's
-#:     lifetime, and never persist across runs.
-#: ``tests/test_registry_integrity.py`` pins this set BOTH ways with a
-#: job-group scan: a lazy entry that starts running jobs fails, and a
-#: listed entry that stops being eager must be removed.
-EAGER_BUILD_ENTRIES = frozenset(
-    {
-        # materializing surfaces
-        "bucketed_colocated_join",  # bucketed-table writes (session-memoized)
-        "bucketed_colocated_agg",  # shares the bucketed lineitem write
-        "merge_upsert_risk",
-        "jsonl_ingest_roundtrip",
-        "csv_ingest_roundtrip",
-        "orc_ingest_roundtrip",
-        "schema_evolution_read",
-        "compaction_partition_sweep",
-        "time_travel_read",
-        "version_incremental_read",
-        "versioned_branch_evolution",
-        "incremental_mv_maintenance",
-        "streaming_incremental_mv",
-        # streaming harness: produces a bounded 400-row feed then drains
-        # the filebus Python DataSource stream into a memory sink at
-        # build time (sources/filebus.py; the V2 reader path itself runs
-        # lazily per micro-batch on executors)
-        "filebus_kafka_ingest",
-        # round 15: restages the crawl slice, drains a foreachBatch
-        # stream, commits the digest index + stats per micro-batch
-        "streaming_incremental_dedup",
-        # round 15: the near-dup twin — LSH bucket index maintained
-        # across micro-batches, one versioned commit per trigger
-        # (round 16: drain-only; the build moved to the split entry)
-        "streaming_near_dup_ingest",
-        # round 16: the near-dup BUILD half (historical LSH index +
-        # restage, session-memoized — the ivf_build_stats split shape)
-        "streaming_near_dup_build",
-        # ANN build/serve splits
-        "knn_brute_force",
-        "hybrid_rrf_fusion",  # its vector list collects the 1-row query vec
-        "ivf_build_stats",
-        "ivf_search",
-        "ivf_search_indexed",
-        "ann_lsh_search",
-        "ann_multiprobe_search",
-        "quantized_knn",
-        "pq_build_stats",
-        "pq_search",
-        "ivf_pq_search",
-        "kmeans_inertia_sweep",
-        # iterative / diagnostic
-        "dedup_clusters",
-        "dedup_canonical",
-        "dup_graph_degrees",
-        "graph_pagerank",
-        "triangle_count",
-        "association_rules",
-        "tfidf_top_terms",
-        "scalar_subquery_ratio",
-        "ann_recall_accounting",
-        "pq_recall_accounting",
-        "lsh_recall_accounting",
-        "corpus_health_report",
-        # distributed global ranking: the range-bucket split sample +
-        # per-bucket count are small eager jobs embedded as literals
-        # (the repartitionByRange trade — see operators/ranking.py
-        # module doc; round 8 removed the exchange-reuse dependency).
-        # NOTE ntile_percent_rank left this class in round 10: its
-        # size-adaptive plan (io.table_bytes probe, zero Spark jobs)
-        # takes the lazy native-window path below 256 MiB, which is
-        # what the fixture-scale contract test observes; above the
-        # threshold it runs the same eager bucketed ranker as the
-        # entries listed here.
-        "gini_coefficient",
-        "repeat_purchase_intervals",
-        "ltv_deciles_pareto",
-        "skyline_2d",
-        # SemDeDup: the k-means build collects k x dim centroids
-        "semantic_dedup",
-        # round 16 (optimization): the LSH pipeline materializes its
-        # single shared tokenize+shingle pass (operators/dedup.py
-        # near_dup_pairs) so candidates and both verify legs read one
-        # frame instead of re-tokenizing the corpus three times
-        "near_dup_pairs",
-        "near_dup_decontamination",  # same shared-shingle checkpoint
-        # round 17: the SimHash pair join materializes its counted
-        # bucket frame once so both self-join legs read ONE evaluation
-        # of the 64-bit vote aggregate (the before-plan ran the whole
-        # scan→explode→aggregate→window pipeline twice)
-        "simhash_near_dup_pairs",
-        # round 16 (optimization): the span-digest explode feeds the
-        # duplicated-digest aggregate AND its join-back — materialized
-        # once per entry instead of re-tokenizing per consumer
-        "dup_span_coverage",
-        "dup_span_excision_stats",
-        "dup_span_excision_apply",
-        # single-scan decontamination: the doc-level flag frame is
-        # checkpointed eagerly so the corpus-sized gram cache can be
-        # released before the entry returns (leak-free, ADVICE r8)
-        "decontamination_report",
-        # BPE build/serve split (round 14): the trainer runs at build
-        # time (size-adaptive — one executor task on the bounded
-        # fixture, the distributed argmax loop at scale) and
-        # bpe_tokenize_stats shares the session-memoized merges — both
-        # are eager in a COLD session (the contract the integrity scan
-        # pins, clearing _BPE_CACHE per entry like the ANN memos)
-        "bpe_vocab_train",
-        "bpe_tokenize_stats",
-        # round 15: commits the learned vocab through VersionedTable
-        # (v1 + v2) and collects the pinned ≤n_merges-row v1 at build
-        "bpe_vocab_apply_versioned",
-        # round 15: the WordPiece trainer runs at build time (fused
-        # single-task probe on the bounded fixture; unmemoized, so
-        # every run — including bench re-times — is a cold build);
-        # the inference entry retrains its own inventory at build for
-        # the same reason (no cross-entry memo, no cold-reset need)
-        "wordpiece_vocab_train",
-        "wordpiece_tokenize_stats",
-        # round 16: the WordPiece vocab through the versioned-artifact
-        # path (trains + commits v1/v2 + collects the pinned v1 at
-        # build — the bpe_vocab_apply_versioned shape)
-        "wordpiece_vocab_apply_versioned",
-        # round 16: the Unigram-LM trainer pair — both retrain at build
-        # via the fused single-task probe (one narrow action cold,
-        # unmemoized like the WordPiece pair)
-        "unigram_vocab_train",
-        "unigram_tokenize_stats",
-        # round 16: the unigram vocab through the versioned-artifact
-        # path (trains + commits v1/v2 + collects the pinned v1)
-        "unigram_vocab_apply_versioned",
-    }
-)
 
-
-def register(name: str, sql: Optional[str], doc: str = ""):
+def register(
+    name: str,
+    sql: Optional[str],
+    doc: str = "",
+    *,
+    eager: bool = False,
+    builds: tuple[str, ...] = (),
+    min_of_3: bool = False,
+):
     def deco(fn: QueryFn):
-        REGISTRY[name] = QuerySpec(fn=fn, sql=sql, doc=doc)
+        REGISTRY[name] = QuerySpec(fn, sql, doc, eager, builds, min_of_3)
         return fn
 
     return deco
+
+
+#: Every session memo by name (see ``session_memo``): key -> value.
+MEMOS: dict[str, dict] = {}
+
+
+def session_memo(name: str):
+    """Decorator: memoize a ``(spark, sf_dir, *params)`` build for the
+    session, in ``MEMOS[name]`` (so ``clear_memos`` reaches it by name).
+
+    Key rule (every memo): ``(Spark applicationId, abspath(sf_dir),
+    *params with defaults applied)`` — a value is reused only by the
+    same Spark application reading the same fixture directory with the
+    same build parameters.  ``fn.peek(...)`` returns the memoized value
+    for those arguments, or None, without building."""
+    memo = MEMOS.setdefault(name, {})
+
+    def deco(build):
+        sig = inspect.signature(build)
+
+        def key(spark, sf_dir, *args, **kwargs) -> tuple:
+            bound = sig.bind(spark, sf_dir, *args, **kwargs)
+            bound.apply_defaults()
+            params = tuple(bound.arguments.values())[2:]
+            return (spark.sparkContext.applicationId, os.path.abspath(sf_dir), *params)
+
+        @functools.wraps(build)
+        def memoized(spark, sf_dir, *args, **kwargs):
+            k = key(spark, sf_dir, *args, **kwargs)
+            if k not in memo:
+                memo[k] = build(spark, sf_dir, *args, **kwargs)
+            return memo[k]
+
+        memoized.peek = lambda *a, **kw: memo.get(key(*a, **kw))
+        return memoized
+
+    return deco
+
+
+def clear_memos(names=None) -> None:
+    """Empty the named memos (an unknown name raises).  With no names:
+    every memo, plus the ``bkt_`` bucketed tables the colocated-join
+    entries memoize in the session catalog."""
+    _load_extensions()
+    unknown = sorted(set(names or ()) - set(MEMOS))
+    if unknown:
+        raise KeyError(f"unknown session memos: {unknown}")
+    for n in MEMOS if names is None else names:
+        MEMOS[n].clear()
+    spark = SparkSession.getActiveSession()
+    if names is None and spark is not None:
+        for t in spark.catalog.listTables():
+            if t.name.startswith("bkt_"):
+                spark.sql(f"DROP TABLE IF EXISTS {t.name}")
 
 
 # --------------------------------------------------------------------------

@@ -15,7 +15,7 @@ from datalakehouse_spark.operators import dedup as D
 from datalakehouse_spark.operators import relational as R
 from datalakehouse_spark.operators import similarity as S
 from datalakehouse_spark.operators import textstats as TS
-from datalakehouse_spark.registry import register
+from datalakehouse_spark.registry import register, session_memo
 from datalakehouse_spark.scratch import fresh_scratch
 
 # ---------------------------------------------------------------------------
@@ -266,7 +266,9 @@ SELECT id_a, id_b, jaccard FROM jac WHERE jaccard >= 0.6
 """
 
 
-@register("near_dup_pairs", _near_dup_sql(), "MinHash-LSH near-dup: bucket -> verify")
+# shared-scan materialization: one tokenize+shingle pass read by candidates and
+# both verify legs
+@register("near_dup_pairs", _near_dup_sql(), "MinHash-LSH near-dup: bucket -> verify", eager=True)
 def q_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return D.near_dup_pairs(docs)
@@ -334,6 +336,9 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
     "simhash_near_dup_pairs",
     _SIMHASH_PAIRS_SQL,
     "SimHash near-dup pairing: 16-bit block buckets -> popcount verify (Hamming <= 3)",
+    # shared-scan materialization: the counted bucket frame, read by both
+    # self-join legs
+    eager=True,
 )
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -369,24 +374,18 @@ LIMIT 10
 """
 
 
-#: (app id, sf_dir) -> query vector.  The fixture query is vec_id=0's
-#: embedding; without memoization every ANN entry pays a corpus scan +
-#: .first() just to fetch it, which pollutes serve-path timings (a real
-#: serving layer receives the query vector, it doesn't scan for it).
-_QUERY_VEC_CACHE: dict[tuple[str, str], list[float]] = {}
-
-
+#: The fixture query is vec_id=0's embedding; without memoization every
+#: ANN entry pays a corpus scan + .first() just to fetch it, which
+#: pollutes serve-path timings (a real serving layer receives the query
+#: vector, it doesn't scan for it).
+@session_memo("query_vec")
 def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _QUERY_VEC_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        _QUERY_VEC_CACHE[key] = list(
-            emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
-        )
-    return _QUERY_VEC_CACHE[key]
+    emb = load_table(spark, sf_dir, "embeddings")
+    return list(emb.where(F.col("vec_id") == 0).select("embedding").first()[0])
 
 
-@register("knn_brute_force", _KNN_SQL, "exact cosine top-k vs query vec_id=0")
+# build/serve split: collects the 1-row query vector
+@register("knn_brute_force", _KNN_SQL, "exact cosine top-k vs query vec_id=0", eager=True)
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return S.knn_brute_force(emb, _query_vec(spark, sf_dir), k=10)
@@ -477,19 +476,7 @@ LIMIT 10"""
     return "\n".join(parts)
 
 
-#: Session cache for the IVF build/serve split: (sf_dir, k, iters) ->
-#: (index_path, centroid rows).  The build (seeded Lloyd k-means +
-#: cluster-partitioned write) runs ONCE per corpus per session; every
-#: search entry serves from the persisted layout via partition pruning.
-#: Round-4 verdict flagged the old `ivf_search` entry — per-query
-#: k-means is a scale-killer as a serving path (each query re-scanned
-#: the corpus twice at 100 TB).
-_IVF_INDEX_CACHE: dict[tuple, tuple[str, list]] = {}
-
-
-_COARSE_CACHE: dict = {}
-
-
+@session_memo("ivf_coarse")
 def coarse_centroids_for(
     spark: SparkSession, sf_dir: str, n_clusters: int = 8, kmeans_iters: int = 2
 ) -> list:
@@ -499,42 +486,40 @@ def coarse_centroids_for(
     seed/k/iters => bit-identical); otherwise trains and collects just
     the k x dim centroid list, no corpus repartition/persisted layout.
     """
-    import os
+    built = ivf_index_for.peek(spark, sf_dir, n_clusters, kmeans_iters)
+    if built is not None:
+        return built[1]
+    from datalakehouse_spark.operators.similarity import kmeans_clusters
 
-    key = (os.path.abspath(sf_dir), n_clusters, kmeans_iters)
-    if key in _IVF_INDEX_CACHE:
-        return _IVF_INDEX_CACHE[key][1]
-    if key not in _COARSE_CACHE:
-        from datalakehouse_spark.operators.similarity import kmeans_clusters
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        _, cents = kmeans_clusters(
-            emb, k=n_clusters, iters=kmeans_iters
-        )
-        _COARSE_CACHE[key] = cents
-    return _COARSE_CACHE[key]
+    emb = load_table(spark, sf_dir, "embeddings")
+    _, cents = kmeans_clusters(emb, k=n_clusters, iters=kmeans_iters)
+    return cents
 
 
+#: Session memo for the IVF build/serve split: (index_path, centroid
+#: rows).  The build (seeded Lloyd k-means + cluster-partitioned write)
+#: runs ONCE per corpus per session; every search entry serves from the
+#: persisted layout via partition pruning.  Round-4 verdict flagged the
+#: old `ivf_search` entry — per-query k-means is a scale-killer as a
+#: serving path (each query re-scanned the corpus twice at 100 TB).
+@session_memo("ivf_index")
 def ivf_index_for(
     spark: SparkSession, sf_dir: str, n_clusters: int = 8, kmeans_iters: int = 2
 ) -> tuple[str, list]:
+    import hashlib
     import os
 
     from datalakehouse_spark.operators.similarity import build_ivf_index
     from datalakehouse_spark.scratch import stable_scratch
 
     key = (os.path.abspath(sf_dir), n_clusters, kmeans_iters)
-    if key not in _IVF_INDEX_CACHE:
-        import hashlib
-
-        tag = "ivf_index_" + hashlib.md5(repr(key).encode()).hexdigest()[:8]
-        path = os.path.join(stable_scratch(tag), "index")
-        emb = load_table(spark, sf_dir, "embeddings")
-        cent_rows = build_ivf_index(
-            emb, path, n_clusters=n_clusters, kmeans_iters=kmeans_iters
-        )
-        _IVF_INDEX_CACHE[key] = (path, cent_rows)
-    return _IVF_INDEX_CACHE[key]
+    tag = "ivf_index_" + hashlib.md5(repr(key).encode()).hexdigest()[:8]
+    path = os.path.join(stable_scratch(tag), "index")
+    emb = load_table(spark, sf_dir, "embeddings")
+    cent_rows = build_ivf_index(
+        emb, path, n_clusters=n_clusters, kmeans_iters=kmeans_iters
+    )
+    return path, cent_rows
 
 
 _IVF_BUILD_STATS_SQL = (
@@ -551,6 +536,8 @@ FROM a2 GROUP BY cluster ORDER BY cluster
     "ivf_build_stats",
     _IVF_BUILD_STATS_SQL,
     "IVF index BUILD: seeded Lloyd k-means + cluster-partitioned write; occupancy per cluster",
+    eager=True,  # build/serve split
+    builds=("ivf_index", "ivf_coarse", "query_vec"),
 )
 def q_ivf_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The build half of the IVF split as its own scored entry — it
@@ -571,6 +558,7 @@ def q_ivf_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ivf_search",
     _ivf_kmeans_sql(),
     "IVF approximate NN serve: probe 2 nearest clusters of the prebuilt index (partition pruning)",
+    eager=True,  # build/serve split
 )
 def q_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve-only IVF (round-5 change): route the query driver-side
@@ -754,6 +742,7 @@ SELECT * FROM recompute WHERE report_date BETWEEN DATE '2024-01-10' AND DATE '20
     "merge_upsert_risk",
     _MERGE_SQL,
     "PK-upsert end-state: day>=10 replaced by a recompute, day<10 kept",
+    eager=True,  # materializing surface
 )
 def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the risk table, MERGE a recomputed overlap (different
@@ -813,6 +802,7 @@ HAVING (window_epoch_s + 3600) * 1000 <= (SELECT wm_ms FROM wm)
     "streaming_windowed_append",
     _STREAM_APPEND_SQL,
     "watermark + append-mode windowed agg (bounded state; finalized windows only)",
+    eager=True,  # materializing surface: drains a streaming query on the stream thread
 )
 def q_streaming_windowed_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid

@@ -60,7 +60,8 @@ WHERE o_totalprice > 1.8 * (SELECT avg_p FROM a)
 """
 
 
-@register("scalar_subquery_ratio", _SCALAR_SUB_SQL, "uncorrelated scalar subquery")
+# iterative / diagnostic
+@register("scalar_subquery_ratio", _SCALAR_SUB_SQL, "uncorrelated scalar subquery", eager=True)
 def q_scalar_sub(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     # AVG of doubles is order-dependent in the last ulps; compute it
@@ -236,6 +237,11 @@ FROM orders
 """
 
 
+# Not eager (left the class in round 10): the size-adaptive plan's
+# io.table_bytes probe runs zero Spark jobs and picks the lazy native
+# window below 256 MiB, which is what the fixture-scale integrity scan
+# observes; above it the entry runs the same eager bucketed ranker as
+# gini_coefficient.
 @register("ntile_percent_rank", _NTILE_SQL, "ntile + percent_rank analytics")
 def q_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global NTILE/PERCENT_RANK, plan chosen by INPUT SIZE (round 10):
@@ -472,6 +478,7 @@ LIMIT 5
     "ann_lsh_search",
     _ann_lsh_sql(),
     "ANN: random-hyperplane LSH bucket probe -> exact rank within bucket",
+    eager=True,  # build/serve split
 )
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalakehouse_spark.operators.similarity import (
@@ -500,6 +507,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ann_multiprobe_search",
     _ann_lsh_sql(multiprobe=True),
     "ANN LSH with Hamming-ball(1) multi-probe: 9 buckets, recall >= single-probe",
+    eager=True,  # build/serve split
 )
 def q_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe ANN: probe the query's hyperplane-LSH bucket plus
@@ -548,6 +556,7 @@ FROM events GROUP BY user_id
     "stateful_running_totals",
     _STATEFUL_SQL,
     "applyInPandasWithState per-key running totals (custom stateful op)",
+    eager=True,  # materializing surface: drains a streaming query on the stream thread
 )
 def q_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
@@ -1126,6 +1135,7 @@ GROUP BY 1, 2
     "time_travel_read",
     _TT_SQL,
     "versioned table: commit v1, upsert v2, read the v1 snapshot back",
+    eager=True,  # materializing surface
 )
 def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write a per-(user, day) aggregate as commit v1, MERGE a
@@ -1173,6 +1183,7 @@ GROUP BY 1, 2
     "version_incremental_read",
     _INCR_SQL,
     "versioned table: CDC-style incremental scan of files added between commits",
+    eager=True,  # materializing surface
 )
 def q_version_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Commit days <=15 as v1, append days 16-25 as v2, incrementally
@@ -1205,6 +1216,7 @@ GROUP BY user_id, event_type
     "streaming_dedup",
     _STREAM_DEDUP_SQL,
     "streaming dropDuplicates: first occurrence per key across micro-batches",
+    eager=True,  # materializing surface: drains a streaming query on the stream thread
 )
 def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exactly-once dedup surface: dropDuplicates on
@@ -1553,6 +1565,7 @@ GROUP BY event_type
     "jsonl_ingest_roundtrip",
     _JSONL_SQL,
     "JSON-lines source: serialize -> schema-on-read ingest == parquet-path result",
+    eager=True,  # materializing surface
 )
 def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's wire format is JSON (Kafka payloads,
@@ -1696,6 +1709,7 @@ FROM sess WHERE last_us + 1800000000 <= (SELECT wm_us FROM wm)
     "streaming_session_windows",
     _STREAM_SESSION_SQL,
     "streaming session_window + watermark: drained finalized sessions == batch islands",
+    eager=True,  # materializing surface: drains a streaming query on the stream thread
 )
 def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
@@ -1793,6 +1807,7 @@ LIMIT 10
     "quantized_knn",
     _QKNN_SQL,
     "top-k search over int8-quantized vectors (integer dots: exact cross-engine)",
+    eager=True,  # build/serve split
 )
 def q_quantized_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalakehouse_spark.operators.similarity import quantize_int8_df
@@ -1837,6 +1852,7 @@ JOIN (SELECT user_id, event_id, epoch_us(ts) AS t FROM events WHERE event_type =
     "streaming_stream_join",
     _STREAM_JOIN_SQL,
     "stream-stream inner join (watermarks + time-range bound) == batch range join",
+    eager=True,  # materializing surface: drains a streaming query on the stream thread
 )
 def q_streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid

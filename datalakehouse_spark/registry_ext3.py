@@ -59,6 +59,7 @@ FROM unioned GROUP BY event_type
     "schema_evolution_read",
     _SCHEMA_EVO_SQL,
     "add-column schema evolution: v1 files + evolved appends, mergeSchema read",
+    eager=True,  # materializing surface
 )
 def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iceberg-v2-style add-column evolution on the parquet backend
@@ -109,6 +110,7 @@ FROM events GROUP BY event_type
     "compaction_partition_sweep",
     _COMPACT_SQL,
     "partition-scoped small-file compaction preserves data exactly",
+    eager=True,  # materializing surface
 )
 def q_compaction_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's per-day compaction sweep (cleanup.sql:12-17)
@@ -240,6 +242,7 @@ SELECT doc_id, term, tf, df_docs, tfidf, rnk FROM rk WHERE rnk <= 3
     "tfidf_top_terms",
     _TFIDF_SQL,
     "top-3 characteristic terms per doc by (rational-idf) TF-IDF",
+    eager=True,  # iterative / diagnostic
 )
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -316,6 +319,7 @@ FROM reach GROUP BY id
     "dedup_clusters",
     _dedup_clusters_sql(),
     "near-dup dedup groups: LSH pairs -> connected components (min-label)",
+    eager=True,  # iterative / diagnostic
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -364,6 +368,7 @@ SELECT 5 AS k,
     "ann_recall_accounting",
     _ann_recall_sql(),
     "recall@5 of single- vs multi-probe LSH against the exact top-5",
+    eager=True,  # iterative / diagnostic
 )
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantifies the multi-probe recall win cross-engine: how many of
@@ -673,6 +678,7 @@ WHERE event_type = 'purchase'
     "streaming_static_enrich",
     _STREAM_ENRICH_SQL,
     "stream-static broadcast dimension join == batch join",
+    eager=True,  # materializing surface: drains a streaming query on the stream thread
 )
 def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static inner join: the static side is planned as a
@@ -741,6 +747,7 @@ def _fmt_agg(df: DataFrame) -> DataFrame:
     "csv_ingest_roundtrip",
     _FMT_ROUNDTRIP_SQL.format(sum_expr=dsum_duckdb("value"), rem=1),
     "CSV source: serialize -> declared-schema ingest == parquet-path result",
+    eager=True,  # materializing surface
 )
 def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV leg of the format matrix.  ``value`` doubles travel as
@@ -770,6 +777,7 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "orc_ingest_roundtrip",
     _FMT_ROUNDTRIP_SQL.format(sum_expr=dsum_duckdb("value"), rem=2),
     "ORC source/sink roundtrip == parquet-path result",
+    eager=True,  # materializing surface
 )
 def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC leg: columnar alternative with native Spark support (typed,
@@ -873,6 +881,8 @@ def _pagerank_sql() -> str:
     "graph_pagerank",
     _pagerank_sql(),
     "fixed-iteration PageRank over the near-dup graph (decimal-exact sums)",
+    eager=True,  # iterative / diagnostic
+    min_of_3=True,
 )
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalakehouse_spark.operators.graph import pagerank
@@ -1058,6 +1068,7 @@ from datalakehouse_spark.registry_ext import (  # noqa: E402
     "ivf_search_indexed",
     _ivf_kmeans_sql(n_probe=3),
     "IVF over a persisted cluster-partitioned index: probe 3 = partition pruning",
+    eager=True,  # build/serve split
 )
 def q_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve-many IVF over the session-built cluster-partitioned index
@@ -1170,6 +1181,7 @@ SELECT * FROM pre UNION ALL SELECT * FROM post
     "versioned_branch_evolution",
     _BRANCH_EVO_SQL,
     "schema evolution on a branch: evolve, FF-merge, read both snapshots",
+    eager=True,  # materializing surface
 )
 def q_versioned_branch_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nessie-style branch workflow (reference: catalog branching,

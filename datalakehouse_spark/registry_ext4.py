@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from datalakehouse_spark.functions.numeric import dsum, dsum_duckdb
 from datalakehouse_spark.io import load_table
-from datalakehouse_spark.registry import register
+from datalakehouse_spark.registry import register, session_memo
 
 # ---------------------------------------------------------------------------
 # q2: minimum-cost supplier per part (correlated MIN subquery)
@@ -464,6 +464,7 @@ ORDER BY c.cluster
     "dedup_canonical",
     _dedup_canonical_sql(),
     "near-dup clusters -> keep highest-quality doc per cluster",
+    eager=True,  # iterative / diagnostic
 )
 def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalakehouse_spark.operators.dedup import dedup_canonical
@@ -490,6 +491,7 @@ GROUP BY 1, 2
     "incremental_mv_maintenance",
     _IVM_SQL,
     "materialized rollup refreshed by delta partial-agg merge == full recompute",
+    eager=True,  # materializing surface
 )
 def q_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental view maintenance over a VersionedTable: commit the
@@ -622,6 +624,9 @@ GROUP BY source ORDER BY source
     "decontamination_report",
     _decontamination_sql(),
     "benchmark decontamination: train docs sharing an 8-gram with the eval split",
+    # shared-scan materialization: the doc flag frame, checkpointed so the
+    # gram cache is released before return
+    eager=True,
 )
 def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GPT-3/PaLM-style n-gram-overlap contamination check: the
@@ -667,6 +672,7 @@ def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming_incremental_mv",
     _IVM_SQL,
     "foreachBatch streaming refresh of a versioned rollup == full recompute",
+    eager=True,  # materializing surface
 )
 def q_streaming_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming form of incremental_mv_maintenance: events are
@@ -898,10 +904,8 @@ LIMIT 10
 """
 
 
-#: Session cache: (sf_dir, m, codes, iters) -> (codes_path, books, sub)
-_PQ_INDEX_CACHE: dict = {}
-
-
+#: Session-memoized PQ index: (codes_path, books, sub)
+@session_memo("pq_index")
 def _pq_index_for(spark: SparkSession, sf_dir: str):
     import hashlib
     import os
@@ -910,15 +914,11 @@ def _pq_index_for(spark: SparkSession, sf_dir: str):
     from datalakehouse_spark.scratch import stable_scratch
 
     key = (os.path.abspath(sf_dir), _PQ_M, _PQ_CODES, _PQ_ITERS)
-    if key not in _PQ_INDEX_CACHE:
-        tag = "pq_index_" + hashlib.md5(repr(key).encode()).hexdigest()[:8]
-        path = os.path.join(stable_scratch(tag), "codes")
-        emb = load_table(spark, sf_dir, "embeddings")
-        books, sub = build_pq_index(
-            emb, path, m=_PQ_M, codes=_PQ_CODES, iters=_PQ_ITERS
-        )
-        _PQ_INDEX_CACHE[key] = (path, books, sub)
-    return _PQ_INDEX_CACHE[key]
+    tag = "pq_index_" + hashlib.md5(repr(key).encode()).hexdigest()[:8]
+    path = os.path.join(stable_scratch(tag), "codes")
+    emb = load_table(spark, sf_dir, "embeddings")
+    books, sub = build_pq_index(emb, path, m=_PQ_M, codes=_PQ_CODES, iters=_PQ_ITERS)
+    return path, books, sub
 
 
 def _pq_build_stats_sql() -> str:
@@ -938,6 +938,8 @@ def _pq_build_stats_sql() -> str:
     "pq_build_stats",
     _pq_build_stats_sql(),
     "PQ codebook BUILD: per-subspace seeded k-means + encoded-corpus write; code occupancy",
+    eager=True,  # build/serve split
+    builds=("pq_index", "ivfpq_index"),
 )
 def q_pq_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build half of the PQ split as its own scored entry (mirrors
@@ -963,6 +965,7 @@ def q_pq_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pq_search",
     _pq_search_sql(),
     "product quantization: subspace codebooks + ADC top-k over encoded corpus",
+    eager=True,  # build/serve split
 )
 def q_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ's PQ half, build/serve split: codebooks + encoded corpus
@@ -1040,9 +1043,8 @@ LIMIT 10"""
     return "\n".join(parts)
 
 
-_IVFPQ_INDEX_CACHE: dict = {}
-
-
+#: Session-memoized IVF-PQ index: (path, coarse, books, sub)
+@session_memo("ivfpq_index")
 def _ivfpq_index_for(spark: SparkSession, sf_dir: str):
     import hashlib
     import os
@@ -1050,29 +1052,28 @@ def _ivfpq_index_for(spark: SparkSession, sf_dir: str):
     from datalakehouse_spark.scratch import stable_scratch
 
     key = (os.path.abspath(sf_dir), 8, _PQ_M, _PQ_CODES, _PQ_ITERS)
-    if key not in _IVFPQ_INDEX_CACHE:
-        tag = "ivfpq_index_" + hashlib.md5(repr(key).encode()).hexdigest()[:8]
-        path = os.path.join(stable_scratch(tag), "index")
-        # compose from the session's existing builds (deterministic, so
-        # identical to retraining): PQ codes + IVF cluster assignment
-        # join once and persist partitioned — no second k-means
-        from datalakehouse_spark.registry_ext import ivf_index_for
+    tag = "ivfpq_index_" + hashlib.md5(repr(key).encode()).hexdigest()[:8]
+    path = os.path.join(stable_scratch(tag), "index")
+    # compose from the session's existing builds (deterministic, so
+    # identical to retraining): PQ codes + IVF cluster assignment
+    # join once and persist partitioned — no second k-means
+    from datalakehouse_spark.registry_ext import ivf_index_for
 
-        ivf_path, coarse = ivf_index_for(spark, sf_dir)
-        codes_path, books, sub = _pq_index_for(spark, sf_dir)
-        assign = spark.read.parquet(ivf_path).select("vec_id", "cluster")
-        codes = spark.read.parquet(codes_path)
-        codes.join(assign, "vec_id").repartition("cluster").write.mode(
-            "overwrite"
-        ).partitionBy("cluster").parquet(path)
-        _IVFPQ_INDEX_CACHE[key] = (path, coarse, books, sub)
-    return _IVFPQ_INDEX_CACHE[key]
+    ivf_path, coarse = ivf_index_for(spark, sf_dir)
+    codes_path, books, sub = _pq_index_for(spark, sf_dir)
+    assign = spark.read.parquet(ivf_path).select("vec_id", "cluster")
+    codes = spark.read.parquet(codes_path)
+    codes.join(assign, "vec_id").repartition("cluster").write.mode(
+        "overwrite"
+    ).partitionBy("cluster").parquet(path)
+    return path, coarse, books, sub
 
 
 @register(
     "ivf_pq_search",
     _ivfpq_search_sql(),
     "IVF-PQ serve: partition-pruned probe + ADC over m-byte codes",
+    eager=True,  # build/serve split
 )
 def q_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed ANN capstone: the coarse quantizer prunes the scan
@@ -1152,6 +1153,7 @@ SELECT 10 AS k,
     "pq_recall_accounting",
     _pq_recall_sql(),
     "PQ quality ledger: ADC top-10 overlap with exact L2 top-10",
+    eager=True,  # iterative / diagnostic
 )
 def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The measurement that makes PQ an engineering trade instead of a

@@ -3030,6 +3030,7 @@ FROM events
     "streaming_metered_ingest",
     _METERED_SQL,
     "streaming ingest with write-job observe metrics; ledger totals == batch truth",
+    eager=True,  # materializing surface: drains a streaming query on the stream thread
 )
 def q_streaming_metered_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Observability as a correctness surface: drain the file-source
@@ -3251,6 +3252,9 @@ FROM per_decile d CROSS JOIN tot t
     "ltv_deciles_pareto",
     _LTV_SQL,
     "user-LTV deciles with revenue share + cumulative concentration (Pareto curve)",
+    # iterative / diagnostic: range-bucket split sample + per-bucket count
+    # embedded as literals (operators/ranking.py)
+    eager=True,
 )
 def q_ltv_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue-concentration reporting: rank users by purchase LTV,
@@ -3449,6 +3453,7 @@ def _lsh_recall_sql_filled() -> str:
     "lsh_recall_accounting",
     _lsh_recall_sql_filled(),
     "MinHash-LSH recall vs exhaustive Jaccard truth on a prefix-hash sample block",
+    eager=True,  # iterative / diagnostic
 )
 def q_lsh_recall_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup tier's recall, measured instead of assumed: on a
@@ -3535,6 +3540,9 @@ WHERE best_prev IS NULL OR n_orders > best_prev
     "skyline_2d",
     _SKYLINE_SQL,
     "2D skyline (Pareto frontier): customers non-dominated in (acctbal, order count)",
+    # iterative / diagnostic: range-bucket split sample + per-bucket count
+    # embedded as literals (operators/ranking.py)
+    eager=True,
 )
 def q_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The skyline operator in its 2D sweep form: sort one dimension
@@ -3711,6 +3719,7 @@ FROM tri
     "triangle_count",
     _triangle_sql(),
     "oriented triangle count over the near-dup graph (cluster-cohesion signal)",
+    eager=True,  # iterative / diagnostic
 )
 def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph analytics beyond PageRank/CC: triangles measure how
@@ -3882,6 +3891,7 @@ CROSS JOIN n_baskets t
     "association_rules",
     _ASSOC_SQL,
     "session-basket association rules: support / confidence / lift per type pair",
+    eager=True,  # iterative / diagnostic
 )
 def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket analysis with sessions as baskets: distinct
@@ -4148,6 +4158,7 @@ FROM deg GROUP BY degree
     "dup_graph_degrees",
     _dup_degree_sql(),
     "degree distribution of the near-dup graph (boilerplate hub detector)",
+    eager=True,  # iterative / diagnostic
 )
 def q_dup_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup graph's shape in one histogram: a heavy-degree tail
@@ -4203,6 +4214,9 @@ FROM s
     "gini_coefficient",
     _GINI_SQL,
     "Gini coefficient of per-user purchase revenue (exact rank formulation)",
+    # iterative / diagnostic: range-bucket split sample + per-bucket count
+    # embedded as literals (operators/ranking.py)
+    eager=True,
 )
 def q_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inequality in one number (the Pareto deciles' scalar summary):
@@ -4358,6 +4372,8 @@ def _inertia_sweep_sql() -> str:
     "kmeans_inertia_sweep",
     _inertia_sweep_sql(),
     f"k-means elbow sweep: within-cluster SS at k={_INERTIA_KS} (seeded builds replayed)",
+    eager=True,  # build/serve split
+    min_of_3=True,
 )
 def q_kmeans_inertia_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """How many coarse clusters should the IVF index use?  The elbow
@@ -4491,6 +4507,7 @@ SELECT CAST((SELECT SUM(n) FROM exact_groups) AS BIGINT) AS n_docs,
     "corpus_health_report",
     _corpus_health_sql(),
     "one-row corpus dashboard: dup rate, langid accuracy, size stats",
+    eager=True,  # iterative / diagnostic
 )
 def q_corpus_health_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The top-of-dashboard scalar row a corpus pipeline publishes per
@@ -4739,6 +4756,9 @@ FROM ranked
     "repeat_purchase_intervals",
     _REPEAT_SQL,
     "inter-purchase gap statistics (per-user order-statistic medians)",
+    # iterative / diagnostic: range-bucket split sample + per-bucket count
+    # embedded as literals (operators/ranking.py)
+    eager=True,
 )
 def q_repeat_purchase_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Purchase-cadence metric: per-user median gap between consecutive
@@ -4956,6 +4976,7 @@ GROUP BY s.cluster ORDER BY s.cluster
     "semantic_dedup",
     _semantic_dedup_sql(),
     "SemDeDup: k-means cluster-scoped cosine dedup, keep-lowest-id rule",
+    eager=True,  # build/serve split: the k-means build collects k x dim centroids
 )
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic near-duplicates are found

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from datalakehouse_spark.functions.numeric import dsum, dsum_duckdb
 from datalakehouse_spark.io import load_table
-from datalakehouse_spark.registry import register
+from datalakehouse_spark.registry import register, session_memo
 from datalakehouse_spark.registry_ext import _TOKS
 
 # ---------------------------------------------------------------------------
@@ -82,6 +82,9 @@ FROM marked GROUP BY source ORDER BY source
     "dup_span_coverage",
     _DUP_SPAN_SQL,
     "cross-doc duplicated 16-token spans per source (ExactSubstr accounting)",
+    # shared-scan materialization: the span-digest explode, read by the
+    # duplicated-digest aggregate AND its join-back
+    eager=True,
 )
 def q_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 16-token span digests per document; a span duplicated in
@@ -585,6 +588,7 @@ GROUP BY source ORDER BY source
     "near_dup_decontamination",
     _near_dup_decon_sql(),
     "near-dup contamination: train docs MinHash-similar to the eval split",
+    eager=True,  # shared-scan materialization: the near_dup_pairs shingle frame
 )
 def q_near_dup_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The near-duplicate tier of benchmark decontamination: exact
@@ -725,6 +729,9 @@ ORDER BY source
     "dup_span_excision_stats",
     _EXCISION_SQL,
     "ExactSubstr excision accounting: tokens under cross-doc duplicated spans",
+    # shared-scan materialization: the span-digest explode, read by the
+    # duplicated-digest aggregate AND its join-back
+    eager=True,
 )
 def q_dup_span_excision_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The excision pass ``dup_span_coverage`` is the go/no-go signal
@@ -991,6 +998,7 @@ LIMIT {_RRF_OUT}
     "hybrid_rrf_fusion",
     _rrf_sql(),
     "hybrid retrieval: reciprocal-rank fusion of BM25 + cosine top-k",
+    eager=True,  # build/serve split: its vector list collects the 1-row query vector
 )
 def q_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval: fuse the lexical (``bm25_topk``'s scoring
@@ -1668,6 +1676,9 @@ ORDER BY o_orderpriority
     "bucketed_colocated_join",
     _BCJ_SQL,
     "orderkey fact-fact join over same-bucketed tables: no join-side Exchange",
+    # materializing surface: bucketed-table writes (memoized in the session
+    # catalog)
+    eager=True,
 )
 def q_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB shuffle-elimination play the scale mandate names
@@ -1686,7 +1697,7 @@ def q_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     must be a pure layout change (row-identical revenue per priority).
 
     Build note: the bucketed materialization runs Spark jobs at build
-    time (EAGER_BUILD_ENTRIES); within a session it is memoized via the
+    time (registered eager); within a session it is memoized via the
     catalog, so the timed metric is the exchange-free read path."""
     from datalakehouse_spark.operators.colocate import (
         bucket_tag,
@@ -2166,6 +2177,9 @@ FROM (SELECT * FROM events ORDER BY event_id LIMIT 400)
     "filebus_kafka_ingest",
     _FILEBUS_SQL,
     "S1 live: readStream.format('filebus') Kafka-shaped source, offsets+checkpoint",
+    # materializing surface: produces a bounded 400-row feed, then drains the
+    # filebus stream into a memory sink
+    eager=True,
 )
 def q_filebus_kafka_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL streaming-source API path for S1 (create.sql:72-121),
@@ -2313,6 +2327,9 @@ ORDER BY source
     "dup_span_excision_apply",
     _EXCISION_APPLY_SQL,
     "ExactSubstr excision APPLIED: cleaned corpus, per-source digest of kept text",
+    # shared-scan materialization: the span-digest explode, read by the
+    # duplicated-digest aggregate AND its join-back
+    eager=True,
 )
 def q_dup_span_excision_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``dup_span_excision_stats`` reports what ExactSubstr dedup (Lee
@@ -2446,6 +2463,7 @@ FROM per_order GROUP BY n_items ORDER BY n_items
     "bucketed_colocated_agg",
     _BCA_SQL,
     "per-orderkey aggregate over the bucketed table: no Exchange below the agg",
+    eager=True,  # materializing surface: shares the bucketed lineitem write
 )
 def q_bucketed_colocated_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round 13: the bucketed layout the join entry pays for also
@@ -2463,7 +2481,7 @@ def q_bucketed_colocated_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure layout change (value-identical per-order revenue).
 
     Build note: shares the session-memoized bucketed table with
-    ``bucketed_colocated_join`` (EAGER_BUILD_ENTRIES)."""
+    ``bucketed_colocated_join`` (registered eager)."""
     from datalakehouse_spark.operators.colocate import (
         bucket_tag,
         ensure_bucketed_table,
@@ -3529,46 +3547,44 @@ FROM tr WHERE k >= 1 ORDER BY rank
 """
 
 
-#: session memo: one training run per sf_dir (the ivf_build_stats
+#: session memo: one training run per corpus (the ivf_build_stats
 #: build/serve-split pattern) — bpe_tokenize_stats reuses the merges
 #: bpe_vocab_train learned instead of re-running 16 Spark iterations
-_BPE_CACHE: dict[str, list] = {}
-
-
+@session_memo("bpe_merges")
 def _bpe_trained(spark: SparkSession, sf_dir: str):
-    if sf_dir not in _BPE_CACHE:
-        from datalakehouse_spark.operators.bpe import (
-            bpe_train_auto,
-            word_frequencies,
-        )
+    from datalakehouse_spark.operators.bpe import (
+        bpe_train_auto,
+        word_frequencies,
+    )
 
-        docs = load_table(spark, sf_dir, "documents")
-        sample = (
-            docs.orderBy("doc_id")
-            .limit(_BPE_TRAIN_DOCS)
-            .where(F.col("text").rlike("^[ -~]*$"))
-        )
-        wf = (
-            word_frequencies(sample)
-            .orderBy(F.desc("f"), F.asc("w"))
-            .limit(_BPE_WORDS)
-        )
-        # size-adaptive: the bounded fixture table (<=120 words) takes
-        # the single-task executor path — one job instead of O(merges)
-        # scheduling round trips; corpus-scale word tables take the
-        # distributed iteration loop (see bpe.bpe_train_auto and the
-        # ntile_percent_rank precedent)
-        _, merges = bpe_train_auto(
-            spark, wf, n_merges=_BPE_MERGES, min_freq=_BPE_MIN_FREQ
-        )
-        _BPE_CACHE[sf_dir] = merges
-    return _BPE_CACHE[sf_dir]
+    docs = load_table(spark, sf_dir, "documents")
+    sample = (
+        docs.orderBy("doc_id")
+        .limit(_BPE_TRAIN_DOCS)
+        .where(F.col("text").rlike("^[ -~]*$"))
+    )
+    wf = (
+        word_frequencies(sample)
+        .orderBy(F.desc("f"), F.asc("w"))
+        .limit(_BPE_WORDS)
+    )
+    # size-adaptive: the bounded fixture table (<=120 words) takes
+    # the single-task executor path — one job instead of O(merges)
+    # scheduling round trips; corpus-scale word tables take the
+    # distributed iteration loop (see bpe.bpe_train_auto and the
+    # ntile_percent_rank precedent)
+    _, merges = bpe_train_auto(
+        spark, wf, n_merges=_BPE_MERGES, min_freq=_BPE_MIN_FREQ
+    )
+    return merges
 
 
 @register(
     "bpe_vocab_train",
     _BPE_TRAIN_SQL,
     "BPE vocabulary trainer: iterative pair-count/merge loop == recursive-CTE replay",
+    eager=True,  # build/serve split: the trainer runs at build (size-adaptive)
+    builds=("bpe_merges",),
 )
 def q_bpe_vocab_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round 14: the distributed BPE vocabulary-merge trainer
@@ -3651,6 +3667,7 @@ ORDER BY doc_id
     "bpe_tokenize_stats",
     _BPE_APPLY_SQL,
     "BPE tokenizer application: learned merges over unseen docs == CTE replay",
+    eager=True,  # build/serve split: trains (memoized) in a cold session
 )
 def q_bpe_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round 14: the consumer side of the BPE trainer — apply the
@@ -3735,6 +3752,7 @@ ORDER BY doc_id
     "bpe_vocab_apply_versioned",
     _BPE_APPLY_VERSIONED_SQL,
     "BPE vocab pinned as a versioned artifact: tokenize with v1 while v2 exists",
+    eager=True,  # materializing surface: commits vocab v1 + v2, collects the pinned v1
 )
 def q_bpe_vocab_apply_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round 15 (VERDICT r14 #8): the production persistence contract
@@ -3815,10 +3833,11 @@ from datalakehouse_spark.registry_ext5 import _INCR_DEDUP_SQL  # noqa: E402
 
 @register(
     "streaming_incremental_dedup",
-    # the batch entry's oracle VERBATIM: the final per-source totals
-    # must be independent of HOW the new-batch slice was micro-batched
     _INCR_DEDUP_SQL,
     "streaming continuous-crawl dedup: per-micro-batch index merge == one-shot batch",
+    # materializing surface: restages the crawl slice, drains a foreachBatch
+    # stream committing the digest index + stats
+    eager=True,
 )
 def q_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming form of ``incremental_dedup_ingest``: the crawl
@@ -3976,6 +3995,7 @@ FROM tr WHERE k >= 1 ORDER BY rank
     "wordpiece_vocab_train",
     _WP_TRAIN_SQL,
     "WordPiece trainer: likelihood-scored merge loop == recursive-CTE replay",
+    eager=True,  # build/serve split: retrains at build, unmemoized (every run is cold)
 )
 def q_wordpiece_vocab_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round 15: the likelihood-scored subword trainer
@@ -4077,6 +4097,7 @@ ORDER BY tw.doc_id
     "wordpiece_tokenize_stats",
     _WP_APPLY_SQL,
     "WordPiece inference: greedy longest-match over the learned pieces == CTE replay",
+    eager=True,  # build/serve split: retrains at build, unmemoized
 )
 def q_wordpiece_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round 15: the WordPiece RUNTIME — greedy leftmost longest-match
@@ -4093,7 +4114,8 @@ def q_wordpiece_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     The entry retrains its own vocabulary at build (ONE narrow Spark
     action — the fused probe) instead of memoizing across entries:
     that keeps every bench timing a cold build and avoids the
-    BUILD_ONCE/cold-reset machinery the memoized BPE pair needs.
+    build-once/cold-reset machinery (``QuerySpec.builds``) the
+    memoized BPE pair needs.
 
     Scale shape: tokenization is a pure map stage (mapInPandas, piece
     set in the closure); training cost is the bounded word-table
@@ -4186,37 +4208,32 @@ FROM cls GROUP BY source ORDER BY source
 """
 
 
-#: Session cache for the near-dup build/serve split (round 16, VERDICT
-#: r15 #3 — the _IVF_INDEX_CACHE precedent): abs(sf_dir) ->
-#: (hist_index_path, staged_src_path).  The historical LSH index build
-#: + ascending restage run ONCE per corpus per session (the build
-#: entry's metric); the drain entry serves from the staged artifacts
-#: into a fresh root per call.
-_ND_STAGE_CACHE: dict[str, tuple[str, str]] = {}
-
-
+#: Session memo for the near-dup build/serve split (round 16, VERDICT
+#: r15 #3 — the ivf_index precedent): (hist_index_path,
+#: staged_src_path).  The historical LSH index build + ascending
+#: restage run ONCE per corpus per session (the build entry's metric);
+#: the drain entry serves from the staged artifacts into a fresh root
+#: per call.
+@session_memo("near_dup_stage")
 def _near_dup_staged(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    import hashlib
     import os
 
+    from datalakehouse_spark.operators.dedup import near_dup_index_stage
+    from datalakehouse_spark.scratch import fresh_scratch
+
+    # fresh (not stable): a cold-reset rebuild must not append a
+    # second copy of the restaged slice files
     key = os.path.abspath(sf_dir)
-    if key not in _ND_STAGE_CACHE:
-        import hashlib
-
-        from datalakehouse_spark.operators.dedup import near_dup_index_stage
-        from datalakehouse_spark.scratch import fresh_scratch
-
-        # fresh (not stable): a cold-reset rebuild must not append a
-        # second copy of the restaged slice files
-        tag = "nd_stage_" + hashlib.md5(key.encode()).hexdigest()[:8]
-        docs = load_table(spark, sf_dir, "documents")
-        _ND_STAGE_CACHE[key] = near_dup_index_stage(
-            spark,
-            docs,
-            fresh_scratch(tag),
-            batch_pred=F.col("doc_id") % 4 == 3,
-            n_slices=4,
-        )
-    return _ND_STAGE_CACHE[key]
+    tag = "nd_stage_" + hashlib.md5(key.encode()).hexdigest()[:8]
+    docs = load_table(spark, sf_dir, "documents")
+    return near_dup_index_stage(
+        spark,
+        docs,
+        fresh_scratch(tag),
+        batch_pred=F.col("doc_id") % 4 == 3,
+        n_slices=4,
+    )
 
 
 _ND_BUILD_SQL = _near_dup_bands_ctes() + """
@@ -4231,6 +4248,10 @@ GROUP BY band ORDER BY band
     "streaming_near_dup_build",
     _ND_BUILD_SQL,
     "near-dup ingest BUILD: historical LSH bucket index + restage; occupancy per band",
+    # build/serve split: the near-dup BUILD half (historical LSH index +
+    # restage)
+    eager=True,
+    builds=("near_dup_stage",),
 )
 def q_streaming_near_dup_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round 16 (VERDICT r15 #3): the BUILD half of the near-dup
@@ -4254,6 +4275,9 @@ def q_streaming_near_dup_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming_near_dup_ingest",
     _streaming_near_dup_sql(),
     "streaming near-dup crawl ingest: LSH bucket index across micro-batches == one-shot",
+    # materializing surface: drains the near-dup stream, one versioned LSH-
+    # index commit per trigger
+    eager=True,
 )
 def q_streaming_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round 15: the NEAR-dup streaming crawl loop — the MinHash-LSH
@@ -4361,6 +4385,8 @@ ORDER BY tw.doc_id
     "wordpiece_vocab_apply_versioned",
     _WP_APPLY_VERSIONED_SQL,
     "WordPiece vocab pinned as a versioned artifact: tokenize with v1 while v2 exists",
+    # materializing surface: trains, commits v1 + v2, collects the pinned v1
+    eager=True,
 )
 def q_wordpiece_vocab_apply_versioned(
     spark: SparkSession, sf_dir: str
@@ -4584,6 +4610,7 @@ ORDER BY rank
     "unigram_vocab_train",
     _UNI_TRAIN_SQL,
     "Unigram-LM trainer: substring-seeded hard-EM == recursive-CTE replay",
+    eager=True,  # build/serve split: retrains at build, unmemoized (every run is cold)
 )
 def q_unigram_vocab_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round 16 (VERDICT r15 #2): the Unigram-LM subword trainer
@@ -4705,6 +4732,7 @@ ORDER BY tw.doc_id
     "unigram_tokenize_stats",
     _uni_apply_sql(_BPE_APPLY_DOCS),
     "Unigram-LM inference: exact-argmax segmentation under trained probs == CTE replay",
+    eager=True,  # build/serve split: retrains at build, unmemoized
 )
 def q_unigram_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round 16: the Unigram-LM RUNTIME — segment each word by the
@@ -4771,6 +4799,8 @@ def q_unigram_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     _uni_apply_sql(_BPE_VERSIONED_DOCS, doc_offset=_BPE_APPLY_DOCS,
                    versioned=True),
     "Unigram vocab pinned as a versioned artifact: tokenize with v1 while v2 exists",
+    # materializing surface: trains, commits v1 + v2, collects the pinned v1
+    eager=True,
 )
 def q_unigram_vocab_apply_versioned(
     spark: SparkSession, sf_dir: str

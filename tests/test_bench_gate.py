@@ -231,20 +231,31 @@ def test_top_ratio_contributors_orders_and_floors():
 
 
 def test_build_once_cold_reset_covers_every_entry():
-    """Every BUILD_ONCE entry needs a cold-reset recipe (else its
-    quiet-JVM re-time would measure a cache hit), and unknown names
-    must fail loudly rather than silently re-time warm."""
-    from datalakehouse_spark.registry import _load_extensions
+    """A cold reset of every build-once entry (non-empty
+    ``QuerySpec.builds``) empties exactly the memos that entry builds
+    and leaves every other memo alone (else its quiet-JVM re-time would
+    measure a memo hit, or wipe a sibling's build); unknown entries and
+    unknown memo names fail loudly rather than silently re-time warm."""
+    import pytest
 
-    _load_extensions()
-    import datalakehouse_spark.registry_ext6 as e6
     from bench import cold_reset
+    from datalakehouse_spark.registry import MEMOS, REGISTRY, clear_memos
 
-    e6._BPE_CACHE["sentinel"] = []
-    for name in ("ivf_build_stats", "pq_build_stats", "bpe_vocab_train"):
-        cold_reset(name)
-    assert e6._BPE_CACHE == {}
-    import pytest as _pytest
+    build_once = {n: s.builds for n, s in REGISTRY.items() if s.builds}
+    assert build_once, "no build-once entries registered"
+    for name, builds in build_once.items():
+        assert set(builds) <= set(MEMOS), f"{name} builds unknown memos"
+        for memo in MEMOS.values():
+            memo["sentinel"] = name
+        try:
+            cold_reset(name)
+            emptied = {m for m, memo in MEMOS.items() if "sentinel" not in memo}
+            assert emptied == set(builds), name
+        finally:
+            for memo in MEMOS.values():
+                memo.pop("sentinel", None)
 
-    with _pytest.raises(ValueError, match="cold-reset"):
+    with pytest.raises(ValueError, match="cold-reset"):
         cold_reset("not_a_build_once_entry")
+    with pytest.raises(KeyError, match="unknown session memos"):
+        clear_memos(["not_a_memo"])

@@ -65,16 +65,32 @@ def test_oracle_sql_parses_in_duckdb(name):
     con.close()
 
 
+def _last_job_id(sc) -> int:
+    """Highest job id the status store has seen, whatever thread or job
+    group ran it (listener bus drained first so the count is settled)."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)  # newest first
+    return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+
 def test_eager_build_class_is_exact(spark):
-    """The lazy-build contract, pinned BOTH ways with a job-group scan:
-    no entry outside registry.EAGER_BUILD_ENTRIES may run a Spark job at
-    build time (an eager collect/count/write sneaking into a query entry
-    is a driver-side scale bug), and every listed entry must actually be
-    eager (else the listing is stale).  Tables are pre-warmed first so
-    load_table's one-off schema-sniff job isn't attributed to the first
-    entry touching each table."""
+    """The lazy-build contract, pinned BOTH ways: no entry without
+    ``QuerySpec.eager`` may run a Spark job at build time (an eager
+    collect/count/write sneaking into a query entry is a driver-side
+    scale bug), and every eager entry must actually run one (else the
+    flag is stale).  Jobs are counted by job id, not by the caller's
+    job group: a streaming query runs its jobs on the stream thread
+    under its own job group (the query's runId), which a group scan
+    cannot see.  Tables are pre-warmed first so load_table's one-off
+    schema-sniff job isn't attributed to the first entry touching each
+    table, and every memo is cleared before EVERY entry: the pinned
+    contract is cold-session build behavior — with a single up-front
+    clear, whichever memoized entry runs first warms the memo for its
+    siblings (e.g. semantic_dedup sharing the IVF coarse build) and the
+    sweep would misread them as lazy."""
     from datalakehouse_spark.io import load_table
-    from datalakehouse_spark.registry import EAGER_BUILD_ENTRIES
+    from datalakehouse_spark.registry import clear_memos
 
     sf = "/root/testdata/sf0.001"
     for t in (
@@ -82,48 +98,23 @@ def test_eager_build_class_is_exact(spark):
         "events documents embeddings"
     ).split():
         load_table(spark, sf, t)
-    # clear the process-level ANN build memos before EVERY entry: the
-    # pinned contract is cold-session build behavior — with a single
-    # up-front clear, whichever memoized entry runs first warms the
-    # cache for its siblings (e.g. semantic_dedup sharing the IVF
-    # coarse build) and the sweep would misread them as lazy
-    import datalakehouse_spark.registry_ext as _e1
-    import datalakehouse_spark.registry_ext4 as _e4
-    import datalakehouse_spark.registry_ext6 as _e6
-
-    def _clear_memos():
-        _e1._QUERY_VEC_CACHE.clear()
-        _e1._IVF_INDEX_CACHE.clear()
-        _e1._COARSE_CACHE.clear()
-        _e4._PQ_INDEX_CACHE.clear()
-        _e4._IVFPQ_INDEX_CACHE.clear()
-        _e6._BPE_CACHE.clear()
-        _e6._ND_STAGE_CACHE.clear()
-        # the bucketed-join entry memoizes through the session catalog
-        # (tableExists) — drop its tables so the build is cold here too
-        for t in spark.catalog.listTables():
-            if t.name.startswith("bkt_"):
-                spark.sql(f"DROP TABLE IF EXISTS {t.name}")
 
     sc = spark.sparkContext
     observed = set()
     for name, spec in REGISTRY.items():
-        _clear_memos()
-        group = f"eagercheck-{name}"
-        sc.setJobGroup(group, name)
-        try:
-            spec.fn(spark, sf)
-            if sc.statusTracker().getJobIdsForGroup(group):
-                observed.add(name)
-        finally:
-            sc.setJobGroup("", "")
-    assert observed - EAGER_BUILD_ENTRIES == set(), (
-        "entries running Spark jobs at build time without being in the "
-        f"documented eager class: {sorted(observed - EAGER_BUILD_ENTRIES)}"
+        clear_memos()
+        before = _last_job_id(sc)
+        spec.fn(spark, sf)
+        if _last_job_id(sc) > before:
+            observed.add(name)
+    eager = {n for n, s in REGISTRY.items() if s.eager}
+    assert observed - eager == set(), (
+        "entries running Spark jobs at build time without QuerySpec.eager: "
+        f"{sorted(observed - eager)}"
     )
-    assert EAGER_BUILD_ENTRIES - observed == set(), (
-        "stale eager-class listings (no longer run build-time jobs): "
-        f"{sorted(EAGER_BUILD_ENTRIES - observed)}"
+    assert eager - observed == set(), (
+        "stale eager flags (no longer run build-time jobs): "
+        f"{sorted(eager - observed)}"
     )
 
 

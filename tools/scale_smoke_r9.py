@@ -46,7 +46,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 from datalakehouse_spark.io import load_table  # noqa: E402
-from datalakehouse_spark.registry import REGISTRY, _load_extensions  # noqa: E402
+from datalakehouse_spark.registry import REGISTRY, _load_extensions, clear_memos  # noqa: E402
 from datalakehouse_spark.session import get_spark  # noqa: E402
 
 _load_extensions()
@@ -159,21 +159,6 @@ def _synth_customer(spark, mult: int, out: str) -> None:
     open(os.path.join(out, "_CUST_v2"), "w").close()
 
 
-def _clear_memos() -> None:
-    """Session-scoped index/centroid caches keyed by sf_dir — clear
-    between ladder steps (same idiom as test_registry_integrity)."""
-    import datalakehouse_spark.registry_ext as _e1
-    import datalakehouse_spark.registry_ext4 as _e4
-
-    for cache in (
-        getattr(_e1, "_COARSE_CACHE", None),
-        getattr(_e4, "_PQ_INDEX_CACHE", None),
-        getattr(_e4, "_IVFPQ_INDEX_CACHE", None),
-    ):
-        if cache is not None:
-            cache.clear()
-
-
 def fingerprint(df) -> frozenset:
     """Set of physical node types (ids/exprs stripped)."""
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -186,7 +171,7 @@ def fingerprint(df) -> frozenset:
 
 
 def run_entry(spark, name: str, sf_dir: str) -> tuple[float, frozenset]:
-    _clear_memos()
+    clear_memos()  # every step times a cold build
     t0 = time.perf_counter()
     df = REGISTRY[name].fn(spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()

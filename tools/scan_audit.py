@@ -36,11 +36,7 @@ def main() -> None:
     ap.add_argument("--names", nargs="*", default=None)
     args = ap.parse_args()
 
-    from datalakehouse_spark.registry import (
-        EAGER_BUILD_ENTRIES,
-        REGISTRY,
-        _load_extensions,
-    )
+    from datalakehouse_spark.registry import REGISTRY, _load_extensions
     from datalakehouse_spark.session import get_spark
 
     _load_extensions()
@@ -50,7 +46,7 @@ def main() -> None:
     rows = []
     names = args.names or list(REGISTRY)
     for name in names:
-        if name in EAGER_BUILD_ENTRIES and not args.eager:
+        if REGISTRY[name].eager and not args.eager:
             continue
         try:
             df = REGISTRY[name].fn(spark, SF)

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Round-16 optimization iteration harness: time a SUBSET of registry
-entries with the same methodology bench.py uses (warmup at sf0.001,
-noop sink, median-of-3 / build-once single-shot), without paying the
-full 247-entry fleet.  Optionally dump ``explain("formatted")`` for
+entries with bench.py's own warm-up and timer (warmup at sf0.001,
+noop sink), reporting the median over --runs — build-once entries
+(``QuerySpec.builds``) are cold-reset before every run — without
+paying the full 247-entry fleet.  Optionally dump ``explain("formatted")`` for
 each timed entry to plans/r16/<name>_<tag>.txt.
 
 Usage:
@@ -16,42 +17,14 @@ import argparse
 import json
 import os
 import sys
-import time
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-from datalakehouse_spark.registry import REGISTRY, _load_extensions  # noqa: E402
+from bench import cold_reset, time_entry, warm_up  # noqa: E402
+from datalakehouse_spark.registry import REGISTRY  # noqa: E402
 from datalakehouse_spark.session import get_spark  # noqa: E402
-
-_load_extensions()
-
-WARMUP_DIR = "/root/testdata/sf0.001"
-BUILD_ONCE = {
-    "ivf_build_stats",
-    "pq_build_stats",
-    "bpe_vocab_train",
-    "streaming_near_dup_build",
-}
-
-
-def _run(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def cold_reset_all() -> None:
-    import datalakehouse_spark.registry_ext as e1
-    import datalakehouse_spark.registry_ext4 as e4
-    import datalakehouse_spark.registry_ext6 as e6
-
-    e6._BPE_CACHE.clear()
-    e6._ND_STAGE_CACHE.clear()
-    e1._IVF_INDEX_CACHE.clear()
-    e1._COARSE_CACHE.clear()
-    e1._QUERY_VEC_CACHE.clear()
-    e4._PQ_INDEX_CACHE.clear()
-    e4._IVFPQ_INDEX_CACHE.clear()
 
 
 def main() -> None:
@@ -78,11 +51,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     if not args.no_warmup:
-        for name in names:
-            try:
-                _run(REGISTRY[name].fn(spark, WARMUP_DIR))
-            except Exception as exc:  # surface, don't hide
-                print(f"WARMUP FAIL {name}: {exc}", file=sys.stderr)
+        warm_up(spark, names)
 
     if args.plans:
         os.makedirs(os.path.join(REPO_ROOT, "plans", args.plans_dir), exist_ok=True)
@@ -90,23 +59,13 @@ def main() -> None:
     results: dict[str, float] = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"time_entries: {name}")
-        if name in BUILD_ONCE:
-            runs = []
-            for _ in range(max(1, args.runs if name != "bpe_vocab_train" else args.runs)):
-                cold_reset_all()
-                t0 = time.perf_counter()
-                _run(REGISTRY[name].fn(spark, args.sf_dir))
-                runs.append(time.perf_counter() - t0)
-            runs.sort()
-            results[name] = runs[len(runs) // 2]
-        else:
-            runs = []
-            for _ in range(args.runs):
-                t0 = time.perf_counter()
-                _run(REGISTRY[name].fn(spark, args.sf_dir))
-                runs.append(time.perf_counter() - t0)
-            runs.sort()
-            results[name] = runs[len(runs) // 2]
+        runs = []
+        for _ in range(args.runs):
+            if REGISTRY[name].builds:
+                cold_reset(name)
+            runs.append(time_entry(spark, name, args.sf_dir))
+        runs.sort()
+        results[name] = runs[len(runs) // 2]
         print(f"{results[name]:8.3f}s  {name}   (runs: {', '.join(f'{r:.3f}' for r in runs)})", flush=True)
         if args.plans:
             try:
