@@ -10,12 +10,14 @@ engine provides one table abstraction with two backends:
   ``MERGE INTO``, `delete_where` real ``DELETE FROM``, `compact` the
   ``rewrite_data_files`` / ``OPTIMIZE`` procedure — the exact SURVEY.md
   §2.10 mappings.
-- **parquet backend** (this environment): the same logical operations
-  implemented with DataFrame ops over a partitioned parquet directory,
-  using partition-scoped dynamic overwrite so an upsert/delete rewrites
-  only the partitions it touches — the property that makes the
-  operation feasible at 100 TB (a day's upsert rewrites a day, not the
-  table).
+- **parquet backend** (this environment): a
+  :class:`~datalakehouse_spark.versioned.VersionedTable` at ``path``.
+  Every write is an atomic manifest commit over immutable files, as an
+  Iceberg snapshot commit is: readers holding an older version keep
+  reading it, and a write that fails before its commit leaves the
+  previous version in place.  Upserts and deletes rewrite only the
+  partitions they touch (a day's upsert rewrites a day, not the table);
+  compaction is a ``replace`` commit and `vacuum` is snapshot expiry.
 
 Semantics contract (tested in tests/test_tables.py):
 - append: blind insert (S4)
@@ -34,6 +36,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datalakehouse_spark.versioned import VersionedTable
+
 
 class ManagedTable:
     """A partitioned parquet-backed table with lakehouse-style DML."""
@@ -49,35 +53,23 @@ class ManagedTable:
         zorder_by: tuple[str, str] | None = None,
         compression: str = "zstd",
     ) -> None:
-        """``cluster_by``: write-time sort order within each file — the
-        reference's ``'write.order-by' = 'device_id, gps_epoch'``
-        (create.sql:56; O4/X6). Sorted files give min/max row-group
-        skipping on those columns at read time.
-
-        ``zorder_by``: Morton-interleave two int columns as the
-        write-time sort key instead (Iceberg/Delta Z-ORDER analog):
-        range predicates on EITHER column prune files, not just the
-        leading one.  Mutually exclusive with ``cluster_by``; the
-        caller buckets values into [0, 2^16) (functions/zorder.py).
-
-        ``bloom_filter_cols``: parquet bloom filters for point lookups
-        on high-cardinality columns — the reference enables them on
-        device_id / gps_epoch / correlation_id with a 256 KiB cap
-        (create.sql:60-63; X4).
-
-        ``compression``: parquet codec; defaults to zstd, matching the
-        reference's table properties (create.sql:53-56,160 — ZSTD for
-        fact and raw tables; ddl.py emits the same for the catalog
-        backend)."""
-        if zorder_by is not None and cluster_by:
-            raise ValueError("zorder_by and cluster_by are mutually exclusive")
+        """``cluster_by`` / ``zorder_by`` / ``bloom_filter_cols`` are the
+        parquet backend's write options (see :class:`VersionedTable`).
+        ``compression`` defaults to zstd, matching the reference's table
+        properties (create.sql:53-56,160 — ZSTD for fact and raw tables;
+        ddl.py emits the same for the catalog backend)."""
         self.spark = spark
         self.path = path
         self.partition_by = list(partition_by)
-        self.cluster_by = list(cluster_by)
-        self.zorder_by = tuple(zorder_by) if zorder_by is not None else None
-        self.bloom_filter_cols = list(bloom_filter_cols)
-        self.compression = compression
+        self._vt = VersionedTable(
+            spark,
+            path,
+            partition_by,
+            cluster_by=cluster_by,
+            zorder_by=zorder_by,
+            bloom_filter_cols=bloom_filter_cols,
+            compression=compression,
+        )
         # catalog backend auto-detection: when `catalog_table` names a
         # table in a configured Iceberg/Delta catalog, DML routes
         # through single-statement transactional SQL (catalog_dml.py);
@@ -98,108 +90,43 @@ class ManagedTable:
 
     @property
     def exists(self) -> bool:
-        return os.path.exists(os.path.join(self.path, "_SUCCESS")) or (
-            os.path.isdir(self.path) and any(os.scandir(self.path))
-        )
+        return self._vt.current_version() > 0
 
     def read(self, merge_schema: bool = False) -> DataFrame:
-        """``merge_schema=True`` reconciles files written under evolved
-        schemas (add-column evolution, the Iceberg v2 capability the
-        reference advertises, README.md:13): old files surface NULL for
-        columns added later.  Off by default — schema merging footer-
-        reads every file, so it's an explicit opt-in like Spark's own
-        ``mergeSchema``."""
-        r = self.spark.read
-        if merge_schema:
-            r = r.option("mergeSchema", "true")
-        return r.parquet(self.path)
+        """The head version.  ``merge_schema=True`` reconciles files
+        written under evolved schemas (add-column evolution, the Iceberg
+        v2 capability the reference advertises, README.md:13): old files
+        surface NULL for columns added later.  Off by default — schema
+        merging footer-reads every file, so it's an explicit opt-in like
+        Spark's own ``mergeSchema``."""
+        return self._vt.read(merge_schema=merge_schema)
 
     # -- write --------------------------------------------------------------
 
-    def _writer(self, df: DataFrame, mode: str):
-        if self.partition_by:
-            # co-locate each hive partition's rows in one task BEFORE the
-            # partitioned write: otherwise every task writes a sliver of
-            # every partition it holds — task_count × n_partitions small
-            # files (under the driver's 200 shuffle partitions, thousands
-            # of KB-sized files per write).  One file per partition value
-            # is the small-files discipline; a skewed giant partition
-            # would add a salt column here for write parallelism.
-            df = df.repartition(*self.partition_by)
-        if self.cluster_by:
-            # prefix with the partition columns: FileFormatWriter inserts
-            # its own (non-stable) sort on partition columns when the
-            # incoming order doesn't start with them, which would destroy
-            # the cluster_by order inside each written file.
-            df = df.sortWithinPartitions(*self.partition_by, *self.cluster_by)
-        elif self.zorder_by is not None:
-            from pyspark.sql import functions as F
-
-            from datalakehouse_spark.functions.zorder import morton32
-
-            a, b = self.zorder_by
-            zk = "_zorder_key"
-            df = (
-                df.withColumn(zk, morton32(a, b))
-                .sortWithinPartitions(*self.partition_by, zk)
-                .drop(zk)  # projection preserves per-partition order
-            )
-        w = df.write.mode(mode).option("compression", self.compression)
-        # partition-scoped overwrite: INSERT OVERWRITE replaces only the
-        # partitions present in the written data.  Set per-write so the
-        # shared session's overwrite semantics are never mutated.
-        if mode == "overwrite":
-            w = w.option("partitionOverwriteMode", "dynamic")
-        for col in self.bloom_filter_cols:
-            w = w.option(f"parquet.bloom.filter.enabled#{col}", "true").option(
-                f"parquet.bloom.filter.max.bytes#{col}", str(262144)
-            )
-        if self.partition_by:
-            w = w.partitionBy(*self.partition_by)
-        return w
-
     def create(self, df: DataFrame) -> "ManagedTable":
-        self._writer(df, "overwrite").parquet(self.path)
+        """Full replacement: a new version holding only ``df``'s rows."""
+        self._vt.create(df)
         return self
 
     def append(self, df: DataFrame) -> None:
         """Blind append (the streaming/backfill sink, S4/S5)."""
-        self._writer(df, "append").parquet(self.path)
+        self._vt.append(df)
 
     def merge_upsert(self, source: DataFrame, keys: Sequence[str]) -> None:
-        """MERGE: matched -> replace, not-matched -> insert.
-
-        Parquet backend: restrict the rewrite to partitions the source
-        touches (semi-join partition pruning), anti-join those against
-        the source keys, union, dynamic-partition overwrite. Shuffle is
-        on the merge keys only; untouched partitions are never read or
-        written. With a catalog this is one ``MERGE INTO`` statement.
-        """
+        """MERGE: matched -> replace, not-matched -> insert.  Parquet
+        backend: a copy-on-write commit that rewrites only the
+        partitions the source touches.  With a catalog this is one
+        ``MERGE INTO`` statement."""
         if self._catalog is not None:
             self._catalog.merge_upsert(source, keys)
             return
-        if not self.exists:
-            self.create(source)
-            return
-        target = self.read()
-        if self.partition_by:
-            touched = source.select(*self.partition_by).distinct()
-            scoped = target.join(F.broadcast(touched), self.partition_by, "left_semi")
-        else:
-            scoped = target
-        kept = scoped.join(source.select(*keys).distinct(), list(keys), "left_anti")
-        merged = kept.unionByName(source.select(*kept.columns))
-        self._writer(merged, "overwrite").parquet(self.path)
+        self._vt.merge_upsert(source, keys)
 
     def delete_where(self, predicate) -> None:
-        """Retention DELETE (M1): rewrite only partitions containing
-        matching rows, keeping the non-matching remainder.
-
-        SQL DELETE semantics: only rows where the predicate is TRUE are
-        deleted — rows where it evaluates NULL are KEPT (Spark's
-        ``where(~pred)`` would silently drop them, so the remainder
-        keeps rows where ``NOT coalesce(pred, false)``).
-        """
+        """Retention DELETE (M1) with SQL semantics: only rows where the
+        predicate is TRUE are deleted — rows where it evaluates NULL are
+        KEPT.  Parquet backend: a copy-on-write commit that rewrites only
+        the partitions holding matching rows."""
         if self._catalog is not None:
             if not isinstance(predicate, str):
                 # Falling through to the parquet path would delete from
@@ -212,75 +139,26 @@ class ManagedTable:
                 )
             self._catalog.delete_where(predicate)
             return
-        if not self.exists:
-            return
-        target = self.read()
-        pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        pred_true = F.coalesce(pred, F.lit(False))
-        if self.partition_by:
-            touched = target.where(pred_true).select(*self.partition_by).distinct()
-            scoped = target.join(F.broadcast(touched), self.partition_by, "left_semi")
-            remainder = scoped.where(~pred_true)
-            # Collect the partition bookkeeping BEFORE the overwrite: both
-            # DataFrames hold the pre-write file listing, and any job run
-            # on them after dynamic overwrite has replaced those files
-            # fails with FILE_NOT_EXIST.  Both collects are
-            # small-by-construction (distinct partition tuples only).
-            touched_rows = [tuple(r) for r in touched.collect()]
-            surviving = {
-                tuple(r)
-                for r in remainder.select(*self.partition_by).distinct().collect()
-            }
-            self._writer(remainder, "overwrite").parquet(self.path)
-            # dynamic overwrite replaces only touched partitions; if a
-            # partition empties entirely, drop its directory explicitly
-            for vals in touched_rows:
-                if vals in surviving:
-                    continue
-                sub = "/".join(
-                    f"{k}={v}" for k, v in zip(self.partition_by, vals)
-                )
-                p = os.path.join(self.path, sub)
-                if os.path.exists(p):
-                    shutil.rmtree(p)
-        else:
-            remainder = target.where(~pred_true)
-            tmp = self.path + ".tmp_delete"
-            remainder.write.mode("overwrite").parquet(tmp)
-            shutil.rmtree(self.path)
-            os.rename(tmp, self.path)
+        self._vt.delete_where(predicate)
+
+    # -- maintenance --------------------------------------------------------
 
     def partition_file_stats(self) -> list[dict]:
-        """Per-partition file count and byte size from a directory walk
-        — the parquet analog of the manifest-level file stats Iceberg's
-        ``rewrite_data_files`` plans from. Partition values are decoded
-        from their hive-escaped directory form (NULL ->
-        ``__HIVE_DEFAULT_PARTITION__`` handled)."""
-        from datalakehouse_spark.versioned import _decode_hive_value
-
-        stats: list[dict] = []
-        for root, _dirs, files in os.walk(self.path):
-            pq = [f for f in files if f.endswith(".parquet")]
-            if not pq:
-                continue
-            rel = os.path.relpath(root, self.path)
-            partition: dict[str, str | None] = {}
-            if rel != ".":
-                for piece in rel.split(os.sep):
-                    if "=" in piece:
-                        k, v = piece.split("=", 1)
-                        partition[k] = _decode_hive_value(v)
-            stats.append(
-                {
-                    "dir": root,
-                    "partition": partition,
-                    "file_count": len(pq),
-                    "bytes": sum(
-                        os.path.getsize(os.path.join(root, f)) for f in pq
-                    ),
-                }
+        """Per-partition file count, byte size and file paths of the head
+        version, from its manifest — the file stats Iceberg's
+        ``rewrite_data_files`` plans from.  Partition values are the
+        decoded strings the manifest records (None for NULL)."""
+        stats: dict[tuple, dict] = {}
+        for e in self._vt.head_files():
+            s = stats.setdefault(
+                tuple(e["partition"].get(k) for k in self.partition_by),
+                {"partition": e["partition"], "file_count": 0, "bytes": 0, "files": []},
             )
-        return stats
+            f = os.path.join(self._vt.data_dir, e["path"])
+            s["file_count"] += 1
+            s["bytes"] += os.path.getsize(f)
+            s["files"].append(f)
+        return list(stats.values())
 
     def compact(
         self,
@@ -289,111 +167,67 @@ class ManagedTable:
         where: dict[str, Sequence] | None = None,
     ) -> dict:
         """Small-file compaction (M2), partition-scoped like the
-        reference's per-day sweep (cleanup.sql:12-17 and the whole of
-        cleanup_migration.sql iterate ``WHERE received_day = d``):
+        reference's per-day sweep (cleanup.sql:12-17):
 
         - **catalog backend**: one ``rewrite_data_files`` / ``OPTIMIZE``
           with a size threshold (256 MiB fact / 128 MiB raw per
           create.sql:54,160).
-        - **partitioned parquet backend**: only partitions whose file
-          count reaches ``min_files`` (and that match ``where``,
-          a {col: allowed-values} filter, when given) are read and
-          rewritten, via the same dynamic partition overwrite the DML
-          paths use; every other partition's files are left
-          byte-for-byte untouched — at 100 TB a few small-file days
-          cost a few days, never a table scan. Partitioned tables
-          compact to ONE file per partition value (the ``_writer``
-          small-files discipline); ``target_partitions`` applies to
-          unpartitioned tables only.
-        - **unpartitioned parquet backend**: full rewrite down to
-          ``target_partitions`` files.
+        - **parquet backend**: :meth:`VersionedTable.compact` — one
+          ``replace`` commit over just the partitions holding at least
+          ``min_files`` files (and matching ``where``); every other
+          partition's files are left untouched.
 
-        Compaction routes through ``_writer`` so it preserves the
-        cluster_by sort order and parquet bloom-filter options — the
-        reference's ``rewrite_data_files`` keeps ``'write.order-by'``
-        and bloom settings. Returns a report of what was rewritten.
-        """
+        Returns a report of what was rewritten."""
         if self._catalog is not None:
             self._catalog.compact(target_file_size_bytes=256 * 1024 * 1024)
             return {"backend": "catalog", "compacted": None, "skipped": 0}
-        if not self.partition_by:
-            df = self.read().coalesce(target_partitions)
-            tmp = self.path + ".tmp_compact"
-            self._writer(df, "overwrite").parquet(tmp)
-            shutil.rmtree(self.path)
-            os.rename(tmp, self.path)
-            return {"backend": "parquet", "compacted": [{}], "skipped": 0}
-        allowed = None
-        if where:
-            allowed = {
-                k: {None if x is None else str(x) for x in vs}
-                for k, vs in where.items()
-            }
-        todo, skipped = [], 0
-        for s in self.partition_file_stats():
-            in_scope = allowed is None or all(
-                s["partition"].get(k) in vs for k, vs in allowed.items()
-            )
-            if in_scope and s["file_count"] >= min_files:
-                todo.append(s)
-            else:
-                skipped += 1
-        if todo:
-            # one job over just the breaching partitions; dynamic
-            # overwrite commits replace only those partition dirs
-            df = self.spark.read.option("basePath", self.path).parquet(
-                *[s["dir"] for s in todo]
-            )
-            self._writer(df, "overwrite").parquet(self.path)
-        return {
-            "backend": "parquet",
-            "compacted": [s["partition"] for s in todo],
-            "skipped": skipped,
-        }
+        report = self._vt.compact(target_partitions, min_files, where)
+        return {"backend": "parquet", **report}
 
     def vacuum(self) -> list[str]:
-        """M3/M4 analog for the parquet backend: remove orphaned
-        temp/staging directories left by interrupted rewrites. With an
+        """M3/M4: expire every version but the head, delete the files
+        only expired versions referenced, and remove the stage dirs of
+        writes that never committed; returns those dirs.  With an
         Iceberg/Delta catalog this call maps to ``remove_orphan_files``
         + ``expire_snapshots`` / ``VACUUM`` (cleanup.sql:19-31)."""
         if self._catalog is not None:
             self._catalog.vacuum()
             return []
-        removed = []
-        parent = os.path.dirname(self.path.rstrip("/"))
-        base = os.path.basename(self.path.rstrip("/"))
-        for entry in os.scandir(parent):
-            if entry.is_dir() and entry.name.startswith(base + ".tmp_"):
-                shutil.rmtree(entry.path)
-                removed.append(entry.path)
-        return removed
+        return self._vt.expire_versions(keep_last=1)["stages"]
 
     def file_count(self) -> int:
-        n = 0
-        for root, _dirs, files in os.walk(self.path):
-            n += sum(1 for f in files if f.endswith(".parquet"))
-        return n
+        return len(self._vt.head_files())
 
     def analyze(self, register_as: str | None = None) -> dict:
         """M5: feed the planner statistics.
 
         - catalog backend: one ``ANALYZE TABLE`` — the catalog persists
           rowCount/sizeInBytes for the CBO.
-        - parquet backend: with ``register_as``, the path is registered
-          as a session-catalog parquet table and ANALYZEd, so joins
-          planned THROUGH that table name get CBO row counts in this
-          session (verified in tests via DESC EXTENDED statistics);
-          the dict of partition-level counts is returned either way.
+        - parquet backend: with ``register_as``, the head version is
+          registered as a session-catalog parquet table and ANALYZEd,
+          so joins planned THROUGH that table name get CBO row counts in
+          this session (verified in tests via DESC EXTENDED
+          statistics).  The table's location holds hard links to the
+          head's files only, so it reads — and counts — exactly the
+          version current at this call.  The dict of partition-level
+          counts is returned either way.
         """
         if self._catalog is not None:
             self._catalog.analyze()
             # stats live in the catalog; nothing to recount locally
             return {"table": self.catalog_table, "analyzed": True}
         if register_as is not None:
+            snap = os.path.join(self._vt.path, "_registered", register_as)
+            shutil.rmtree(snap, ignore_errors=True)
+            for e in self._vt.head_files():
+                dest = os.path.join(snap, e["path"])
+                os.makedirs(os.path.dirname(dest), exist_ok=True)
+                os.link(os.path.join(self._vt.data_dir, e["path"]), dest)
             self.spark.sql(
                 f"CREATE TABLE IF NOT EXISTS {register_as} "
-                f"USING parquet LOCATION '{self.path}'"
+                f"USING parquet LOCATION '{snap}'"
             )
+            self.spark.sql(f"REFRESH TABLE {register_as}")
             self.spark.sql(f"ANALYZE TABLE {register_as} COMPUTE STATISTICS")
         df = self.read()
         stats = {"rows": df.count()}

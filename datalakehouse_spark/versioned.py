@@ -29,9 +29,12 @@ table state per version:
   per-key conflict detection for recorded upserts, loud
   ``MergeConflictError`` otherwise) — the Nessie "experiment on a
   branch, promote when good" workflow.
-- ``incremental_read(from_v, to_v)`` scans only files ADDED between two
-  versions (Iceberg incremental append scan): the CDC-style feed a
-  downstream consumer uses to process just the delta.
+- ``incremental_read(from_v, to_v)`` scans only the files the append
+  commits between two versions added (Iceberg incremental append scan):
+  the CDC-style feed a downstream consumer uses to process just the
+  delta.
+- ``compact()`` rewrites small files as a ``replace`` commit
+  (``rewrite_data_files``), which changes no rows.
 
 Scale posture: the manifest records partition values PER FILE, so
 partition pruning happens driver-side on the file list before Spark
@@ -110,12 +113,41 @@ class VersionedTable:
         spark: SparkSession,
         path: str,
         partition_by: Sequence[str] = (),
+        cluster_by: Sequence[str] = (),
+        zorder_by: tuple[str, str] | None = None,
+        bloom_filter_cols: Sequence[str] = (),
+        compression: str | None = None,
     ) -> None:
+        """Write options, applied to every data file a commit writes
+        (compaction included, as Iceberg's ``rewrite_data_files`` keeps
+        ``write.order-by`` and bloom settings):
+
+        - ``cluster_by``: sort order within each file — the reference's
+          ``'write.order-by' = 'device_id, gps_epoch'`` (create.sql:56;
+          O4/X6), giving min/max row-group skipping on those columns.
+        - ``zorder_by``: Morton-interleave two int columns as the sort
+          key instead (Z-ORDER analog), so range predicates on EITHER
+          column prune files; the caller buckets values into [0, 2^16)
+          (functions/zorder.py).  Mutually exclusive with ``cluster_by``.
+        - ``bloom_filter_cols``: parquet bloom filters (256 KiB cap) for
+          point lookups (create.sql:60-63; X4).
+        - ``compression``: parquet codec; None keeps the session codec.
+        """
+        if zorder_by is not None and cluster_by:
+            raise ValueError("zorder_by and cluster_by are mutually exclusive")
         self.spark = spark
         self.path = path.rstrip("/")
         self.partition_by = list(partition_by)
+        self.cluster_by = list(cluster_by)
+        self.zorder_by = tuple(zorder_by) if zorder_by is not None else None
+        self.bloom_filter_cols = list(bloom_filter_cols)
+        self.compression = compression
         self.data_dir = os.path.join(self.path, "data")
         self.log_dir = os.path.join(self.path, "_log")
+        #: stage dirs of writes not yet committed; removed by the commit
+        #: that consumes them, so an orphan ``_stage-*`` dir marks a write
+        #: that never committed (swept by ``expire_versions``)
+        self._stages: list[str] = []
 
     # -- commit log ---------------------------------------------------------
 
@@ -210,6 +242,9 @@ class VersionedTable:
         refs = self.refs()
         refs[branch] = version
         self._write_refs(refs)
+        for stage in self._stages:
+            shutil.rmtree(stage, ignore_errors=True)
+        self._stages.clear()
         return version
 
     def _ancestry(self, version: int) -> list[int]:
@@ -516,12 +551,13 @@ class VersionedTable:
     # -- write path ---------------------------------------------------------
 
     def _readback_schema_json(self, df: DataFrame) -> str:
-        """The schema a hive read-back of ``df``'s files reports: data
-        columns in ``df`` order with partition columns moved to the
-        end (partition discovery appends them last, in ``partition_by``
-        order), and every level nullable (the parquet reader's
-        convention — recording the writer's nullability would tighten
-        the read schema and could change downstream plans)."""
+        """The data-column schema a read-back of ``df``'s files reports,
+        every level nullable (the parquet reader's convention —
+        recording the writer's nullability would tighten the read schema
+        and could change downstream plans).  Partition columns are left
+        out: partition discovery appends them after the data columns
+        with their INFERRED dtypes, so a version reads them with the
+        same dtype whether or not its manifest recorded a schema."""
         from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
         def _null(dt):
@@ -539,19 +575,20 @@ class VersionedTable:
             return dt
 
         data = [f for f in df.schema.fields if f.name not in self.partition_by]
-        tail = [df.schema[c] for c in self.partition_by]
         return StructType(
-            [StructField(f.name, _null(f.dataType), True) for f in data + tail]
+            [StructField(f.name, _null(f.dataType), True) for f in data]
         ).json()
 
     def _write_new_files(self, df: DataFrame) -> list[dict]:
-        """Write df's rows as NEW immutable data files; return their
-        manifest entries.  Files are staged then moved under data/ with
-        commit-unique names (Spark part-file names already embed a job
-        uuid; the stage prefix adds belt-and-braces uniqueness).
-        Side effect: stashes the write's read-back schema on
-        ``self._last_write_schema`` for commit-time recording."""
+        """Write df's rows as NEW immutable data files with the table's
+        write options; return their manifest entries.  Files are staged
+        then moved under data/ with commit-unique names (Spark part-file
+        names already embed a job uuid; the stage prefix adds
+        belt-and-braces uniqueness).  Side effect: stashes the write's
+        read-back schema on ``self._last_write_schema`` for commit-time
+        recording."""
         stage = os.path.join(self.path, f"_stage-{uuid.uuid4().hex[:8]}")
+        self._stages.append(stage)
         if self.partition_by:
             # a rewrite scoped to the NULL partition reads back its
             # partition column as VOID (all directory values are the
@@ -564,12 +601,34 @@ class VersionedTable:
                 if isinstance(df.schema[c].dataType, NullType):
                     df = df.withColumn(c, F.col(c).cast("string"))
         self._last_write_schema = self._readback_schema_json(df)
-        w = df.write.mode("overwrite")
         if self.partition_by:
-            # one data file per partition value per commit (small-files
-            # discipline + compact manifests); see tables._writer
+            # co-locate each partition value's rows in one task: one data
+            # file per partition value per commit (small-files discipline
+            # + compact manifests) instead of task_count x n_partitions
             df = df.repartition(*self.partition_by)
-            w = df.write.mode("overwrite").partitionBy(*self.partition_by)
+        # sort keys start with the partition columns: FileFormatWriter
+        # inserts its own (non-stable) sort on them otherwise, which
+        # would destroy the cluster order inside each file
+        if self.cluster_by:
+            df = df.sortWithinPartitions(*self.partition_by, *self.cluster_by)
+        elif self.zorder_by is not None:
+            from datalakehouse_spark.functions.zorder import morton32
+
+            zk = "_zorder_key"
+            df = (
+                df.withColumn(zk, morton32(*self.zorder_by))
+                .sortWithinPartitions(*self.partition_by, zk)
+                .drop(zk)  # projection preserves per-partition order
+            )
+        w = df.write.mode("overwrite")
+        if self.compression is not None:
+            w = w.option("compression", self.compression)
+        for col in self.bloom_filter_cols:
+            w = w.option(f"parquet.bloom.filter.enabled#{col}", "true").option(
+                f"parquet.bloom.filter.max.bytes#{col}", str(262144)
+            )
+        if self.partition_by:
+            w = w.partitionBy(*self.partition_by)
         w.parquet(stage)
 
         entries: list[dict] = []
@@ -594,7 +653,6 @@ class VersionedTable:
                 os.rename(os.path.join(root, f), os.path.join(dest_dir, f))
                 rel_path = os.path.join(rel_dir, f) if rel_dir != "." else f
                 entries.append({"path": rel_path, "partition": partition})
-        shutil.rmtree(stage)
         return entries
 
     def create(self, df: DataFrame, branch: str = DEFAULT_BRANCH) -> int:
@@ -741,13 +799,14 @@ class VersionedTable:
         cur = self.current_version(branch)
         if cur == 0:
             return 0
-        prev = self._load_manifest(cur)["files"]
+        prev_manifest = self._load_manifest(cur)
+        prev, prev_schema = prev_manifest["files"], prev_manifest.get("schema")
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         pred_true = F.coalesce(pred, F.lit(False))
         if self.partition_by:
             touched_vals = {
                 tuple(_canon_value(r[k]) for k in self.partition_by)
-                for r in self._read_files(prev)
+                for r in self._read_files(prev, schema_json=prev_schema)
                 .where(pred_true)
                 .select(*self.partition_by)
                 .distinct()
@@ -767,10 +826,11 @@ class VersionedTable:
         new_files: list[dict] = []
         new_schema = None
         if touched_files:
-            remainder = self._read_files(touched_files).where(~pred_true)
+            remainder = self._read_files(
+                touched_files, schema_json=prev_schema
+            ).where(~pred_true)
             new_files = self._write_new_files(remainder)
             new_schema = self._last_write_schema
-        prev_schema = self._load_manifest(cur).get("schema")
         uniform = (
             new_schema
             if new_files and (not kept_files or prev_schema == new_schema)
@@ -847,25 +907,112 @@ class VersionedTable:
             entries, merge_schema=merge_schema, schema_json=manifest.get("schema")
         )
 
+    def head_files(self, branch: str = DEFAULT_BRANCH) -> list[dict]:
+        """Manifest entries ({path, partition}) of ``branch``'s head;
+        paths are relative to ``data_dir``.  Empty before the first
+        commit."""
+        cur = self.current_version(branch)
+        return self._load_manifest(cur)["files"] if cur else []
+
     def incremental_read(self, from_version: int, to_version: int) -> DataFrame:
-        """Rows in files ADDED between two versions (Iceberg incremental
-        append scan): the CDC-style delta feed.  File-level, driver-side
-        set difference on the manifests — no data comparison; correct
-        whenever the interval contains only append/create commits (an
-        upsert's rewritten files surface as their partition's full new
-        contents, which is also what Iceberg's changelog emits for COW)."""
-        before = {e["path"] for e in self._load_manifest(from_version)["files"]}
-        to_manifest = self._load_manifest(to_version)
-        added = [e for e in to_manifest["files"] if e["path"] not in before]
-        return self._read_files(added, schema_json=to_manifest.get("schema"))
+        """Rows APPENDED in (from_version, to_version] (Iceberg
+        incremental append scan): the CDC-style delta feed, read from
+        the files each append/create commit on ``to_version``'s
+        ancestry added — driver-side manifest diffs, no data
+        comparison.  Other commits add no appended rows: a ``replace``
+        (compaction) is no logical change, and upserts/deletes are
+        outside an append scan, as in Iceberg."""
+        chain = self._ancestry(to_version)
+        if from_version not in chain:
+            raise ValueError(
+                f"version {from_version} is not an ancestor of {to_version}"
+            )
+        added: list[dict] = []
+        schemas = set()
+        for v in reversed(chain[: chain.index(from_version)]):
+            m = self._load_manifest(v)
+            if m["operation"] not in ("append", "create"):
+                continue
+            parent = (
+                {e["path"] for e in self._load_manifest(m["parent"])["files"]}
+                if m["parent"]
+                else set()
+            )
+            added += [e for e in m["files"] if e["path"] not in parent]
+            schemas.add(m.get("schema"))
+        schema = schemas.pop() if len(schemas) == 1 else None
+        return self._read_files(added, schema_json=schema)
 
     # -- maintenance --------------------------------------------------------
+
+    def compact(
+        self,
+        target_partitions: int = 1,
+        min_files: int = 2,
+        where: dict[str, Sequence] | None = None,
+        branch: str = DEFAULT_BRANCH,
+    ) -> dict:
+        """Small-file compaction (M2) as one ``replace`` commit, scoped
+        per partition like the reference's per-day sweep
+        (cleanup.sql:12-17, cleanup_migration.sql): only partitions with
+        at least ``min_files`` files at the head (and, with ``where``
+        ({col: allowed values}), only those partitions) are read and
+        rewritten; every other file carries over into the new manifest
+        untouched.  A partitioned table compacts to one file per
+        partition value; an unpartitioned one to ``target_partitions``
+        files.  The rewrite goes through ``_write_new_files``, so it
+        keeps the table's sort order and bloom filters.  Older versions
+        keep their files until ``expire_versions``.  Returns the
+        partition values rewritten and the count skipped."""
+        cur = self.current_version(branch)
+        if cur == 0:
+            return {"compacted": [], "skipped": 0}
+        manifest = self._load_manifest(cur)
+        groups: dict[tuple, list[dict]] = {}
+        for e in manifest["files"]:
+            groups.setdefault(self._partition_of(e), []).append(e)
+        allowed = {
+            k: {_canon_value(x) for x in vs} for k, vs in (where or {}).items()
+        }
+        todo = [
+            part
+            for part, es in groups.items()
+            if len(es) >= min_files
+            and all(es[0]["partition"].get(k) in vs for k, vs in allowed.items())
+        ]
+        if todo:
+            schema = manifest.get("schema")
+            # a version without a recorded schema mixes evolved files:
+            # merge their schemas so the rewrite drops no column
+            df = self._read_files(
+                [e for part in todo for e in groups[part]],
+                merge_schema=schema is None,
+                schema_json=schema,
+            )
+            if not self.partition_by:
+                df = df.coalesce(target_partitions)
+            new_files = self._write_new_files(df)
+            kept = [e for part, es in groups.items() if part not in todo for e in es]
+            self._commit(
+                "replace",
+                kept + new_files,
+                cur,
+                branch,
+                schema_json=schema if schema == self._last_write_schema else None,
+            )
+        return {
+            "compacted": [groups[part][0]["partition"] for part in todo],
+            "skipped": len(groups) - len(todo),
+        }
 
     def expire_versions(self, keep_last: int = 1) -> dict:
         """Snapshot GC: keep the newest ``keep_last`` commits of every
         branch (walking each branch's parent chain), drop all other
         manifests, then delete data files referenced by no surviving
-        manifest (expire_snapshots + remove_orphan_files)."""
+        manifest, and the ``_stage-*`` dirs and ``_log`` temp files of
+        writes that never committed (expire_snapshots +
+        remove_orphan_files).  Single-writer: never run it beside a
+        write in progress."""
         keep_versions: set[int] = set()
         for head in self.refs().values():
             keep_versions.update(self._ancestry(head)[:keep_last])
@@ -894,4 +1041,19 @@ class VersionedTable:
                 if f.endswith(".parquet") and rel not in kept_refs:
                     os.remove(os.path.join(root, f))
                     removed_files.append(rel)
-        return {"versions": removed_manifests, "files": removed_files}
+        removed_stages = []
+        if os.path.isdir(self.path):
+            for entry in os.scandir(self.path):
+                if entry.is_dir() and entry.name.startswith("_stage-"):
+                    shutil.rmtree(entry.path)
+                    removed_stages.append(entry.path)
+        if os.path.isdir(self.log_dir):
+            # manifest / refs temp files of commits that never renamed
+            for entry in os.scandir(self.log_dir):
+                if ".tmp-" in entry.name:
+                    os.remove(entry.path)
+        return {
+            "versions": removed_manifests,
+            "files": removed_files,
+            "stages": removed_stages,
+        }

@@ -81,7 +81,8 @@ def test_vacuum_removes_orphan_tmp_dirs(spark, tmp_path):
     t = ManagedTable(spark, str(tmp_path / "t"))
     df = spark.createDataFrame([(1, dt.date(2024, 1, 1))], "id long, d date")
     t.create(df)
-    orphan = str(tmp_path / "t.tmp_compact")
+    # an interrupted write leaves its stage dir behind
+    orphan = str(tmp_path / "t" / "_stage-0badc0de")
     os.makedirs(orphan)
     removed = t.vacuum()
     assert removed == [orphan]

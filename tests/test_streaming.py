@@ -101,14 +101,17 @@ def test_streaming_risk_upsert_matches_batch(spark, tmp_path):
     def norm(rows):
         return sorted(sorted(r.asDict().items()) for r in rows)
 
+    from datalakehouse_spark.tables import ManagedTable
+
     path, ckpt = str(tmp_path / "risk"), str(tmp_path / "ckpt")
+    table = ManagedTable(spark, path, partition_by=["report_date"])
     run_streaming_risk_upsert(spark, SF, path, ckpt)
-    got = norm(spark.read.parquet(path).collect())
+    got = norm(table.read().collect())
     want = norm(risk_score_daily(load_table(spark, SF, "events")).collect())
     assert got == want
     # replay with same checkpoint: no input -> state unchanged (idempotent)
     run_streaming_risk_upsert(spark, SF, path, ckpt)
-    assert norm(spark.read.parquet(path).collect()) == want
+    assert norm(table.read().collect()) == want
 
 
 def test_watermark_drops_late_rows(spark, tmp_path):

@@ -1,11 +1,17 @@
 """Managed-table DML semantics (SURVEY.md §2.10 M1/M2/M5 + S4/S6)."""
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from datalakehouse_spark.tables import ManagedTable
+
+
+def _head_files(t):
+    """Paths of the data files the table's head version reads."""
+    return [f for s in t.partition_file_stats() for f in s["files"]]
 
 
 def _risk_rows(spark, days, score=10.0):
@@ -65,16 +71,13 @@ def test_retention_delete(spark, table):
 
 def test_delete_untouched_partitions_not_rewritten(spark, table):
     # predicate touches only day 1; days 2-3 keep their original files
-    files_before = set()
-    import os
+    def day3_files():
+        return {f for f in _head_files(table) if "report_date=2024-01-03" in f}
 
-    for root, _d, fs in os.walk(table.path):
-        for f in fs:
-            if f.endswith(".parquet") and "report_date=2024-01-03" in root:
-                files_before.add(os.path.join(root, f))
+    files_before = day3_files()
+    assert files_before
     table.delete_where(F.col("report_date") < F.lit(dt.date(2024, 1, 2)))
-    for f in files_before:
-        assert os.path.exists(f), "untouched partition was rewritten"
+    assert day3_files() == files_before, "untouched partition was rewritten"
 
 
 def test_delete_row_level_predicate_partial_partition(spark, table):
@@ -137,16 +140,13 @@ def test_compact_preserves_clustering_and_blooms(spark, tmp_path):
     t.create(_risk_rows(spark, days=[1]))
     for _ in range(3):
         t.append(_risk_rows(spark, days=[1]))
-    t.compact()
-    import os
-
+    assert t.compact()["compacted"]
     import pyarrow.parquet as pq
 
-    for root, _d, files in os.walk(t.path):
-        for f in files:
-            if f.endswith(".parquet"):
-                col = pq.read_table(os.path.join(root, f)).column("device_id").to_pylist()
-                assert col == sorted(col), "cluster_by ordering lost in compaction"
+    assert len(_head_files(t)) == 1
+    for f in _head_files(t):
+        col = pq.read_table(f).column("device_id").to_pylist()
+        assert col == sorted(col), "cluster_by ordering lost in compaction"
 
 
 def test_compact_reduces_files(spark, table):
@@ -162,21 +162,16 @@ def test_compact_is_partition_scoped(spark, table):
     """M2 (cleanup.sql:12-17): only partitions breaching the small-file
     threshold are rewritten; every other partition's files are
     byte-for-byte untouched (same paths, same bytes)."""
-    import os
-
     for _ in range(3):
         table.append(_risk_rows(spark, days=[1]))
 
     def _snapshot(day):
         snap = {}
-        for root, _d, fs in os.walk(table.path):
-            if f"report_date=2024-01-0{day}" not in root:
-                continue
-            for f in fs:
-                if f.endswith(".parquet"):
-                    p = os.path.join(root, f)
-                    with open(p, "rb") as fh:
-                        snap[p] = fh.read()
+        for p in _head_files(table):
+            if f"report_date=2024-01-0{day}" in p:
+                with open(p, "rb") as fh:
+                    snap[p] = fh.read()
+        assert snap
         return snap
 
     day2_before, day3_before = _snapshot(2), _snapshot(3)
@@ -246,13 +241,11 @@ def test_clustered_write_orders_within_files(spark, tmp_path):
     )
     t.create(_risk_rows(spark, days=[1]))
     import pyarrow.parquet as pq
-    import os
 
-    for root, _d, files in os.walk(t.path):
-        for f in files:
-            if f.endswith(".parquet"):
-                col = pq.read_table(os.path.join(root, f)).column("device_id").to_pylist()
-                assert col == sorted(col)
+    assert _head_files(t)
+    for f in _head_files(t):
+        col = pq.read_table(f).column("device_id").to_pylist()
+        assert col == sorted(col)
 
 
 def test_bloom_filters_written(spark, tmp_path):
@@ -264,15 +257,9 @@ def test_bloom_filters_written(spark, tmp_path):
         cluster_by=["device_id"],
         bloom_filter_cols=["device_id"],
     )
-    import os
 
     def total_bytes(table):
-        return sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _d, files in os.walk(table.path)
-            for f in files
-            if f.endswith(".parquet")
-        )
+        return sum(os.path.getsize(f) for f in _head_files(table))
 
     # this pyarrow build doesn't expose bloom offsets; observe the
     # filters through the footprint instead: same rows with blooms
@@ -304,23 +291,21 @@ def test_zorder_write_bounds_both_dimensions(spark, tmp_path):
         .coalesce(1)
     )
 
-    def max_y_extent(path):
-        import glob as g
-
+    def max_y_extent(table):
         extents = []
-        for f in sorted(g.glob(str(path) + "/*.parquet")):
+        for f in _head_files(table):
             t = pq.read_table(f, columns=["y"])
             ys = t.column("y").to_pylist()
             extents.append(max(ys) - min(ys))
         return max(extents), len(extents)
 
-    lin = str(tmp_path / "linear")
-    zod = str(tmp_path / "zordered")
+    lin = ManagedTable(spark, str(tmp_path / "linear"), cluster_by=["x", "y"])
+    zod = ManagedTable(spark, str(tmp_path / "zordered"), zorder_by=("x", "y"))
     # cap records per file so each sorted write splits into 16 files
     spark.conf.set("spark.sql.files.maxRecordsPerFile", "4096")
     try:
-        ManagedTable(spark, lin, cluster_by=["x", "y"]).create(grid)
-        ManagedTable(spark, zod, zorder_by=("x", "y")).create(grid)
+        lin.create(grid)
+        zod.create(grid)
     finally:
         spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     lin_ext, lin_files = max_y_extent(lin)
@@ -343,20 +328,77 @@ def test_zorder_cluster_by_mutually_exclusive(spark):
 
 def test_managed_table_writes_zstd(spark, tmp_path):
     """Parquet codec parity with the reference's ZSTD table properties."""
-    import glob as g
-
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from datalakehouse_spark.tables import ManagedTable
 
-    path = str(tmp_path / "zstd_t")
-    ManagedTable(spark, path).create(
+    t = ManagedTable(spark, str(tmp_path / "zstd_t")).create(
         spark.range(1000).select(F.col("id"), (F.col("id") % 7).alias("k"))
     )
-    f = sorted(g.glob(path + "/*.parquet"))[0]
+    f = sorted(_head_files(t))[0]
     codecs = {
         pq.ParquetFile(f).metadata.row_group(0).column(c).compression
         for c in range(pq.ParquetFile(f).metadata.num_columns)
     }
     assert codecs == {"ZSTD"}
+
+
+def test_reader_holding_old_version_survives_delete(spark, table):
+    """Snapshot isolation: a DataFrame read before a row-level delete
+    keeps reading the version it was planned on — the delete commits
+    new files instead of replacing the ones the reader lists."""
+    df = table.read()
+    table.delete_where(
+        (F.col("report_date") == dt.date(2024, 1, 2)) & (F.col("device_id") == "dev1")
+    )
+    assert df.count() == 9
+    assert table.read().count() == 8
+
+
+def _fail_commit_rename(monkeypatch):
+    """Make the first rename of anything but a data file raise: the
+    commit point of a table write."""
+    real = os.rename
+
+    def rename(src, dst):
+        if not str(dst).endswith(".parquet"):
+            monkeypatch.setattr(os, "rename", real)
+            raise OSError("injected crash at commit")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+
+
+@pytest.mark.parametrize("op", ["delete_where", "compact"])
+def test_crash_at_commit_keeps_previous_version(spark, tmp_path, monkeypatch, op):
+    """A failure at the commit point of an unpartitioned rewrite leaves
+    the previous version readable; the next vacuum removes the orphan
+    stage dir and the uncommitted files."""
+    t = ManagedTable(spark, str(tmp_path / "crash"))
+    t.create(_risk_rows(spark, days=[1, 2]))
+    t.append(_risk_rows(spark, days=[3]))
+    before = sorted(map(tuple, t.read().collect()))
+
+    def on_disk():
+        return {
+            os.path.join(r, f)
+            for r, _d, fs in os.walk(t.path)
+            for f in fs
+            if f.endswith(".parquet")
+        }
+
+    files_before = on_disk()
+    _fail_commit_rename(monkeypatch)
+    with pytest.raises(OSError, match="injected"):
+        if op == "delete_where":
+            t.delete_where(F.col("report_date") < F.lit(dt.date(2024, 1, 2)))
+        else:
+            t.compact()
+    assert sorted(map(tuple, t.read().collect())) == before
+    removed = t.vacuum()
+    assert len(removed) == 1 and os.path.basename(removed[0]).startswith("_stage-")
+    assert not os.path.exists(removed[0])
+    assert on_disk() == files_before
+    assert not [f for f in os.listdir(os.path.join(t.path, "_log")) if ".tmp-" in f]
+    assert sorted(map(tuple, t.read().collect())) == before

@@ -284,6 +284,38 @@ def test_incremental_read_returns_only_the_delta(spark, vt):
     }
 
 
+def test_incremental_read_across_compaction(spark, vt):
+    """A compaction inside the interval (a ``replace`` commit that
+    rewrites appended files together with older ones) is no logical
+    change: exactly the appended rows come back."""
+    v1 = vt.current_version()
+    vt.append(_rows(spark, days=[3, 4], score=20.0))
+    vt.append(_rows(spark, days=[1, 4], score=30.0))
+    assert vt.compact(min_files=2)["compacted"]
+    assert vt.history()[-1]["operation"] == "replace"
+    vt.append(_rows(spark, days=[5], score=40.0))
+    delta = vt.incremental_read(v1, vt.current_version())
+    want = (
+        _state(_rows(spark, days=[3, 4], score=20.0))
+        + _state(_rows(spark, days=[1, 4], score=30.0))
+        + _state(_rows(spark, days=[5], score=40.0))
+    )
+    assert _state(delta) == sorted(want)
+
+
+def test_partition_dtype_same_with_and_without_recorded_schema(spark, tmp_path):
+    """A string partition column holding dates reads with ONE dtype at
+    every version: the version with a recorded schema (v1) and the
+    add-column version without one (v2) both infer it from the path."""
+    t = VersionedTable(spark, str(tmp_path / "pd"), partition_by=["day"])
+    rows = spark.createDataFrame([(1, "2024-01-01")], "id long, day string")
+    t.create(rows)
+    t.append(rows.withColumn("extra", F.lit(1.0)))
+    v1_type = t.read(version=1).schema["day"].dataType
+    assert t.read(merge_schema=True).schema["day"].dataType == v1_type
+    assert t.read().schema["day"].dataType == v1_type
+
+
 def test_expire_keeps_all_branch_heads(spark, vt):
     vt.create_branch("exp")
     vt.merge_upsert(
