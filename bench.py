@@ -18,7 +18,6 @@ explicit --waive naming the entry, recorded in the file.
 
 from __future__ import annotations
 
-import functools
 import json
 import os
 import re
@@ -211,11 +210,18 @@ def warm_up(spark, names) -> None:
             print(f"WARMUP FAIL {name}: {exc}", file=sys.stderr)
 
 
-def time_entry(spark, name: str, sf_dir: str) -> float:
-    """One end-to-end sample: build + noop-sink execution, in seconds."""
+def time_entry(spark, name: str, sf_dir: str):
+    """One end-to-end sample: build + noop-sink execution.  Returns the
+    seconds and the DataFrame that ran (for its plan)."""
     t0 = time.perf_counter()
-    _run(REGISTRY[name].fn(spark, sf_dir))
-    return time.perf_counter() - t0
+    df = REGISTRY[name].fn(spark, sf_dir)
+    _run(df)
+    return time.perf_counter() - t0, df
+
+
+def plan_text(df, mode: str) -> str:
+    """The plan text ``df.explain(mode)`` prints, as a string."""
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
 
 
 def cold_reset(name: str) -> None:
@@ -286,7 +292,9 @@ def main() -> None:
         else {}
     )
 
-    timed = functools.partial(time_entry, spark, sf_dir=sf_dir)
+    def timed(name: str) -> float:
+        return time_entry(spark, name, sf_dir)[0]
+
     timings: dict[str, float] = {}
     t_total0 = time.perf_counter()
     for name in names:

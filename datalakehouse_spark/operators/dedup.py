@@ -693,7 +693,7 @@ def connected_components(
     # near-dup pipeline (LSH bucket join + verify), and without a
     # checkpoint every propagation round — and every convergence probe —
     # would re-execute that whole pipeline (measured 3.4x the total cost
-    # at 16x corpus in tools/scale_smoke.py)
+    # at 16x corpus; `tools/scale_ladder.py dedup_clusters` re-measures)
     from datalakehouse_spark.materialize import materialize
 
     edges = materialize(

@@ -3865,8 +3865,9 @@ def q_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     The ntile restage is fixture plumbing, not the operator: in
     production the stream's own arrival defines the micro-batches.
     The drain itself lives in operators/dedup.py
-    (``streaming_incremental_dedup_drain``) so the scale ladder
-    (tools/scale_smoke_stream_dedup.py) exercises the same code."""
+    (``streaming_incremental_dedup_drain``) and the scale ladder
+    (tools/scale_ladder.py) times this entry, so both exercise the same
+    code."""
     from datalakehouse_spark.operators.dedup import (
         prefix_digest,
         streaming_incremental_dedup_drain,

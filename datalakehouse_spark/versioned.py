@@ -701,8 +701,9 @@ class VersionedTable:
         # merge_branch can do per-key conflict detection at ANY key
         # cardinality (no driver collect, no cap, typed joins — no
         # str()-vs-cast('string') canonical-form mismatch).  Round-11
-        # hot-path shape (ADVICE r10 + VERDICT #7, measured in
-        # tools/scale_smoke_sidecar.py): the upserted keys are EXACTLY
+        # hot-path shape (ADVICE r10 + VERDICT #7; measured in the
+        # "Round-11 merge_upsert key-recording ladder" section of
+        # docs/SCALING_RESULTS.md): the upserted keys are EXACTLY
         # the keys of the rows this commit writes, so instead of
         # materializing a separate key sidecar on every commit, the
         # manifest records POINTERS to the commit's own source data

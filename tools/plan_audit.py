@@ -10,11 +10,9 @@ Writes docs/PLANS.md.  Run: python tools/plan_audit.py
 
 from __future__ import annotations
 
-import io
 import os
 import re
 import sys
-from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -91,6 +89,7 @@ MARKERS = [
 
 
 def main() -> None:
+    from bench import plan_text
     from datalakehouse_spark.registry import REGISTRY, _load_extensions
     from datalakehouse_spark.session import get_spark
 
@@ -115,11 +114,7 @@ def main() -> None:
         "",
     ]
     for name, note in AUDITED.items():
-        df = REGISTRY[name].fn(spark, SF)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
+        plan = plan_text(REGISTRY[name].fn(spark, SF), "formatted")
         tree = plan.split("\n\n")[0]  # operator tree only, not detail blocks
         counts = []
         for label, pat in MARKERS:

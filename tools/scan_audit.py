@@ -16,12 +16,10 @@ Run: python tools/scan_audit.py [--eager] [--min-scans N]
 from __future__ import annotations
 
 import argparse
-import io
 import os
 import re
 import sys
 from collections import Counter
-from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -36,6 +34,7 @@ def main() -> None:
     ap.add_argument("--names", nargs="*", default=None)
     args = ap.parse_args()
 
+    from bench import plan_text
     from datalakehouse_spark.registry import REGISTRY, _load_extensions
     from datalakehouse_spark.session import get_spark
 
@@ -49,11 +48,7 @@ def main() -> None:
         if REGISTRY[name].eager and not args.eager:
             continue
         try:
-            df = REGISTRY[name].fn(spark, SF)
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("formatted")
-            plan = buf.getvalue()
+            plan = plan_text(REGISTRY[name].fn(spark, SF), "formatted")
         except Exception as exc:
             print(f"BUILD FAIL {name}: {exc}", file=sys.stderr)
             continue

@@ -3,8 +3,8 @@
 entries with bench.py's own warm-up and timer (warmup at sf0.001,
 noop sink), reporting the median over --runs — build-once entries
 (``QuerySpec.builds``) are cold-reset before every run — without
-paying the full 247-entry fleet.  Optionally dump ``explain("formatted")`` for
-each timed entry to plans/r16/<name>_<tag>.txt.
+paying the full 247-entry fleet.  Optionally dump the last timed run's
+``explain("formatted")`` to plans/<dir>/<name>_<tag>.txt.
 
 Usage:
     python tools/time_entries.py NAME [NAME...] [--plans TAG] [--runs N]
@@ -22,7 +22,7 @@ REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-from bench import cold_reset, time_entry, warm_up  # noqa: E402
+from bench import cold_reset, plan_text, time_entry, warm_up  # noqa: E402
 from datalakehouse_spark.registry import REGISTRY  # noqa: E402
 from datalakehouse_spark.session import get_spark  # noqa: E402
 
@@ -63,25 +63,14 @@ def main() -> None:
         for _ in range(args.runs):
             if REGISTRY[name].builds:
                 cold_reset(name)
-            runs.append(time_entry(spark, name, args.sf_dir))
+            t, df = time_entry(spark, name, args.sf_dir)
+            runs.append(t)
         runs.sort()
         results[name] = runs[len(runs) // 2]
         print(f"{results[name]:8.3f}s  {name}   (runs: {', '.join(f'{r:.3f}' for r in runs)})", flush=True)
         if args.plans:
-            try:
-                df = REGISTRY[name].fn(spark, args.sf_dir)
-                plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-            except Exception:
-                import contextlib
-                import io as _io
-
-                df = REGISTRY[name].fn(spark, args.sf_dir)
-                buf = _io.StringIO()
-                with contextlib.redirect_stdout(buf):
-                    df.explain("formatted")
-                plan = buf.getvalue()
             with open(os.path.join(REPO_ROOT, "plans", args.plans_dir, f"{name}_{args.plans}.txt"), "w") as f:
-                f.write(plan)
+                f.write(plan_text(df, "formatted"))
     print(json.dumps({n: round(v, 3) for n, v in results.items()}))
 
 
