@@ -3,7 +3,9 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash -> CORRECTNESS_r{N}.json).
+order-insensitive value-hash -> CORRECTNESS_r{N}.json).  Both dicts list
+entries in registration order (``registry.REGISTRY``), the same order
+bench.py and ``oracle_check.run_all`` use.
 
 Implementation lives in the ``datalakehouse_spark`` package; this module
 is the thin wiring the driver imports.
@@ -41,10 +43,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per implemented operator from SURVEY.md §2, in
+    registration order: the order bench.py and the oracle sweep run."""
     return registry.queries()
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB oracle twins for every SQL-expressible query."""
+    """DuckDB oracle twins for every SQL-expressible query, in
+    registration order."""
     return registry.oracle_sql()

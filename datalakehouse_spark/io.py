@@ -8,6 +8,11 @@ The driver fixtures live at /root/testdata/sf{0.001,0.01,0.1}/<name>.parquet
   the physical int64 comes through as a plain long which we decode.
 - TIMESTAMP(MICROS) (current testdata) — read directly as a timestamp.
 
+A third shape is not a generation but a round trip: events that Spark
+wrote back from a raw ``spark.read.parquet`` of the fixture carry
+``ts`` as TIMESTAMP_NTZ in the footer; :func:`canonical_events_ts`
+casts it to TIMESTAMP.
+
 All loads go through :func:`load_table` so every query in the registry
 sees ONE canonical schema regardless of generation:
 
@@ -27,6 +32,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -137,15 +143,32 @@ def _read_events(spark: SparkSession, path: str) -> DataFrame:
             spark.conf.unset(ntz_key)
         else:
             spark.conf.set(ntz_key, old)
-    if dict(df.dtypes).get("ts", "").startswith("timestamp"):
-        # µs-physical generation: derive the ns epoch used by epoch math.
-        return df.withColumn("ts_ns", F.unix_micros(F.col("ts")) * F.lit(1000))
-    # legacy ns-int64 generation (nanosAsLong): int64 ns -> µs-precision
-    # timestamp; `div` floors on the positive epoch range, matching
-    # DuckDB's ns->µs coercion.
-    return df.withColumn("ts_ns", F.col("ts")).withColumn(
-        "ts", F.timestamp_micros(F.expr("ts div 1000"))
-    )
+    return canonical_events_ts(df)
+
+
+def canonical_events_ts(df: DataFrame) -> DataFrame:
+    """Map a raw events ``ts`` to the canonical pair (``ts`` TIMESTAMP,
+    ``ts_ns`` LONG), whatever type the source surfaced it as:
+
+    - TIMESTAMP (the µs generation): kept as the physical column, so
+      range predicates on ``ts`` still reach the parquet scan;
+    - TIMESTAMP_NTZ (a file Spark wrote from a raw read of the fixture
+      records NTZ in its footer, which inference settings cannot
+      override): cast to TIMESTAMP, exact under the session's UTC zone;
+    - int64 epoch ns (the legacy generation, via nanosAsLong): decoded
+      to a µs-precision timestamp; ``div`` floors on the positive epoch
+      range, matching DuckDB's ns->µs coercion.
+
+    Shared by the batch read (:func:`load_table`) and the streaming
+    twin (``streaming.jobs.events_stream``)."""
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, T.LongType):
+        return df.withColumn("ts_ns", F.col("ts")).withColumn(
+            "ts", F.timestamp_micros(F.expr("ts div 1000"))
+        )
+    if isinstance(ts_type, T.TimestampNTZType):
+        df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+    return df.withColumn("ts_ns", F.unix_micros(F.col("ts")) * F.lit(1000))
 
 
 def table_bytes(sf_dir: str, name: str) -> int:

@@ -95,6 +95,10 @@ class QuerySpec:
     min_of_3: bool = False
 
 
+#: name -> spec in registration order (this module, then the
+#: ``registry_ext*`` modules ``_load_extensions`` imports): the one entry
+#: order, which ``queries()``/``oracle_sql()``, bench.py and the oracle
+#: sweep all iterate.
 REGISTRY: dict[str, QuerySpec] = {}
 
 
@@ -724,293 +728,17 @@ def q_retention_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Driver coverage rotation (round 16, tools/rotation_helper.py with the
-#: round's code-changed entries as argv — reproducible from the
-#: provenance constants below, enforced by test_registry_integrity):
-#: the build-phase additions (unigram/versioned/near-dup-split + the
-#: BPE-runtime memo riders) AND every entry whose execution path the
-#: round-16 OPTIMIZATION pass restructured (shared shingle checkpoint,
-#: lazy pagerank chain, merge_upsert write-first reorder, one-parse
-#: literal centroids, suffix levenshtein, span-digest checkpoints,
-#: restage rewrite) lead the ~50-entry driver window — their old driver
-#: rows no longer describe the running code — then the aging tail by
-#: last-green-round ASCENDING, which keeps the remaining r10-stale
-#: cohort (VERDICT r15 #1) inside the window.
-_DRIVER_ROTATION_CHANGED = ['simhash_docs', 'simhash_near_dup_pairs', 'near_dup_pairs', 'dedup_clusters', 'dedup_canonical', 'dup_graph_degrees', 'triangle_count', 'graph_pagerank', 'lsh_recall_accounting', 'near_dup_decontamination', 'dup_span_coverage', 'dup_span_excision_stats', 'dup_span_excision_apply', 'association_rules', 'decontamination_report', 'merge_upsert_risk', 'time_travel_read', 'version_incremental_read', 'versioned_branch_evolution', 'incremental_mv_maintenance', 'streaming_incremental_mv', 'streaming_incremental_dedup', 'streaming_near_dup_ingest', 'bpe_vocab_apply_versioned', 'wordpiece_vocab_apply_versioned', 'unigram_vocab_apply_versioned']
-_DRIVER_ROTATION_ASOF = 16
-_DRIVER_PRIORITY = [
-    "simhash_docs",
-    "simhash_near_dup_pairs",
-    "near_dup_pairs",
-    "dedup_clusters",
-    "dedup_canonical",
-    "dup_graph_degrees",
-    "triangle_count",
-    "graph_pagerank",
-    "lsh_recall_accounting",
-    "near_dup_decontamination",
-    "dup_span_coverage",
-    "dup_span_excision_stats",
-    "dup_span_excision_apply",
-    "association_rules",
-    "decontamination_report",
-    "merge_upsert_risk",
-    "time_travel_read",
-    "version_incremental_read",
-    "versioned_branch_evolution",
-    "incremental_mv_maintenance",
-    "streaming_incremental_mv",
-    "streaming_incremental_dedup",
-    "streaming_near_dup_ingest",
-    "bpe_vocab_apply_versioned",
-    "wordpiece_vocab_apply_versioned",
-    "unigram_vocab_apply_versioned",
-    "approx_stats",
-    "corpus_prep_pipeline",
-    "ntile_percent_rank",
-    "char_ngram_jaccard",
-    "embedding_near_dup",
-    "explode_wordcount_topk",
-    "value_histogram",
-    "monthly_revenue",
-    "array_agg_types",
-    "salted_agg_counts",
-    "quantize_embeddings_int8",
-    "exact_percentiles",
-    "value_stats_exact",
-    "zscore_normalize",
-    "disjunctive_predicates",
-    "min_per_group_joinback",
-    "risk_serving_page",
-    "q4_order_priority",
-    "q12_shipmode_priority",
-    "gapfill_daily_counts",
-    "unpivot_daily",
-    "hourly_heatmap",
-    "null_semantics_agg",
-    "q6_forecast_revenue",
-    "q10_returned_items",
-    "q14_promo_effect",
-    "q18_large_orders",
-    "pairwise_topk_blocked",
-    "scd2_customer_history",
-    "stratified_sample",
-    "dataset_split_counts",
-    "jsonl_ingest_roundtrip",
-    "coordinate_parse_swap",
-    "null_safe_join",
-    "event_sequences",
-    "filebus_kafka_ingest",
-    "knn_batch_queries",
-    "zorder_key_accounting",
-    "q2_min_cost_supplier",
-    "q9_product_profit",
-    "q11_important_value",
-    "q15_top_supplier",
-    "q16_supplier_counts",
-    "q20_surplus_suppliers",
-    "q21_sole_blame",
-    "chunk_dedup_stats",
-    "rolling_time_window",
-    "stats_moments",
-    "pq_recall_accounting",
-    "trip_distance_daily",
-    "speeding_segments",
-    "running_distinct_users",
-    "markov_transitions",
-    "ewma_daily",
-    "token_entropy",
-    "pii_redaction",
-    "engagement_bitmap",
-    "grid_density",
-    "prefix_dedup_stats",
-    "kmv_distinct_sketch",
-    "dq_expectations",
-    "growth_rates",
-    "mad_outliers",
-    "shingle_novelty_daily",
-    "distribution_rebalance",
-    "hierarchy_rollup",
-    "debounce_events",
-    "purchase_attribution",
-    "dow_seasonality",
-    "anomaly_days",
-    "bloom_membership_accounting",
-    "bigram_logprob_quality",
-    "risk_score_daily",
-    "ingest_normalize",
-    "containment_near_dup",
-    "winback_users",
-    "dau_wau_stickiness",
-    "langid_confusion",
-    "label_centroid_distances",
-    "weighted_median",
-    "point_in_time_join",
-    "time_to_convert",
-    "conversion_wilson_ci",
-    "gapfill_interpolated",
-    "session_landing_exit",
-    "top_movers",
-    "kmv_rolling_distinct",
-    "cuped_adjustment",
-    "mutual_information",
-    "streaming_metered_ingest",
-    "weekly_autocorrelation",
-    "benford_first_digit",
-    "revenue_reconciliation",
-    "ab_test_ttest",
-    "chi_square_independence",
-    "trend_slopes",
-    "cusum_changepoint",
-    "zipf_token_ranks",
-    "source_vocab_overlap",
-    "corpus_health_report",
-    "order_aging_report",
-    "spatial_knn",
-    "basket_size_distribution",
-    "forecast_accuracy",
-    "multimodal_real_decode_stats",
-    "mjpeg_avi_decode",
-    "bucketed_colocated_join",
-    "container_metadata_stats",
-    "bucketed_colocated_agg",
-    "flac_pcm_decode",
-    "wav_codec_decode",
-    "bucket_distribution",
-    "serving_page",
-    "serving_count",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_regional_revenue",
-    "join_semi",
-    "join_anti",
-    "join_outer_agg",
-    "range_join_window",
-    "latest_per_key",
-    "topk_global",
-    "topk_per_group",
-    "union_vendor_split",
-    "distinct_daily",
-    "rollup_daily",
-    "retention_filter",
-    "text_stats",
-    "quality_score_docs",
-    "langid_docs",
-    "token_count_by_source",
-    "doc_fingerprints",
-    "dedup_exact",
-    "dedup_exact_normalized",
-    "embedding_norms_by_label",
-    "multimodal_payloads",
-    "correlated_avg_filter",
-    "scalar_subquery_ratio",
-    "groupby_having",
-    "grouping_sets_sql",
-    "string_predicates",
-    "media_frame_sample",
-    "ltv_deciles_pareto",
-    "skyline_2d",
-    "tiff_image_decode",
-    "cross_format_image_dedup",
-    "bmp16_image_decode",
-    "gif_animation_frames",
-    "ico_image_decode",
-    "pnm_tga_decode",
-    "qoi_pcx_decode",
-    "serving_page_seek",
-    "minhash_signatures",
-    "asof_join_orders",
-    "sessionize_counts",
-    "running_windows",
-    "cube_type_user",
-    "streaming_windowed_append",
-    "pivot_daily_types",
-    "set_intersect",
-    "set_except",
-    "json_extract_props",
-    "leadlag_gaps",
-    "stateful_running_totals",
-    "streaming_dedup",
-    "streaming_session_windows",
-    "streaming_stream_join",
-    "schema_evolution_read",
-    "compaction_partition_sweep",
-    "doc_chunks",
-    "repetition_quality",
-    "tfidf_top_terms",
-    "sequence_packing",
-    "ann_recall_accounting",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q13_customer_distribution",
-    "q17_small_quantity_revenue",
-    "q19_disjunctive_revenue",
-    "q22_idle_balance",
-    "streaming_static_enrich",
-    "csv_ingest_roundtrip",
-    "orc_ingest_roundtrip",
-    "funnel_conversion",
-    "cohort_retention",
-    "profile_table",
-    "gini_coefficient",
-    "repeat_purchase_intervals",
-    "incremental_dedup_ingest",
-    "embedding_drift",
-    "bpe_vocab_train",
-    "wordpiece_vocab_train",
-    "knn_brute_force",
-    "ivf_build_stats",
-    "ivf_search",
-    "ann_lsh_search",
-    "ann_multiprobe_search",
-    "quantized_knn",
-    "ivf_search_indexed",
-    "weighted_sample_counts",
-    "pq_build_stats",
-    "pq_search",
-    "ivf_pq_search",
-    "max_concurrency",
-    "fuzzy_dup_candidates",
-    "kmeans_inertia_sweep",
-    "semantic_dedup",
-    "ingest_drift_psi",
-    "domain_mixture_weights",
-    "mixture_downsample_plan",
-    "split_leakage_audit",
-    "bm25_topk",
-    "hybrid_rrf_fusion",
-    "quality_threshold_sweep",
-    "cross_source_dup_matrix",
-    "bpe_tokenize_stats",
-    "wordpiece_tokenize_stats",
-    "streaming_near_dup_build",
-    "unigram_vocab_train",
-    "unigram_tokenize_stats",
-]
-
-
-def _ordered_names() -> list[str]:
-    seen: set[str] = set()
-    out: list[str] = []
-    for n in [p for p in _DRIVER_PRIORITY if p in REGISTRY] + list(REGISTRY):
-        if n not in seen:
-            seen.add(n)
-            out.append(n)
-    return out
-
-
 def queries() -> dict[str, QueryFn]:
+    """Every entry in registration order: the order bench.py and the
+    oracle sweep (``oracle_check.run_all``) iterate."""
     _load_extensions()
-    return {name: REGISTRY[name].fn for name in _ordered_names()}
+    return {name: spec.fn for name, spec in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
+    """The SQL-backed entries' DuckDB twins, in registration order."""
     _load_extensions()
-    return {
-        name: REGISTRY[name].sql
-        for name in _ordered_names()
-        if REGISTRY[name].sql is not None
-    }
+    return {name: spec.sql for name, spec in REGISTRY.items() if spec.sql is not None}
 
 
 def _load_extensions() -> None:

@@ -1,6 +1,5 @@
 from datalakehouse_spark.streaming.jobs import (  # noqa: F401
     events_stream,
-    ingest_stream,
     run_ingest_to_table,
     windowed_counts_stream,
 )

@@ -3,7 +3,7 @@
 Reference behavior being rebuilt (SURVEY.md §2.9):
 - continuous Kafka JSON ingest with declared schema, malformed drop +
   DLQ audit (create.sql:72-121,120; sink_telematics_raw_dlq.sql:47-69)
-- exactly-once checkpointed sink committing every 300 s
+- checkpointed sink committing every 300 s
   (sink_telematics_real_time.sql:8-12)
 - processing-time stamping (ST5), arrival-day partitioning (ST6)
 - plus the watermark/window/session surface the reference lacks but the
@@ -14,9 +14,11 @@ Source abstraction: jobs take a *source factory* so production wires
 file source over the same fixtures — identical downstream plan, which
 is the point of Structured Streaming's unified model.
 
-Exactly-once: the parquet file sink + checkpointLocation gives
-idempotent commits per epoch; with an Iceberg/Delta catalog the same
-``toTable`` call upgrades to transactional commits (S5).
+Delivery: the ingest sink (:func:`run_ingest_to_table`) is
+at-least-once.  It appends each micro-batch from ``foreachBatch``, so a
+replayed epoch appends its rows again; both copies carry the same
+``ingest_epoch``, so a reader dedupes by (``correlation_id``,
+``ingest_epoch``).
 """
 
 from __future__ import annotations
@@ -28,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datalakehouse_spark.io import canonical_events_ts
 from datalakehouse_spark.pipelines.ingest import normalize_events
 
 #: Wire schema of the legacy events fixture's parquet files (ts as raw
@@ -173,11 +176,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)  # bounded per-batch work (ST8 analog)
         .parquet(path)
     )
-    if ts_native:
-        return raw.withColumn("ts_ns", F.unix_micros(F.col("ts")) * F.lit(1000))
-    return raw.withColumn("ts_ns", F.col("ts")).withColumn(
-        "ts", F.timestamp_micros(F.expr("ts div 1000"))
-    )
+    return canonical_events_ts(raw)
 
 
 def build_kafka_reader(
@@ -235,12 +234,6 @@ def build_socket_reader(spark: SparkSession, host: str, port: int):
     )
 
 
-def ingest_stream(events: DataFrame) -> DataFrame:
-    """Streaming normalize: the same pure transform as the batch path
-    (one transform, two contexts — the bucket contract holds in both)."""
-    return normalize_events(events)
-
-
 def run_ingest_to_table(
     spark: SparkSession,
     sf_dir: str,
@@ -249,9 +242,14 @@ def run_ingest_to_table(
     dlq_path: str | None = None,
 ) -> None:
     """Ingest job: stream -> normalize (+ DLQ split) -> partitioned
-    exactly-once sink; availableNow drains everything then stops (the
+    at-least-once sink; availableNow drains everything then stops (the
     test/backfill trigger; production uses processingTime='300 seconds'
-    per the reference checkpoint cadence)."""
+    per the reference checkpoint cadence).
+
+    Each micro-batch is appended with its ``ingest_epoch``.  A replayed
+    epoch (a restart after the write but before the checkpoint commit)
+    appends its rows again under the same ``ingest_epoch``, so a reader
+    dedupes by (``correlation_id``, ``ingest_epoch``)."""
     ev = events_stream(spark, sf_dir)
 
     def sink(batch: DataFrame, epoch_id: int) -> None:

@@ -303,7 +303,7 @@ class VersionedTable:
           minus either side's removals plus both sides' additions;
         - partitions REWRITTEN by one side and modified by the other
           escalate to PER-KEY resolution when every commit involved is
-          a ``merge_upsert`` with a recorded key sidecar (a typed
+          a ``merge_upsert`` with recorded key-source files (a typed
           parquet key set — any cardinality): disjoint key sets
           re-apply the branch's keyed rows on top of ``into``'s state
           for just those partitions (one partition-pruned read per
@@ -355,14 +355,15 @@ class VersionedTable:
         commit in the list touched a conflicted partition (that side
         contributes no keyed rows).
 
-        Key sets come in two manifest formats: ``merge_keys.src_files``
-        (round 11 — pointers to the commit's own immutable source data
-        files, keys derived by a column-pruned scan at merge time, zero
-        hot-path cost) and the legacy ``merge_keys.path`` parquet
-        sidecar.  Each commit's keys are loaded as its OWN frame and
-        combined with unionByName, so the ANALYZER widens mismatched
-        key types across commits (int vs long source frames) instead of
-        a multi-path parquet read failing or silently coercing."""
+        A commit's key set is ``merge_keys.src_files``: pointers to the
+        commit's own immutable source data files, keys derived by a
+        column-pruned scan at merge time (zero hot-path cost).  A
+        pre-round-11 manifest (a ``merge_keys.path`` sidecar, no
+        ``src_files``) is not key-recorded.  Each commit's keys are
+        loaded as its OWN frame and combined with unionByName, so the
+        ANALYZER widens mismatched key types across commits (int vs
+        long source frames) instead of a multi-path parquet read
+        failing or silently coercing."""
         columns: list[str] | None = None
         frames: list[DataFrame] = []
         for v in commits:
@@ -389,30 +390,21 @@ class VersionedTable:
             if (
                 m["operation"] != "merge_upsert"
                 or not mk
-                or not (mk.get("path") or mk.get("src_files") is not None)
+                or mk.get("src_files") is None
             ):
                 return None
             if columns is None:
                 columns = mk["columns"]
             elif columns != mk["columns"]:
                 return None
-            if mk.get("src_files") is not None:
-                if not mk["src_files"]:
-                    continue  # empty upsert: contributes no keys
-                paths = [
-                    os.path.join(self.data_dir, p) for p in mk["src_files"]
-                ]
-                frames.append(
-                    self.spark.read.option("basePath", self.data_dir)
-                    .parquet(*paths)
-                    .select(*mk["columns"])
-                )
-            else:
-                frames.append(
-                    self.spark.read.parquet(
-                        os.path.join(self.log_dir, mk["path"])
-                    ).select(*mk["columns"])
-                )
+            if not mk["src_files"]:
+                continue  # empty upsert: contributes no keys
+            paths = [os.path.join(self.data_dir, p) for p in mk["src_files"]]
+            frames.append(
+                self.spark.read.option("basePath", self.data_dir)
+                .parquet(*paths)
+                .select(*mk["columns"])
+            )
         if not frames:
             return (columns or [], None)
         out = frames[0]
@@ -1026,13 +1018,6 @@ class VersionedTable:
                 continue
             p = self._manifest_path(v)
             if os.path.exists(p):
-                # an expired merge_upsert's key sidecar goes with it
-                # (sidecar dirs are commit-unique, never shared)
-                mk = self._load_manifest(v).get("merge_keys") or {}
-                if mk.get("path"):
-                    shutil.rmtree(
-                        os.path.join(self.log_dir, mk["path"]), ignore_errors=True
-                    )
                 os.remove(p)
                 removed_manifests.append(v)
         removed_files = []

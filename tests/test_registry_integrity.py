@@ -1,27 +1,26 @@
 """Registry hygiene: the driver consumes `queries()`/`oracle_sql()`
-blind, so structural mistakes (a typo'd priority name, a duplicate
-registration, an oracle DuckDB can't even parse) must fail fast here
-rather than as a silent driver red."""
+blind, so structural mistakes (an entry out of registration order, a
+duplicate registration, an oracle DuckDB can't even parse) must fail
+fast here rather than as a silent driver red."""
 
 import duckdb
 import pytest
 
 from datalakehouse_spark.registry import (
     REGISTRY,
-    _DRIVER_PRIORITY,
     _load_extensions,
+    oracle_sql,
+    queries,
 )
 
 _load_extensions()
 
 
-def test_driver_priority_names_all_registered():
-    missing = [n for n in _DRIVER_PRIORITY if n not in REGISTRY]
-    assert not missing, f"priority names not in registry: {missing}"
-
-
-def test_driver_priority_has_no_duplicates():
-    assert len(_DRIVER_PRIORITY) == len(set(_DRIVER_PRIORITY))
+def test_driver_contract_iterates_registration_order():
+    """The driver runs entries in the order bench.py and the oracle
+    sweep do: REGISTRY's registration order, with no other name list."""
+    assert list(queries()) == list(REGISTRY)
+    assert list(oracle_sql()) == [n for n, s in REGISTRY.items() if s.sql is not None]
 
 
 def test_every_entry_has_description():
@@ -116,61 +115,6 @@ def test_eager_build_class_is_exact(spark):
         "stale eager flags (no longer run build-time jobs): "
         f"{sorted(eager - observed)}"
     )
-
-
-def test_rotation_helper_partitions_registry():
-    """The rotation tool must classify every entry exactly once and put
-    the caller's changed entries first."""
-    import subprocess
-    import sys as _sys
-
-    proc = subprocess.run(
-        [_sys.executable, "tools/rotation_helper.py", "ntile_percent_rank"],
-        capture_output=True,
-        text=True,
-        cwd="/root/repo",
-        timeout=120,
-    )
-    assert proc.returncode == 0, proc.stderr
-    lines = proc.stdout.splitlines()
-    assert lines[0].startswith(f"# {{'registry': {len(REGISTRY)}")
-    body = [l.strip().strip('",') for l in lines if l.startswith('    "')]
-    assert body[0] == "ntile_percent_rank"
-    assert len(body) == len(set(body)), "rotation must not repeat entries"
-    assert set(body) <= set(REGISTRY), "rotation must only name registered entries"
-
-
-def test_driver_priority_is_the_reproducible_rotation():
-    """The committed _DRIVER_PRIORITY must BE compute_rotation(changed,
-    asof) for the committed provenance constants — a round that ships a
-    hand-edited, reordered, or simply unrotated (stale last-round) list
-    fails here instead of silently starving the driver window of the
-    oldest-evidence entries (VERDICT r12 #7)."""
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo/tools")
-    from rotation_helper import compute_rotation
-
-    from datalakehouse_spark.registry import (
-        _DRIVER_ROTATION_ASOF,
-        _DRIVER_ROTATION_CHANGED,
-    )
-
-    expected, summary = compute_rotation(
-        list(_DRIVER_ROTATION_CHANGED), _DRIVER_ROTATION_ASOF
-    )
-    assert list(_DRIVER_PRIORITY) == expected, (
-        "committed _DRIVER_PRIORITY diverges from the reproducible "
-        f"rotation (first diff at index "
-        f"{next(i for i, (a, b) in enumerate(zip(_DRIVER_PRIORITY, expected)) if a != b) if list(_DRIVER_PRIORITY) != expected and any(a != b for a, b in zip(_DRIVER_PRIORITY, expected)) else len(expected)}); "
-        "re-run tools/rotation_helper.py and paste its full block"
-    )
-    # and it would have flagged an unrotated list: keeping last round's
-    # head (the r12 changed entries) in front while this round's
-    # changed-entry set differs is exactly the failure mode
-    hypothetical_unrotated = ["bucketed_colocated_join", "zorder_key_accounting"]
-    stale_head, _ = compute_rotation(hypothetical_unrotated, _DRIVER_ROTATION_ASOF)
-    assert stale_head != expected
 
 
 # ---------------------------------------------------------------------------

@@ -689,18 +689,15 @@ def test_expire_versions_removes_key_sidecars(spark, vt):
     """Round 11: merge_upsert records POINTERS to its own source data
     files (merge_keys.src_files) — no separate sidecar exists to GC,
     and expire keeps a surviving commit's key-source files exactly as
-    long as its manifest.  The LEGACY merge_keys.path parquet sidecar
-    (pre-round-11 tables) must still be GC'd with its manifest."""
-    import json as _json
-
+    long as its manifest."""
     vt.merge_upsert(
         _rows(spark, days=[1], score=50.0), keys=["device_id", "report_date"]
     )
     vt.merge_upsert(
         _rows(spark, days=[2], score=60.0), keys=["device_id", "report_date"]
     )
-    # new format: no keys dir, src_files recorded and part of the
-    # commit's own file list
+    # no keys dir, src_files recorded and part of the commit's own
+    # file list
     keys_dir = os.path.join(vt.log_dir, "keys")
     assert not os.path.isdir(keys_dir) or not os.listdir(keys_dir)
     m2 = vt._load_manifest(2)
@@ -708,19 +705,31 @@ def test_expire_versions_removes_key_sidecars(spark, vt):
     manifest_paths = {e["path"] for e in m2["files"]}
     assert set(m2["merge_keys"]["src_files"]) <= manifest_paths
 
-    # fabricate a LEGACY sidecar on the to-be-expired commit and check
-    # the old GC path still fires
-    legacy_rel = os.path.join("keys", "legacy-fixture")
-    spark.createDataFrame(
-        [("d1", dt.date(2024, 1, 1))], "device_id string, report_date date"
-    ).write.parquet(os.path.join(vt.log_dir, legacy_rel))
-    m2["merge_keys"] = {
-        "columns": ["device_id", "report_date"],
-        "path": legacy_rel,
-    }
+    vt.expire_versions(keep_last=1)
+    for p in vt._load_manifest(3)["merge_keys"]["src_files"]:
+        assert os.path.exists(os.path.join(vt.data_dir, p))
+    assert vt.read().count() == 6
+
+
+def test_legacy_key_sidecar_manifest_refuses_per_key_merge(spark, vt):
+    """A pre-round-11 manifest names a ``merge_keys.path`` sidecar and
+    no ``src_files``: it is not key-recorded, so a merge that needs its
+    keys refuses loudly instead of reading the sidecar."""
+    import json as _json
+
+    from datalakehouse_spark.versioned import MergeConflictError
+
+    keys = ["device_id", "report_date"]
+    day1 = dt.date(2024, 1, 1)
+    schema = "device_id string, report_date date, score double"
+    vt.create_branch("exp")
+    vt.merge_upsert(spark.createDataFrame([("dev0", day1, 1.0)], schema), keys=keys)
+    vt.merge_upsert(
+        spark.createDataFrame([("dev9", day1, 2.0)], schema), keys=keys, branch="exp"
+    )
+    m2 = vt._load_manifest(2)
+    m2["merge_keys"] = {"columns": keys, "path": os.path.join("keys", "legacy")}
     with open(vt._manifest_path(2), "w") as fh:
         _json.dump(m2, fh)
-
-    vt.expire_versions(keep_last=1)
-    assert not os.path.exists(os.path.join(vt.log_dir, legacy_rel))
-    assert vt.read().count() == 6
+    with pytest.raises(MergeConflictError):
+        vt.merge_branch("exp")

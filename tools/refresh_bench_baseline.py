@@ -31,7 +31,10 @@ longer in the run are dropped (they left the registry).
 Usage:
     python bench.py > bench_out.json   # or the driver's BENCH_r{N}.json
     python tools/refresh_bench_baseline.py bench_out.json \
-        [--waive entry]... [--note "why"]
+        [--waive entry]... [--tighten entry]... [--note "why"]
+
+``--tighten`` names the round's code-changed entries: only they may
+tighten, every other entry keeps its reference (see ``ratchet``).
 
 **Host rebase** (round 14, VERDICT r13 #1): when the per-entry minima
 decouple from the current host (r13 evidence: four ambient-clean
@@ -203,10 +206,10 @@ def main() -> None:
         "silently absorb an entry-specific regression",
     )
     ap.add_argument(
-        "--changed-only", action="store_true",
-        help="restrict tightening to the registry's _DRIVER_ROTATION_CHANGED "
-        "set (this round's code-changed entries) — ADVICE r16: untouched "
-        "entries must not ratchet tighter on one lucky minimum",
+        "--tighten", action="append", default=[],
+        help="restrict tightening to the named entries (repeat per entry: "
+        "the round's code-changed entries) — untouched entries must not "
+        "ratchet tighter on one lucky minimum",
     )
     ap.add_argument("--note", default="")
     args = ap.parse_args()
@@ -260,14 +263,7 @@ def main() -> None:
     if len(args.run_json) != 1:
         raise SystemExit("ratchet mode takes exactly one run file")
     new_run = _read_run(args.run_json[0])
-    tighten_only = None
-    if args.changed_only:
-        import sys
-
-        sys.path.insert(0, REPO)
-        from datalakehouse_spark.registry import _DRIVER_ROTATION_CHANGED
-
-        tighten_only = set(_DRIVER_ROTATION_CHANGED)
+    tighten_only = set(args.tighten) if args.tighten else None
     out = ratchet(old, new_run, set(args.waive), tighten_only=tighten_only)
     if args.note:
         out["note"] = args.note
