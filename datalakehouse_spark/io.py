@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datalakehouse_spark.session import PARALLEL_LISTING_THRESHOLD
+
 TABLES = (
     "region",
     "nation",
@@ -94,6 +96,11 @@ def _ensure_session_contract(spark: SparkSession) -> None:
     they can be set per-session without restarting the JVM.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # no Spark job to list a version's files (see session.py)
+    spark.conf.set(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold",
+        PARALLEL_LISTING_THRESHOLD,
+    )
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     _ship_package(spark)
 

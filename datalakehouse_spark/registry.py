@@ -112,6 +112,8 @@ def register(
     min_of_3: bool = False,
 ):
     def deco(fn: QueryFn):
+        if name in REGISTRY:
+            raise ValueError(f"registry entry {name!r} is registered twice")
         REGISTRY[name] = QuerySpec(fn, sql, doc, eager, builds, min_of_3)
         return fn
 

@@ -28,6 +28,18 @@ REFERENCE_TZ = "America/Mexico_City"
 #: Timezone used for oracle-comparable queries (DuckDB is TZ-naive).
 ORACLE_TZ = "UTC"
 
+#: ``spark.sql.sources.parallelPartitionDiscovery.threshold``: above
+#: this many paths Spark lists files with a Spark job (one task per
+#: path) instead of on the driver.  ``get_spark`` always runs
+#: ``local[N]``, where that "parallel" listing is executor threads in
+#: the same JVM calling stat on the same local disk: it adds a job to
+#: every read of a VersionedTable version of more than 32 files (the
+#: default) and parallelizes nothing.  Set out of reach, a version is
+#: planned from its manifest's file list with no job.  On an object
+#: store, where a listing call is a network round trip, the default is
+#: the right one.
+PARALLEL_LISTING_THRESHOLD = str(2**31 - 1)
+
 
 def default_parallelism() -> int:
     env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -60,6 +72,10 @@ def get_spark(
         # type for; read the physical int64 as long and decode explicitly
         # (datalakehouse_spark.io normalizes it).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            PARALLEL_LISTING_THRESHOLD,
+        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")

@@ -17,8 +17,13 @@ table state per version:
   is a single atomic rename — readers never observe a half-written
   version.
 - ``read(version=...)`` hands Spark the manifest's file list (time
-  travel); ``rollback()`` is a new commit that re-points at an old
-  file list; ``expire_versions()`` is snapshot GC (the
+  travel) with no Spark job: the session contract turns off Spark's
+  job-based file listing (``session.PARALLEL_LISTING_THRESHOLD``), and
+  the manifest's recorded schema skips schema inference.  ``read()``
+  keeps its last DataFrame in a one-entry head-read slot, so repeated
+  reads of an unchanged head are planned once.  ``rollback()`` is a
+  new commit that re-points at an old file list;
+  ``expire_versions()`` is snapshot GC (the
   ``expire_snapshots`` / ``remove_orphan_files`` procedures,
   cleanup.sql:19-31).
 - Branches are named refs onto the commit DAG (``_log/refs.json``):
@@ -148,6 +153,8 @@ class VersionedTable:
         #: that consumes them, so an orphan ``_stage-*`` dir marks a write
         #: that never committed (swept by ``expire_versions``)
         self._stages: list[str] = []
+        #: ``read()``'s head-read slot: (key, DataFrame) of the last read
+        self._read_slot: tuple[tuple, DataFrame] | None = None
 
     # -- commit log ---------------------------------------------------------
 
@@ -882,23 +889,39 @@ class VersionedTable:
         manifest-level pruning that replaces directory listing at
         scale.  ``merge_schema=True`` reconciles commits written under
         evolved schemas (add-column evolution): files from older
-        commits surface NULL for columns added later."""
+        commits surface NULL for columns added later.
+
+        The head-read slot: the last DataFrame built here is kept, keyed
+        by (resolved version, ``partition_filter``, ``merge_schema``),
+        and returned again for the same key, so serving reads of an
+        unchanged head skip the manifest parse and Spark's file-index
+        build.  A version's manifest and data files never change, so its
+        DataFrame never goes stale; a hit still checks that the manifest
+        exists (an expired version raises), and ``expire_versions``
+        empties the slot.  ``registry.session_memo`` cannot carry this:
+        it is keyed by fixture directory and never evicts, while a stream
+        commits a new version on every trigger — one slot holds only the
+        latest."""
         v = self.current_version(ref) if version is None else version
-        manifest = self._load_manifest(v)
-        entries = manifest["files"]
-        if partition_filter:
-            allowed = {
-                k: {_canon_value(x) for x in vs}
-                for k, vs in partition_filter.items()
-            }
-            entries = [
-                e
-                for e in entries
-                if all(e["partition"].get(k) in vs for k, vs in allowed.items())
-            ]
-        return self._read_files(
+        allowed = {
+            k: frozenset(_canon_value(x) for x in vs)
+            for k, vs in (partition_filter or {}).items()
+        }
+        key = (v, frozenset(allowed.items()), merge_schema)
+        slot = self._read_slot
+        if slot and slot[0] == key and os.path.exists(self._manifest_path(v)):
+            return slot[1]
+        manifest = self._load_manifest(v)  # raises for an expired version
+        entries = [
+            e
+            for e in manifest["files"]
+            if all(e["partition"].get(k) in vs for k, vs in allowed.items())
+        ]
+        df = self._read_files(
             entries, merge_schema=merge_schema, schema_json=manifest.get("schema")
         )
+        self._read_slot = (key, df)
+        return df
 
     def head_files(self, branch: str = DEFAULT_BRANCH) -> list[dict]:
         """Manifest entries ({path, partition}) of ``branch``'s head;
@@ -1006,6 +1029,7 @@ class VersionedTable:
         writes that never committed (expire_snapshots +
         remove_orphan_files).  Single-writer: never run it beside a
         write in progress."""
+        self._read_slot = None
         keep_versions: set[int] = set()
         for head in self.refs().values():
             keep_versions.update(self._ancestry(head)[:keep_last])

@@ -29,6 +29,21 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def last_job_id(spark):
+    """() -> highest job id the status store has seen, whatever thread
+    or job group ran it (listener bus drained first so the count is
+    settled): a job-id window counts every Spark job a call ran."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def last():
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)  # newest first
+        return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+    return last
+
+
+@pytest.fixture(scope="session")
 def sf_small():
     return SF_SMALL
 

@@ -3,7 +3,9 @@ the per-entry reference median, only at the baseline's own scale
 factor, new entries exempt."""
 
 import sys, os
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TOOLS_DIR = os.path.join(REPO_ROOT, "tools")
+sys.path.insert(0, REPO_ROOT)
 
 from bench import find_regressions, machine_factor
 
@@ -76,9 +78,7 @@ def test_sf_mismatch_and_missing_baseline_disable_gate():
 
 
 def test_baseline_ratchet_never_loosens():
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS_DIR)
     from refresh_bench_baseline import ratchet
 
     old = {"sf": 0.1, "queries": {"a": 1.0, "b": 2.0, "gone": 5.0}}
@@ -96,9 +96,7 @@ def test_baseline_ratchet_tighten_only_freezes_untouched_entries():
     reference must not move on a lucky fast run (and still never
     loosens); touched entries ratchet normally; new entries enter at
     their measured median either way."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS_DIR)
     from refresh_bench_baseline import ratchet
 
     old = {"sf": 0.1, "queries": {"touched": 2.0, "untouched": 1.0}}
@@ -118,9 +116,7 @@ def test_baseline_ratchet_tighten_only_freezes_untouched_entries():
 
 
 def test_baseline_ratchet_waiver_is_explicit_and_recorded():
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS_DIR)
     from refresh_bench_baseline import ratchet
 
     old = {"sf": 0.1, "queries": {"a": 1.0}}
@@ -139,9 +135,7 @@ def test_rebase_outlier_audit_and_zero_guard():
     new/old ratio decouples from the fleet median instead of silently
     grandfathering an entry-specific regression; (2) an archived 0.0
     reference (3-decimal rounding of a sub-ms entry) must not divide."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS_DIR)
     from refresh_bench_baseline import rebase_outliers, rebase_ratios
 
     # fleet drifts uniformly ~1.5x, but 'hot' runs 6x with a big

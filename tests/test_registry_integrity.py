@@ -11,6 +11,7 @@ from datalakehouse_spark.registry import (
     _load_extensions,
     oracle_sql,
     queries,
+    register,
 )
 
 _load_extensions()
@@ -21,6 +22,16 @@ def test_driver_contract_iterates_registration_order():
     sweep do: REGISTRY's registration order, with no other name list."""
     assert list(queries()) == list(REGISTRY)
     assert list(oracle_sql()) == [n for n, s in REGISTRY.items() if s.sql is not None]
+
+
+def test_duplicate_registration_fails_fast():
+    """A second ``@register`` of a taken name raises, naming it, and
+    leaves the first entry in place."""
+    name = next(iter(REGISTRY))
+    first = REGISTRY[name]
+    with pytest.raises(ValueError, match=name):
+        register(name, None, "duplicate")(lambda spark, sf: None)
+    assert REGISTRY[name] is first
 
 
 def test_every_entry_has_description():
@@ -64,16 +75,7 @@ def test_oracle_sql_parses_in_duckdb(name):
     con.close()
 
 
-def _last_job_id(sc) -> int:
-    """Highest job id the status store has seen, whatever thread or job
-    group ran it (listener bus drained first so the count is settled)."""
-    jsc = sc._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    jobs = jsc.statusStore().jobsList(None)  # newest first
-    return jobs.head().jobId() if jobs.nonEmpty() else -1
-
-
-def test_eager_build_class_is_exact(spark):
+def test_eager_build_class_is_exact(spark, last_job_id):
     """The lazy-build contract, pinned BOTH ways: no entry without
     ``QuerySpec.eager`` may run a Spark job at build time (an eager
     collect/count/write sneaking into a query entry is a driver-side
@@ -98,13 +100,12 @@ def test_eager_build_class_is_exact(spark):
     ).split():
         load_table(spark, sf, t)
 
-    sc = spark.sparkContext
     observed = set()
     for name, spec in REGISTRY.items():
         clear_memos()
-        before = _last_job_id(sc)
+        before = last_job_id()
         spec.fn(spark, sf)
-        if _last_job_id(sc) > before:
+        if last_job_id() > before:
             observed.add(name)
     eager = {n for n, s in REGISTRY.items() if s.eager}
     assert observed - eager == set(), (

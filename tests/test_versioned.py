@@ -733,3 +733,59 @@ def test_legacy_key_sidecar_manifest_refuses_per_key_merge(spark, vt):
         _json.dump(m2, fh)
     with pytest.raises(MergeConflictError):
         vt.merge_branch("exp")
+
+
+@pytest.fixture()
+def vt40(spark, tmp_path):
+    """An unpartitioned table whose head holds 40 files: above Spark's
+    default parallel-listing threshold of 32 paths."""
+    t = VersionedTable(spark, str(tmp_path / "vt40"))
+    t.create(spark.range(0, 400, 1, numPartitions=40))
+    assert len(t.head_files()) == 40
+    return t
+
+
+def test_head_read_runs_no_spark_job(spark, vt40, last_job_id):
+    before = last_job_id()
+    df = vt40.read()
+    assert last_job_id() == before
+    assert df.count() == 400
+
+
+def test_unchanged_head_is_planned_once(spark, vt40):
+    head = vt40.read()
+    assert vt40.read() is head
+    assert vt40.read(version=vt40.current_version()) is head
+    # the merge flag is part of the key
+    merged = vt40.read(merge_schema=True)
+    assert merged is not head
+    assert vt40.read(merge_schema=True) is merged
+
+
+def test_head_read_after_append_sees_new_version(spark, vt40):
+    first = vt40.read()
+    vt40.append(spark.range(400, 410, 1, numPartitions=1))
+    second = vt40.read()
+    assert second is not first
+    assert second.count() == 410
+    assert first.count() == 400  # the old version's DataFrame is unchanged
+
+
+def test_expired_version_in_slot_still_raises(spark, vt40):
+    v1 = vt40.current_version()
+    vt40.read(version=v1)
+    vt40.append(spark.range(400, 410, 1, numPartitions=1))
+    # expired by another handle on the same table: this handle's slot
+    # still holds v1, and the hit's manifest check must refuse it
+    VersionedTable(spark, vt40.path).expire_versions(keep_last=1)
+    with pytest.raises(ValueError):
+        vt40.read(version=v1)
+    # expired through this handle: the slot is emptied
+    v2 = vt40.current_version()
+    vt40.read(version=v2)
+    vt40.append(spark.range(410, 420, 1, numPartitions=1))
+    vt40.expire_versions(keep_last=1)
+    assert vt40._read_slot is None
+    with pytest.raises(ValueError):
+        vt40.read(version=v2)
+    assert vt40.read().count() == 420
