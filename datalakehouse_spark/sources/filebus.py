@@ -63,6 +63,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from datalakehouse_spark import records
+
 #: Kafka source wire schema — what readStream.format("kafka") yields.
 KAFKA_WIRE_SCHEMA = StructType(
     [
@@ -201,10 +203,12 @@ class FileBusStreamReader(DataSourceStreamReader):
     committed records.  Three defenses, layered:
 
     * ``commit(end)`` persists committed offsets broker-side
-      (``<topic>/_consumer_offsets/<group>.json``, atomic rename) —
-      the literal Kafka group-offsets store; a fresh reader instance
-      seeds its base from it (group id from ``kafka.group.id``,
-      Kafka's own option key);
+      (``<topic>/_consumer_offsets/<group>.<seq>.json``, a numbered
+      record created under a fresh name, never a replacing rename: see
+      :mod:`datalakehouse_spark.records`) — the literal Kafka
+      group-offsets store; a fresh reader instance seeds its base from
+      the newest record (group id from ``kafka.group.id``, Kafka's own
+      option key);
     * every offset dict Spark hands us (``partitions`` start/end,
       ``commit`` end) raises an in-memory floor, covering the
       restart-with-uncommitted-batch replay where ``partitions`` runs
@@ -250,26 +254,25 @@ class FileBusStreamReader(DataSourceStreamReader):
 
     # -- broker-side committed-offset store (Kafka __consumer_offsets) --
 
-    def _offsets_path(self) -> str:
-        return os.path.join(
-            self.root, self.topic, "_consumer_offsets", f"{self.group}.json"
-        )
+    def _offsets_dir(self) -> str:
+        return os.path.join(self.root, self.topic, "_consumer_offsets")
 
     def _load_committed(self) -> dict[str, int]:
         try:
-            with open(self._offsets_path(), encoding="utf-8") as fh:
-                return {str(k): int(v) for k, v in json.load(fh).items()}
+            _, rec = records.latest(self._offsets_dir(), f"{self.group}.")
+            return {str(k): int(v) for k, v in (rec or {}).items()}
         except (OSError, ValueError):
             return {}
 
     def _store_committed(self, end: dict) -> None:
-        path = self._offsets_path()
+        d, prefix = self._offsets_dir(), f"{self.group}."
+        offs = {str(k): int(v) for k, v in end.items()}
         try:
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            tmp = path + ".tmp"
-            with open(tmp, "w", encoding="utf-8") as fh:
-                json.dump({str(k): int(v) for k, v in end.items()}, fh)
-            os.replace(tmp, path)  # atomic on POSIX
+            os.makedirs(d, exist_ok=True)
+            seq = max(records.sequence_numbers(os.listdir(d), prefix), default=0) + 1
+            while not records.create(d, prefix, seq, offs):
+                seq += 1
+            records.remove_below(d, prefix, seq)
         except OSError:
             pass  # the store is an optimization; the checkpoint is truth
 
@@ -403,4 +406,5 @@ def register_filebus(spark) -> None:
     from pyspark import cloudpickle
 
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    cloudpickle.register_pickle_by_value(records)
     spark.dataSource.register(FileBusDataSource)

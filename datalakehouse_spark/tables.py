@@ -34,7 +34,6 @@ import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from datalakehouse_spark.versioned import VersionedTable
 
@@ -125,8 +124,12 @@ class ManagedTable:
     def delete_where(self, predicate) -> None:
         """Retention DELETE (M1) with SQL semantics: only rows where the
         predicate is TRUE are deleted — rows where it evaluates NULL are
-        KEPT.  Parquet backend: a copy-on-write commit that rewrites only
-        the partitions holding matching rows."""
+        KEPT.  Parquet backend: a deterministic predicate on partition
+        columns only (the retention shape, ``day < cutoff``) is a
+        metadata-only commit that drops the matching partitions' files,
+        with no Spark job; any other predicate is a copy-on-write commit
+        that rewrites only the partitions holding matching rows (see
+        :meth:`VersionedTable.delete_where`)."""
         if self._catalog is not None:
             if not isinstance(predicate, str):
                 # Falling through to the parquet path would delete from
@@ -203,23 +206,32 @@ class ManagedTable:
 
         - catalog backend: one ``ANALYZE TABLE`` — the catalog persists
           rowCount/sizeInBytes for the CBO.
-        - parquet backend: with ``register_as``, the head version is
-          registered as a session-catalog parquet table and ANALYZEd,
-          so joins planned THROUGH that table name get CBO row counts in
-          this session (verified in tests via DESC EXTENDED
+        - parquet backend: the returned row and per-partition counts
+          come from metadata, with no Spark job: the head files' parquet
+          footer row counts (pyarrow, in this process), summed per
+          partition and keyed through
+          :meth:`VersionedTable.partition_relation`, so the keys carry
+          the partition columns' read dtypes, as a ``groupBy`` over the
+          scan would give them.  With ``register_as``, the head version
+          is also registered as a session-catalog parquet table and
+          ANALYZEd, so joins planned THROUGH that table name get CBO row
+          counts in this session (verified in tests via DESC EXTENDED
           statistics).  The table's location holds hard links to the
           head's files only, so it reads — and counts — exactly the
-          version current at this call.  The dict of partition-level
-          counts is returned either way.
+          version current at this call.
         """
         if self._catalog is not None:
             self._catalog.analyze()
             # stats live in the catalog; nothing to recount locally
             return {"table": self.catalog_table, "analyzed": True}
+        import pyarrow.parquet as pq
+
+        version = self._vt.current_version()
+        files = self._vt._load_manifest(version)["files"]
         if register_as is not None:
             snap = os.path.join(self._vt.path, "_registered", register_as)
             shutil.rmtree(snap, ignore_errors=True)
-            for e in self._vt.head_files():
+            for e in files:
                 dest = os.path.join(snap, e["path"])
                 os.makedirs(os.path.dirname(dest), exist_ok=True)
                 os.link(os.path.join(self._vt.data_dir, e["path"]), dest)
@@ -229,13 +241,16 @@ class ManagedTable:
             )
             self.spark.sql(f"REFRESH TABLE {register_as}")
             self.spark.sql(f"ANALYZE TABLE {register_as} COMPUTE STATISTICS")
-        df = self.read()
-        stats = {"rows": df.count()}
+        counts: dict[tuple, int] = {}
+        for e in files:
+            part = tuple(e["partition"].get(k) for k in self.partition_by)
+            path = os.path.join(self._vt.data_dir, e["path"])
+            counts[part] = counts.get(part, 0) + pq.read_metadata(path).num_rows
+        stats = {"rows": sum(counts.values())}
         if self.partition_by:
-            stats["partitions"] = {
-                tuple(r[k] for k in self.partition_by): r["cnt"]
-                for r in df.groupBy(*self.partition_by)
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            }
+            typed = {}
+            if files:
+                rel, tuples = self._vt.partition_relation(version)
+                typed = {tuples[r[0]]: tuple(r[1:]) for r in rel.collect()}
+            stats["partitions"] = {typed[p]: n for p, n in counts.items() if n}
         return stats

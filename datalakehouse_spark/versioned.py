@@ -13,9 +13,12 @@ table state per version:
   never deletes or rewrites existing ones (copy-on-write at partition
   granularity, exactly Iceberg COW).
 - A commit is one JSON manifest under ``_log/`` listing the files that
-  constitute that version, each with its partition values.  Committing
-  is a single atomic rename — readers never observe a half-written
-  version.
+  constitute that version, each with its partition values, plus the
+  next numbered refs record.  No commit step replaces an existing
+  file: both are published whole under a fresh name by ``os.link``
+  (:mod:`datalakehouse_spark.records`), so readers never observe a
+  half-written version, and a commit never pays the data flush ext4
+  runs before a rename that replaces a file.
 - ``read(version=...)`` hands Spark the manifest's file list (time
   travel) with no Spark job: the session contract turns off Spark's
   job-based file listing (``session.PARALLEL_LISTING_THRESHOLD``), and
@@ -26,7 +29,9 @@ table state per version:
   ``expire_versions()`` is snapshot GC (the
   ``expire_snapshots`` / ``remove_orphan_files`` procedures,
   cleanup.sql:19-31).
-- Branches are named refs onto the commit DAG (``_log/refs.json``):
+- Branches are named refs onto the commit DAG, kept as numbered,
+  immutable records ``_log/refs-<seq>.json`` (the newest is the state;
+  ``expire_versions`` deletes superseded ones):
   ``create_branch`` points a new name at any version, writes carry a
   ``branch=`` and advance only that ref, and ``merge_branch``
   fast-forwards when possible or creates a real THREE-WAY merge commit
@@ -40,6 +45,10 @@ table state per version:
   delta.
 - ``compact()`` rewrites small files as a ``replace`` commit
   (``rewrite_data_files``), which changes no rows.
+- Metadata questions are answered from the manifest:
+  :meth:`VersionedTable.partition_relation` is a job-free local
+  relation with one typed row per partition, so a partition-aligned
+  ``delete_where`` is a metadata-only commit, as in Iceberg.
 
 Scale posture: the manifest records partition values PER FILE, so
 partition pruning happens driver-side on the file list before Spark
@@ -48,9 +57,15 @@ prunes too (no directory listing of a 100 TB table; the manifest IS the
 index).  Reads use ``basePath`` so hive-style partition columns are
 recovered from the kept directory layout.
 
-Single-writer assumption: commit ordering is monotonic version numbers;
-a real multi-writer deployment gets its commit protocol from the
-catalog (Nessie/Iceberg optimistic locking).  Documented, not hidden.
+Concurrent writers: a commit names the branch head it was derived
+from, and advancing the branch is a compare-and-swap on the refs
+record number.  A commit whose base is no longer the head — another
+handle or process committed first — raises
+:class:`CommitConflictError` and leaves the other writer's version
+intact, so an update is never lost silently.  The writer re-runs the
+operation; rebasing automatically (Iceberg's retry on a moved base) is
+not done here, and ``expire_versions`` must still not run beside a
+write in progress.
 """
 
 from __future__ import annotations
@@ -65,10 +80,19 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datalakehouse_spark import records
+
 #: How many overlapping key tuples a MergeConflictError names in its
 #: message / ``keys`` payload (the full overlap may be arbitrarily
 #: large; the error shows a bounded, deterministic sample).
 _CONFLICT_KEY_SAMPLE = 20
+
+
+class CommitConflictError(ValueError):
+    """A commit's branch head moved after the writer read it (another
+    handle or process committed first).  Nothing of this commit is
+    visible: the other writer's version stands, and this one's data
+    files are orphans for ``expire_versions``."""
 
 
 class MergeConflictError(ValueError):
@@ -163,8 +187,8 @@ class VersionedTable:
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self.log_dir, f"v{version:05d}.json")
 
-    def _refs_path(self) -> str:
-        return os.path.join(self.log_dir, "refs.json")
+    #: name prefix of the numbered branch-ref records in ``_log/``
+    _REFS = "refs-"
 
     def _latest_version(self) -> int:
         """Highest allocated version number across ALL branches."""
@@ -177,21 +201,53 @@ class VersionedTable:
         ]
         return max(versions, default=0)
 
+    def _refs_record(self) -> tuple[int, dict[str, int]]:
+        """(record number, branch -> head) of the newest refs record.
+        Before the first record: number 0, and ``main`` at the newest
+        manifest (a table whose first commit crashed between manifest
+        and ref), or a ``refs.json`` written before refs records
+        existed."""
+        seq, refs = records.latest(self.log_dir, self._REFS)
+        if refs is not None:
+            return seq, refs
+        legacy = os.path.join(self.log_dir, "refs.json")
+        if os.path.exists(legacy):
+            with open(legacy) as fh:
+                return 0, json.load(fh)
+        latest = self._latest_version()
+        return 0, ({self.DEFAULT_BRANCH: latest} if latest else {})
+
     def refs(self) -> dict[str, int]:
         """branch name -> head version."""
-        p = self._refs_path()
-        if os.path.exists(p):
-            with open(p) as fh:
-                return json.load(fh)
-        latest = self._latest_version()
-        return {self.DEFAULT_BRANCH: latest} if latest else {}
+        return self._refs_record()[1]
 
-    def _write_refs(self, refs: dict[str, int]) -> None:
-        os.makedirs(self.log_dir, exist_ok=True)
-        tmp = self._refs_path() + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(refs, fh)
-        os.rename(tmp, self._refs_path())
+    def _advance_ref(
+        self,
+        branch: str,
+        expected: int | None,
+        new: int,
+        snapshot: tuple[int, dict[str, int]] | None = None,
+    ) -> None:
+        """Move ``branch`` from head ``expected`` (None: the branch must
+        not exist yet) to ``new`` by creating the next refs record — a
+        compare-and-swap: a record number another writer took first is
+        re-read, and the swap still succeeds if that writer moved only
+        other branches.  Raises :class:`CommitConflictError` when
+        ``branch`` is no longer at ``expected``.  ``snapshot`` is the
+        (number, refs) to start from, read before the caller's manifest
+        existed."""
+        seq, refs = snapshot or self._refs_record()
+        while True:
+            head = refs.get(branch) if expected is None else refs.get(branch, 0)
+            if head != expected:
+                raise CommitConflictError(
+                    f"branch {branch!r} is at version {head}, not {expected}: "
+                    f"another writer committed first; v{new} was not applied"
+                )
+            moved = {**refs, branch: new}
+            if records.create(self.log_dir, self._REFS, seq + 1, moved):
+                return
+            seq, refs = self._refs_record()
 
     def current_version(self, branch: str = DEFAULT_BRANCH) -> int:
         """Head version of ``branch`` (0 = no commits)."""
@@ -216,10 +272,17 @@ class VersionedTable:
         schema_json: str | None = None,
     ) -> int:
         """Write the manifest for the next version and advance the
-        branch ref; the manifest rename is the atomic commit point.
-        Version numbers are table-global; ``parent`` pointers form the
-        commit DAG the branches live on.  ``extra`` carries operation
-        metadata (merge_upsert key sets, merge parents) the three-way
+        branch ref.  No step replaces an existing file: the manifest
+        takes the next free version number by exclusive creation, and
+        the branch moves by creating the next refs record, which is the
+        commit point (:meth:`_advance_ref`).  A commit whose ``parent``
+        is no longer the head of ``branch`` — another writer committed
+        since this one read it — raises :class:`CommitConflictError` and
+        removes its own manifest, so a lost update is loud and the other
+        writer's version stays intact.  Version numbers are
+        table-global; ``parent`` pointers form the commit DAG the
+        branches live on.  ``extra`` carries operation metadata
+        (merge_upsert key sets, merge parents) the three-way
         ``merge_branch`` consumes.
 
         ``schema_json`` (round 17, guide §5 driver work): the version's
@@ -231,11 +294,9 @@ class VersionedTable:
         to carry this schema (same rule Iceberg's manifest schema
         follows); absent → readers fall back to inference, which keeps
         schema-evolution commits behaving exactly as before."""
-        version = self._latest_version() + 1
         os.makedirs(self.log_dir, exist_ok=True)
-        tmp = self._manifest_path(version) + f".tmp-{uuid.uuid4().hex[:8]}"
+        snapshot = self._refs_record()
         manifest = {
-            "version": version,
             "parent": parent,
             "branch": branch,
             "operation": operation,
@@ -243,12 +304,16 @@ class VersionedTable:
             **({"schema": schema_json} if schema_json else {}),
             **(extra or {}),
         }
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.rename(tmp, self._manifest_path(version))
-        refs = self.refs()
-        refs[branch] = version
-        self._write_refs(refs)
+        version = self._latest_version() + 1
+        while not records.create_exclusive(
+            self._manifest_path(version), json.dumps({"version": version, **manifest})
+        ):
+            version += 1  # another writer took the number
+        try:
+            self._advance_ref(branch, parent, version, snapshot)
+        except CommitConflictError:
+            os.remove(self._manifest_path(version))
+            raise
         for stage in self._stages:
             shutil.rmtree(stage, ignore_errors=True)
         self._stages.clear()
@@ -285,13 +350,11 @@ class VersionedTable:
     def create_branch(self, name: str, from_version: int | None = None) -> int:
         """Point a new branch at ``from_version`` (default: main head).
         Zero data is copied — a branch is a ref into the commit DAG."""
-        refs = self.refs()
-        if name in refs:
+        if name in self.refs():
             raise ValueError(f"branch {name!r} already exists")
         base = self.current_version() if from_version is None else from_version
         self._load_manifest(base)  # must exist
-        refs[name] = base
-        self._write_refs(refs)
+        self._advance_ref(name, None, base)
         return base
 
     def merge_branch(self, name: str, into: str = DEFAULT_BRANCH) -> int:
@@ -328,8 +391,7 @@ class VersionedTable:
         refs = self.refs()
         head, target = refs[name], refs.get(into, 0)
         if target == 0 or target in self._ancestry(head):
-            refs[into] = head  # fast-forward
-            self._write_refs(refs)
+            self._advance_ref(into, target, head)  # fast-forward
             return head
         if head in self._ancestry(target):
             return target  # already merged; nothing to do
@@ -795,7 +857,15 @@ class VersionedTable:
 
     def delete_where(self, predicate, branch: str = DEFAULT_BRANCH) -> int:
         """Copy-on-write DELETE with SQL semantics (predicate-NULL rows
-        are kept); files in untouched partitions carry over untouched."""
+        are kept); files in untouched partitions carry over untouched.
+
+        A deterministic predicate that reads partition columns only is
+        answered from the manifest, as Iceberg runs a partition-aligned
+        DELETE: it is evaluated on :meth:`partition_relation`, and the
+        commit drops the matching partitions' files — no data file is
+        read or written, and no Spark job runs.  Any other predicate
+        scans the version and rewrites the partitions holding matching
+        rows."""
         cur = self.current_version(branch)
         if cur == 0:
             return 0
@@ -804,6 +874,12 @@ class VersionedTable:
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         pred_true = F.coalesce(pred, F.lit(False))
         if self.partition_by:
+            hit = self._partitions_matching(cur, pred_true)
+            if hit is not None:
+                kept = [e for e in prev if self._partition_of(e) not in hit]
+                return self._commit(
+                    "delete", kept, cur, branch, schema_json=prev_schema
+                )
             touched_vals = {
                 tuple(_canon_value(r[k]) for k in self.partition_by)
                 for r in self._read_files(prev, schema_json=prev_schema)
@@ -839,6 +915,55 @@ class VersionedTable:
         return self._commit(
             "delete", kept_files + new_files, cur, branch, schema_json=uniform
         )
+
+    def _partitions_matching(self, version: int, pred) -> set[tuple] | None:
+        """The partition tuples (manifest form) of ``version`` on which
+        ``pred`` is true, or None when ``pred`` is not a deterministic
+        function of the partition columns alone.  The check analyzes
+        ``pred`` against the version's scan (no job), so a predicate the
+        table cannot resolve raises here as the scan would."""
+        scan = self.read(version=version).where(pred)
+        cond = scan._jdf.queryExecution().analyzed().condition()
+        refs = cond.references().toSeq()
+        names = {refs.apply(i).name() for i in range(refs.size())}
+        if not cond.deterministic() or not names <= set(self.partition_by):
+            return None
+        rel, tuples = self.partition_relation(version)
+        rows = rel.where(pred).select(self._PART_IDX).collect()
+        return {tuples[r[0]] for r in rows}
+
+    #: index column of :meth:`partition_relation`
+    _PART_IDX = "_partition_idx"
+
+    def partition_relation(self, version: int) -> tuple[DataFrame, list[tuple]]:
+        """One row per partition tuple of ``version``, for answering
+        metadata questions from the manifest: a local relation built
+        from an Arrow table, so it plans as a ``LocalRelation`` and
+        filtering or collecting it runs no Spark job, whatever the
+        session's Arrow setting.  Its partition columns carry the dtypes
+        a read of the version infers (a string column cast to each), so
+        a predicate or a typed key behaves as on the scan, NULL
+        partitions included.  Returns the relation and the manifest-form
+        (decoded string) tuples its ``_partition_idx`` column indexes."""
+        import pyarrow as pa
+        from pyspark.sql.types import NullType
+
+        schema = self.read(version=version).schema
+        files = self._load_manifest(version)["files"]
+        tuples = list(dict.fromkeys(self._partition_of(e) for e in files))
+        columns = {self._PART_IDX: pa.array(range(len(tuples)), pa.int64())}
+        for i, c in enumerate(self.partition_by):
+            columns[c] = pa.array([t[i] for t in tuples], pa.string())
+        rel = self.spark.createDataFrame(pa.table(columns))
+        typed = [
+            (
+                F.lit(None)
+                if isinstance(schema[c].dataType, NullType)
+                else F.col(c).cast(schema[c].dataType)
+            ).alias(c)
+            for c in self.partition_by
+        ]
+        return rel.select(self._PART_IDX, *typed), tuples
 
     def rollback(self, version: int, branch: str = DEFAULT_BRANCH) -> int:
         """Re-point the table at an older version's file list (Iceberg
@@ -1024,11 +1149,12 @@ class VersionedTable:
     def expire_versions(self, keep_last: int = 1) -> dict:
         """Snapshot GC: keep the newest ``keep_last`` commits of every
         branch (walking each branch's parent chain), drop all other
-        manifests, then delete data files referenced by no surviving
-        manifest, and the ``_stage-*`` dirs and ``_log`` temp files of
-        writes that never committed (expire_snapshots +
-        remove_orphan_files).  Single-writer: never run it beside a
-        write in progress."""
+        manifests and superseded refs records, then delete data files
+        referenced by no surviving manifest, and the ``_stage-*`` dirs
+        and ``_log`` temp files of writes that never committed
+        (expire_snapshots + remove_orphan_files).  Never run it beside
+        a write in progress: it deletes that write's stage dir and
+        files."""
         self._read_slot = None
         keep_versions: set[int] = set()
         for head in self.refs().values():
@@ -1058,7 +1184,9 @@ class VersionedTable:
                     shutil.rmtree(entry.path)
                     removed_stages.append(entry.path)
         if os.path.isdir(self.log_dir):
-            # manifest / refs temp files of commits that never renamed
+            # superseded refs records, and the temp files of manifests /
+            # refs records a crashed commit never linked
+            records.remove_below(self.log_dir, self._REFS, self._refs_record()[0])
             for entry in os.scandir(self.log_dir):
                 if ".tmp-" in entry.name:
                     os.remove(entry.path)

@@ -356,18 +356,17 @@ def test_reader_holding_old_version_survives_delete(spark, table):
     assert table.read().count() == 8
 
 
-def _fail_commit_rename(monkeypatch):
-    """Make the first rename of anything but a data file raise: the
-    commit point of a table write."""
-    real = os.rename
+def _fail_commit_link(monkeypatch):
+    """Make the first ``os.link`` raise: a table write's first link
+    publishes its manifest, the start of its commit (manifests and refs
+    records are linked to fresh names; data files are renamed)."""
+    real = os.link
 
-    def rename(src, dst):
-        if not str(dst).endswith(".parquet"):
-            monkeypatch.setattr(os, "rename", real)
-            raise OSError("injected crash at commit")
-        return real(src, dst)
+    def link(src, dst):
+        monkeypatch.setattr(os, "link", real)
+        raise OSError("injected crash at commit")
 
-    monkeypatch.setattr(os, "rename", rename)
+    monkeypatch.setattr(os, "link", link)
 
 
 @pytest.mark.parametrize("op", ["delete_where", "compact"])
@@ -389,7 +388,7 @@ def test_crash_at_commit_keeps_previous_version(spark, tmp_path, monkeypatch, op
         }
 
     files_before = on_disk()
-    _fail_commit_rename(monkeypatch)
+    _fail_commit_link(monkeypatch)
     with pytest.raises(OSError, match="injected"):
         if op == "delete_where":
             t.delete_where(F.col("report_date") < F.lit(dt.date(2024, 1, 2)))
@@ -402,3 +401,88 @@ def test_crash_at_commit_keeps_previous_version(spark, tmp_path, monkeypatch, op
     assert on_disk() == files_before
     assert not [f for f in os.listdir(os.path.join(t.path, "_log")) if ".tmp-" in f]
     assert sorted(map(tuple, t.read().collect())) == before
+
+
+# -- partition-aligned DML answered from the manifest ----------------------
+
+#: partition dtype -> (values, incl. a NULL partition; a partition-aligned
+#: predicate).  The string values carry characters Spark escapes in
+#: partition directory names.
+_PART_CASES = {
+    "date": (
+        [dt.date(2024, 1, 1), dt.date(2024, 1, 2), dt.date(2024, 1, 9), None],
+        lambda: F.col("p") < F.lit(dt.date(2024, 1, 9)),
+    ),
+    "int": ([1, 2, 30, None], lambda: F.col("p") <= 2),
+    "string": (
+        ["a b:c%", "plain", "x=y/z", None],
+        lambda: F.col("p").isin("a b:c%", "x=y/z"),
+    ),
+}
+
+
+def _part_table(spark, path, kind):
+    """3 rows per partition value of ``kind``; returns (table, source)."""
+    values, _ = _PART_CASES[kind]
+    src = spark.createDataFrame(
+        [(i, v) for v in values for i in range(3)], f"id int, p {kind}"
+    )
+    t = ManagedTable(spark, path, partition_by=["p"])
+    t.create(src)
+    return t, src
+
+
+def _sorted_repr(rows):
+    """Order-free, type-exact form: ``1`` and ``1.0`` stay different."""
+    return sorted(repr(tuple(r)) for r in rows)
+
+
+@pytest.mark.parametrize("kind", sorted(_PART_CASES))
+def test_partition_aligned_delete_and_analyze_run_no_job(
+    spark, tmp_path, last_job_id, kind
+):
+    """A retention DELETE on the partition column is a metadata-only
+    commit and ANALYZE reads parquet footers: neither starts a Spark
+    job, and both give what the scan path gives — NULL partition kept,
+    escaped string values matched, analyze keys typed as the scan's."""
+    pred = _PART_CASES[kind][1]
+    fast, src = _part_table(spark, str(tmp_path / "fast"), kind)
+    scan, _ = _part_table(spark, str(tmp_path / "scan"), kind)
+    scan._vt._partitions_matching = lambda version, pred: None  # force a scan
+
+    j0 = last_job_id()
+    fast.delete_where(pred())
+    stats = fast.analyze()
+    assert last_job_id() == j0, "partition-aligned delete / analyze ran a job"
+    assert stats["rows"] == 6  # one partition is kept alongside the NULL one
+
+    scan.delete_where(pred())
+    assert last_job_id() > j0  # the forced scan path does run jobs
+    want = src.where(~F.coalesce(pred(), F.lit(False))).collect()
+    assert _sorted_repr(fast.read().collect()) == _sorted_repr(want)
+    assert _sorted_repr(scan.read().collect()) == _sorted_repr(want)
+    by_scan = {
+        tuple(r)[:-1]: r[-1] for r in scan.read().groupBy("p").count().collect()
+    }
+    assert repr(sorted(stats["partitions"].items(), key=repr)) == repr(
+        sorted(by_scan.items(), key=repr)
+    )
+
+
+@pytest.mark.parametrize(
+    "pred",
+    [
+        lambda: F.col("id") == 1,  # data column only
+        lambda: (F.col("p") <= 2) & (F.col("id") >= 1),  # mixed
+    ],
+    ids=["data_column", "mixed"],
+)
+def test_row_level_delete_still_rewrites_files(spark, tmp_path, pred):
+    """A predicate that reads a data column keeps the scan path: the
+    touched partitions get new files, and the rows are the DELETE's."""
+    t, src = _part_table(spark, str(tmp_path / "t"), "int")
+    before = set(_head_files(t))
+    t.delete_where(pred())
+    assert set(_head_files(t)) - before, "no partition was rewritten"
+    want = src.where(~F.coalesce(pred(), F.lit(False))).collect()
+    assert _sorted_repr(t.read().collect()) == _sorted_repr(want)

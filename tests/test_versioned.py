@@ -789,3 +789,132 @@ def test_expired_version_in_slot_still_raises(spark, vt40):
     with pytest.raises(ValueError):
         vt40.read(version=v2)
     assert vt40.read().count() == 420
+
+
+# -- the commit protocol: no lost update, no replacing write ----------------
+
+
+def test_two_writers_never_lose_an_update_silently(spark, tmp_path):
+    """Two handles on one table, 15 appends of 10 rows each, racing: an
+    append either returns a version whose rows stay at head, or raises
+    CommitConflictError.  A commit over a stale base that dropped the
+    other writer's files would leave fewer head rows than the appends
+    that returned."""
+    import threading
+
+    from datalakehouse_spark.versioned import CommitConflictError
+
+    path = str(tmp_path / "race")
+    VersionedTable(spark, path).create(spark.createDataFrame([(-1, 0)], "w int, i int"))
+    outcomes: list = []
+
+    def writer(w):
+        vt = VersionedTable(spark, path)
+        for i in range(15):
+            df = spark.createDataFrame(
+                [(w, 10 * i + k) for k in range(10)], "w int, i int"
+            )
+            try:
+                outcomes.append(vt.append(df))
+            except Exception as e:  # noqa: BLE001 - asserted below
+                outcomes.append(e)
+
+    threads = [threading.Thread(target=writer, args=(w,)) for w in (0, 1)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    committed = [o for o in outcomes if isinstance(o, int)]
+    failed = [o for o in outcomes if not isinstance(o, int)]
+    assert len(outcomes) == 30
+    assert all(isinstance(e, CommitConflictError) for e in failed), failed
+    vt = VersionedTable(spark, path)
+    assert vt.read().count() == 1 + 10 * len(committed)
+    history = [h["version"] for h in vt.history()]
+    assert sorted(committed) == history[1:]
+
+
+def test_crash_between_manifest_and_ref_leaves_table_readable(spark, vt, monkeypatch):
+    """A crash after the manifest is linked but before the refs record
+    is: the branch stays at its old head, and the next commit takes the
+    next free version number past the orphan manifest."""
+    before = _state(vt.read())
+    real = os.link
+    linked = []
+
+    def link(src, dst):
+        linked.append(dst)
+        if os.path.basename(dst).startswith("refs-"):
+            raise OSError("injected crash at the ref")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "link", link)
+    with pytest.raises(OSError, match="injected"):
+        vt.append(_rows(spark, days=[3]))
+    monkeypatch.setattr(os, "link", real)
+    assert [os.path.basename(p) for p in linked] == ["v00002.json", "refs-00000002.json"]
+    assert vt.current_version() == 1 and _state(vt.read()) == before
+    assert vt.append(_rows(spark, days=[4])) == 3
+    assert [h["version"] for h in vt.history()] == [1, 3]
+    assert vt.read().count() == 9
+
+
+def _refuse_existing(fn):
+    def call(src, dst, *args, **kwargs):
+        if os.path.exists(dst):
+            raise AssertionError(f"commit path replaced an existing file: {dst}")
+        return fn(src, dst, *args, **kwargs)
+
+    return staticmethod(call)
+
+
+class _NoReplaceOs:
+    """The ``os`` module as a patched module sees it, except that a
+    rename or replace onto an existing file raises."""
+
+    def __getattr__(self, name):
+        return getattr(os, name)
+
+    rename = _refuse_existing(os.rename)
+    replace = _refuse_existing(os.replace)
+
+
+def test_no_commit_path_replaces_an_existing_file(spark, tmp_path, monkeypatch):
+    """Every table operation and a filebus offset commit publish new
+    names only: a replacing rename costs a data flush on ext4 (and was
+    how a racing writer's manifest got overwritten)."""
+    from datalakehouse_spark import records
+    from datalakehouse_spark import versioned as versioned_mod
+    from datalakehouse_spark.sources import filebus
+
+    guarded = _NoReplaceOs()
+    victim = tmp_path / "victim"
+    victim.write_text("x")
+    with pytest.raises(AssertionError):  # the guard itself can see a replace
+        guarded.replace(str(tmp_path / "missing-src"), str(victim))
+    for mod in (versioned_mod, filebus, records):
+        monkeypatch.setattr(mod, "os", guarded)
+
+    t = VersionedTable(spark, str(tmp_path / "t"), partition_by=["report_date"])
+    t.create(_rows(spark, days=[1, 2]))
+    t.append(_rows(spark, days=[2, 3]))
+    t.merge_upsert(_rows(spark, days=[3], score=5.0), keys=["device_id", "report_date"])
+    t.delete_where(F.col("report_date") == dt.date(2024, 1, 1))  # metadata-only
+    t.delete_where(F.col("score") > 6.0)  # rewrites files
+    t.compact()
+    t.create_branch("ff")
+    t.append(_rows(spark, days=[4]), branch="ff")
+    t.merge_branch("ff")  # fast-forward
+    t.create_branch("exp")
+    t.append(_rows(spark, days=[5]), branch="exp")
+    t.append(_rows(spark, days=[6]))
+    t.merge_branch("exp")  # three-way
+    t.rollback(2)
+    t.expire_versions(keep_last=1)
+    assert t.read().count() == 12
+
+    opts = {"path": str(tmp_path / "bus"), "subscribe": "topic", "kafka.group.id": "g"}
+    reader = filebus.FileBusStreamReader(opts)
+    reader.commit({"0": 3})
+    reader.commit({"0": 5, "1": 2})
+    assert filebus.FileBusStreamReader(opts)._load_committed() == {"0": 5, "1": 2}
