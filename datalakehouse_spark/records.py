@@ -7,7 +7,10 @@ is the state; a writer creates the next number and never touches an
 existing file.  Each record is written to a temp file and published by
 ``os.link`` to its fresh name, so it appears whole, and a name another
 writer already took raises instead of being overwritten: creating
-record ``seq + 1`` is a compare-and-swap against record ``seq``.
+record ``seq + 1`` is a compare-and-swap against record ``seq``.  The
+writer then deletes the superseded records, so the directory holds one
+or two of them and reading the state is one short listing and one
+open, however long the history.
 
 Why not the usual write-temp-then-rename: on ext4 (default
 ``auto_da_alloc``) a rename that REPLACES an existing file makes the
@@ -74,12 +77,25 @@ def latest(dirpath: str, prefix: str) -> tuple[int, object]:
 
 
 def create(dirpath: str, prefix: str, seq: int, obj) -> bool:
-    """Create record ``seq``; False when that number is already taken."""
-    return create_exclusive(_path(dirpath, prefix, seq), json.dumps(obj))
+    """Create record ``seq``; False when that number is already taken.
+
+    A number that ``remove_below`` freed is taken too: a record is only
+    removed once a higher one exists, so a record created under a freed
+    number is not the newest.  It is withdrawn, and False returned, so
+    a writer that read a long-superseded record cannot slip a record in
+    beneath the newest and believe its swap succeeded."""
+    path = _path(dirpath, prefix, seq)
+    if not create_exclusive(path, json.dumps(obj)):
+        return False
+    if max(sequence_numbers(os.listdir(dirpath), prefix)) == seq:
+        return True
+    os.remove(path)
+    return False
 
 
 def remove_below(dirpath: str, prefix: str, seq: int) -> None:
-    """Delete every record numbered below ``seq`` (superseded state)."""
+    """Delete every record numbered below ``seq``, an existing record
+    (superseded state)."""
     for n in sequence_numbers(os.listdir(dirpath), prefix):
         if n < seq:
             try:

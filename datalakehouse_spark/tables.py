@@ -243,7 +243,7 @@ class ManagedTable:
             self.spark.sql(f"ANALYZE TABLE {register_as} COMPUTE STATISTICS")
         counts: dict[tuple, int] = {}
         for e in files:
-            part = tuple(e["partition"].get(k) for k in self.partition_by)
+            part = self._vt._partition_of(e)
             path = os.path.join(self._vt.data_dir, e["path"])
             counts[part] = counts.get(part, 0) + pq.read_metadata(path).num_rows
         stats = {"rows": sum(counts.values())}

@@ -30,8 +30,9 @@ table state per version:
   ``expire_snapshots`` / ``remove_orphan_files`` procedures,
   cleanup.sql:19-31).
 - Branches are named refs onto the commit DAG, kept as numbered,
-  immutable records ``_log/refs-<seq>.json`` (the newest is the state;
-  ``expire_versions`` deletes superseded ones):
+  immutable records ``_log/refs/<seq>.json`` (the newest is the state;
+  each ref move deletes the records it supersedes, so reading the heads
+  costs the same at any history length):
   ``create_branch`` points a new name at any version, writes carry a
   ``branch=`` and advance only that ref, and ``merge_branch``
   fast-forwards when possible or creates a real THREE-WAY merge commit
@@ -91,8 +92,8 @@ _CONFLICT_KEY_SAMPLE = 20
 class CommitConflictError(ValueError):
     """A commit's branch head moved after the writer read it (another
     handle or process committed first).  Nothing of this commit is
-    visible: the other writer's version stands, and this one's data
-    files are orphans for ``expire_versions``."""
+    visible: the other writer's version stands, and this one's manifest
+    and data files are orphans for ``expire_versions``."""
 
 
 class MergeConflictError(ValueError):
@@ -173,6 +174,8 @@ class VersionedTable:
         self.compression = compression
         self.data_dir = os.path.join(self.path, "data")
         self.log_dir = os.path.join(self.path, "_log")
+        #: the numbered branch-ref records (:mod:`datalakehouse_spark.records`)
+        self.refs_dir = os.path.join(self.log_dir, "refs")
         #: stage dirs of writes not yet committed; removed by the commit
         #: that consumes them, so an orphan ``_stage-*`` dir marks a write
         #: that never committed (swept by ``expire_versions``)
@@ -187,9 +190,6 @@ class VersionedTable:
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self.log_dir, f"v{version:05d}.json")
 
-    #: name prefix of the numbered branch-ref records in ``_log/``
-    _REFS = "refs-"
-
     def _latest_version(self) -> int:
         """Highest allocated version number across ALL branches."""
         if not os.path.isdir(self.log_dir):
@@ -202,41 +202,24 @@ class VersionedTable:
         return max(versions, default=0)
 
     def _refs_record(self) -> tuple[int, dict[str, int]]:
-        """(record number, branch -> head) of the newest refs record.
-        Before the first record: number 0, and ``main`` at the newest
-        manifest (a table whose first commit crashed between manifest
-        and ref), or a ``refs.json`` written before refs records
-        existed."""
-        seq, refs = records.latest(self.log_dir, self._REFS)
-        if refs is not None:
-            return seq, refs
-        legacy = os.path.join(self.log_dir, "refs.json")
-        if os.path.exists(legacy):
-            with open(legacy) as fh:
-                return 0, json.load(fh)
-        latest = self._latest_version()
-        return 0, ({self.DEFAULT_BRANCH: latest} if latest else {})
+        """(record number, branch -> head) of the newest refs record;
+        (0, {}) before the first commit."""
+        seq, refs = records.latest(self.refs_dir, "")
+        return seq, refs or {}
 
     def refs(self) -> dict[str, int]:
         """branch name -> head version."""
         return self._refs_record()[1]
 
-    def _advance_ref(
-        self,
-        branch: str,
-        expected: int | None,
-        new: int,
-        snapshot: tuple[int, dict[str, int]] | None = None,
-    ) -> None:
+    def _advance_ref(self, branch: str, expected: int | None, new: int) -> None:
         """Move ``branch`` from head ``expected`` (None: the branch must
         not exist yet) to ``new`` by creating the next refs record — a
         compare-and-swap: a record number another writer took first is
         re-read, and the swap still succeeds if that writer moved only
         other branches.  Raises :class:`CommitConflictError` when
-        ``branch`` is no longer at ``expected``.  ``snapshot`` is the
-        (number, refs) to start from, read before the caller's manifest
-        existed."""
-        seq, refs = snapshot or self._refs_record()
+        ``branch`` is no longer at ``expected``.  The records the new
+        one supersedes are deleted."""
+        seq, refs = self._refs_record()
         while True:
             head = refs.get(branch) if expected is None else refs.get(branch, 0)
             if head != expected:
@@ -245,7 +228,8 @@ class VersionedTable:
                     f"another writer committed first; v{new} was not applied"
                 )
             moved = {**refs, branch: new}
-            if records.create(self.log_dir, self._REFS, seq + 1, moved):
+            if records.create(self.refs_dir, "", seq + 1, moved):
+                records.remove_below(self.refs_dir, "", seq + 1)
                 return
             seq, refs = self._refs_record()
 
@@ -277,9 +261,11 @@ class VersionedTable:
         the branch moves by creating the next refs record, which is the
         commit point (:meth:`_advance_ref`).  A commit whose ``parent``
         is no longer the head of ``branch`` — another writer committed
-        since this one read it — raises :class:`CommitConflictError` and
-        removes its own manifest, so a lost update is loud and the other
-        writer's version stays intact.  Version numbers are
+        since this one read it — raises :class:`CommitConflictError`, so
+        a lost update is loud and the other writer's version stays
+        intact.  Its manifest stays behind as an orphan, as a crashed
+        commit's does, so a version number is never handed out twice
+        (``expire_versions`` drops it).  Version numbers are
         table-global; ``parent`` pointers form the commit DAG the
         branches live on.  ``extra`` carries operation metadata
         (merge_upsert key sets, merge parents) the three-way
@@ -294,8 +280,7 @@ class VersionedTable:
         to carry this schema (same rule Iceberg's manifest schema
         follows); absent → readers fall back to inference, which keeps
         schema-evolution commits behaving exactly as before."""
-        os.makedirs(self.log_dir, exist_ok=True)
-        snapshot = self._refs_record()
+        os.makedirs(self.refs_dir, exist_ok=True)
         manifest = {
             "parent": parent,
             "branch": branch,
@@ -309,11 +294,7 @@ class VersionedTable:
             self._manifest_path(version), json.dumps({"version": version, **manifest})
         ):
             version += 1  # another writer took the number
-        try:
-            self._advance_ref(branch, parent, version, snapshot)
-        except CommitConflictError:
-            os.remove(self._manifest_path(version))
-            raise
+        self._advance_ref(branch, parent, version)
         for stage in self._stages:
             shutil.rmtree(stage, ignore_errors=True)
         self._stages.clear()
@@ -1183,13 +1164,14 @@ class VersionedTable:
                 if entry.is_dir() and entry.name.startswith("_stage-"):
                     shutil.rmtree(entry.path)
                     removed_stages.append(entry.path)
-        if os.path.isdir(self.log_dir):
-            # superseded refs records, and the temp files of manifests /
-            # refs records a crashed commit never linked
-            records.remove_below(self.log_dir, self._REFS, self._refs_record()[0])
-            for entry in os.scandir(self.log_dir):
-                if ".tmp-" in entry.name:
-                    os.remove(entry.path)
+        if os.path.isdir(self.refs_dir):
+            # refs records a crashed ref move left, and the temp files of
+            # manifests / refs records a crashed commit never linked
+            records.remove_below(self.refs_dir, "", self._refs_record()[0])
+            for d in (self.log_dir, self.refs_dir):
+                for entry in os.scandir(d):
+                    if ".tmp-" in entry.name:
+                        os.remove(entry.path)
         return {
             "versions": removed_manifests,
             "files": removed_files,

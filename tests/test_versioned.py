@@ -834,29 +834,91 @@ def test_two_writers_never_lose_an_update_silently(spark, tmp_path):
     assert sorted(committed) == history[1:]
 
 
+def _crash_at_ref(monkeypatch, t) -> list[str]:
+    """Make linking a refs record of ``t`` raise; returns the list the
+    link destinations are appended to, relative to ``_log``."""
+    real = os.link
+    linked: list[str] = []
+
+    def link(src, dst):
+        linked.append(os.path.relpath(dst, t.log_dir))
+        if os.path.dirname(dst) == t.refs_dir:
+            raise OSError("injected crash at the ref")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "link", link)
+    return linked
+
+
 def test_crash_between_manifest_and_ref_leaves_table_readable(spark, vt, monkeypatch):
     """A crash after the manifest is linked but before the refs record
     is: the branch stays at its old head, and the next commit takes the
     next free version number past the orphan manifest."""
     before = _state(vt.read())
-    real = os.link
-    linked = []
-
-    def link(src, dst):
-        linked.append(dst)
-        if os.path.basename(dst).startswith("refs-"):
-            raise OSError("injected crash at the ref")
-        return real(src, dst)
-
-    monkeypatch.setattr(os, "link", link)
+    linked = _crash_at_ref(monkeypatch, vt)
     with pytest.raises(OSError, match="injected"):
         vt.append(_rows(spark, days=[3]))
-    monkeypatch.setattr(os, "link", real)
-    assert [os.path.basename(p) for p in linked] == ["v00002.json", "refs-00000002.json"]
+    monkeypatch.undo()
+    assert linked == ["v00002.json", os.path.join("refs", "00000002.json")]
     assert vt.current_version() == 1 and _state(vt.read()) == before
     assert vt.append(_rows(spark, days=[4])) == 3
     assert [h["version"] for h in vt.history()] == [1, 3]
     assert vt.read().count() == 9
+
+
+def test_first_commit_crashed_before_its_ref_is_not_head(spark, tmp_path, monkeypatch):
+    """Only a refs record makes a version a head, the first one too."""
+    t = VersionedTable(spark, str(tmp_path / "fresh"), partition_by=["report_date"])
+    _crash_at_ref(monkeypatch, t)
+    with pytest.raises(OSError, match="injected"):
+        t.create(_rows(spark, days=[1]))
+    monkeypatch.undo()
+    assert t.refs() == {} and t.current_version() == 0
+    assert t.create(_rows(spark, days=[2])) == 2
+    assert [h["version"] for h in t.history()] == [2]
+    assert t.read().count() == 3
+
+
+def test_losing_commit_never_frees_its_version_number(spark, vt):
+    """A commit over a stale base raises and leaves its manifest behind:
+    the next commit takes a new number, so a version number always names
+    the same files (a reader's head-read slot is keyed by it)."""
+    from datalakehouse_spark.versioned import CommitConflictError
+
+    assert vt.append(_rows(spark, days=[3])) == 2
+    with pytest.raises(CommitConflictError):
+        vt._commit("append", vt.head_files(), parent=1)
+    assert os.path.exists(vt._manifest_path(3))
+    assert vt.append(_rows(spark, days=[4])) == 4
+    assert [h["version"] for h in vt.history()] == [1, 2, 4]
+    assert vt.read().count() == 12
+    assert 3 in vt.expire_versions(keep_last=3)["versions"]
+
+
+def test_refs_stay_one_record_at_any_history_length(spark, tmp_path):
+    """Each ref move deletes the records it supersedes, so a head read
+    lists one record whatever the number of commits."""
+    t = VersionedTable(spark, str(tmp_path / "long"))
+    for v in range(1, 301):
+        t._commit("append", [], v - 1)
+    t.create_branch("exp")
+    assert os.listdir(t.refs_dir) == ["00000301.json"]
+    assert t.refs() == {"main": 300, "exp": 300}
+
+
+def test_a_freed_record_number_is_not_taken_again(tmp_path):
+    """A writer that read a long-superseded refs record must not slip a
+    record in beneath the newest one: creating under a number that
+    ``remove_below`` freed fails like a taken number."""
+    from datalakehouse_spark import records
+
+    d = str(tmp_path)
+    assert records.create(d, "", 1, {"main": 1})
+    assert records.create(d, "", 2, {"main": 2})
+    records.remove_below(d, "", 2)
+    assert not records.create(d, "", 1, {"main": 7})
+    assert os.listdir(d) == ["00000002.json"]
+    assert records.latest(d, "") == (2, {"main": 2})
 
 
 def _refuse_existing(fn):
