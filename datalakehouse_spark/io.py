@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datalakehouse_spark.session import PARALLEL_LISTING_THRESHOLD
+from datalakehouse_spark.session import MARK_SUCCESS_KEY, PARALLEL_LISTING_THRESHOLD
 
 TABLES = (
     "region",
@@ -102,6 +102,8 @@ def _ensure_session_contract(spark: SparkSession) -> None:
         PARALLEL_LISTING_THRESHOLD,
     )
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # no _SUCCESS marker rewritten by each append (see session.py)
+    spark.conf.set(MARK_SUCCESS_KEY, "false")
     _ship_package(spark)
 
 

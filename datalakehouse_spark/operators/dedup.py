@@ -1162,7 +1162,10 @@ def streaming_incremental_dedup_drain(
             F.sum((~in_c & first).cast("long")).alias("n_ingested"),
         )
         survivors = marked.where(~in_c & first).select("digest").distinct()
-        _commit_pair(stats_vt, stats, seen_vt, survivors)
+        try:
+            _commit_pair(stats_vt, stats, seen_vt, survivors)
+        finally:
+            marked.unpersist()  # persist mode caches once per trigger
 
     stream = (
         spark.readStream.schema(batch.schema)
@@ -1345,7 +1348,10 @@ def streaming_near_dup_drain_staged(
         )
         if seen is not None:
             arrivals = arrivals.join(seen, ["band", "key"], "left_anti")
-        _commit_pair(stats_vt, stats, seen_vt, arrivals)
+        try:
+            _commit_pair(stats_vt, stats, seen_vt, arrivals)
+        finally:
+            buckets.unpersist()  # persist mode caches once per trigger
 
     stream = (
         spark.readStream.schema(spark.read.parquet(src).schema)

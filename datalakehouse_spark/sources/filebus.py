@@ -29,14 +29,24 @@ broker-shaped source in pure stdlib:
   group-offsets) is the checkpoint restart, earliest fallback is
   ``startingOffsets=earliest`` on a fresh checkpoint.
 
-Scale posture: ``partitions()`` hands one InputPartition per
-topic-partition slice, and ``read()`` runs on EXECUTORS — parallelism
-is the topic's partition count, as with Kafka.  Reading a slice scans
-its log file from the top (line offsets, not byte offsets); a
+Scale posture: a stream reads each micro-batch ONCE, on the driver.
+The reader is a ``SimpleDataSourceStreamReader``: Spark's long-lived
+driver-side source runner calls ``read(start)`` when it plans a
+trigger (``latestOffset``), ships the records to the JVM as Arrow, and
+keeps them in the block manager until the next trigger is planned, so
+every action on the batch (a ``foreachBatch`` sink's table append and
+DLQ write alike) scans JVM memory and starts no Python worker.  Only
+the replay of a batch planned before a restart, whose prefetch died
+with the old runner, reads the log again, on an executor
+(``readBetweenOffsets``).  One driver process reading one batch per
+trigger is the simple reader's stated use and this emulator's load
+(ingest at thousands of events per second); the batch reader keeps one
+executor-side InputPartition per topic-partition.  Reading a slice
+scans its log file from the top (line offsets, not byte offsets); a
 production log store would add segment files + a sparse byte-offset
 index exactly as Kafka does.  The emulator exists to exercise the
 engine's streaming contract; the 100 TB path swaps the format string
-back to ``kafka``.
+back to ``kafka``, a JVM source with executor-side partitioned reads.
 """
 
 from __future__ import annotations
@@ -50,8 +60,8 @@ from collections.abc import Iterator, Sequence
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     InputPartition,
+    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import (
     BinaryType,
@@ -162,8 +172,7 @@ class _Slice(InputPartition):
 
 
 def _read_slice(s: _Slice) -> Iterator[tuple]:
-    """Executor-side: yield Kafka-wire tuples for log lines
-    [start, end).  Runs wherever Spark schedules the partition."""
+    """Yield Kafka-wire tuples for log lines [start, end)."""
     if s.end <= s.start or not os.path.exists(s.log_path):
         return
     with open(s.log_path, encoding="utf-8") as fh:
@@ -187,19 +196,47 @@ def _read_slice(s: _Slice) -> Iterator[tuple]:
             )
 
 
-class FileBusStreamReader(DataSourceStreamReader):
+def _slices(root: str, topic: str, start: dict, end: dict) -> list[_Slice]:
+    """One slice per topic-partition with records in [start, end)."""
+    out = []
+    for pdir in _partition_dirs(root, topic):
+        pid = str(int(os.path.basename(pdir)[1:]))
+        s, e = int(start.get(pid, 0)), int(end.get(pid, 0))
+        if e > s:
+            out.append(_Slice(os.path.join(pdir, _LOG_NAME), topic, int(pid), s, e))
+    return out
+
+
+def _root_and_topic(options) -> tuple[str, str]:
+    root = options.get("kafka.bootstrap.servers") or options.get("path")
+    if not root:
+        raise ValueError(
+            "filebus requires kafka.bootstrap.servers (bus root dir) or path"
+        )
+    topic = options.get("subscribe")
+    if not topic:
+        raise ValueError("filebus requires subscribe=<topic>")
+    return root, topic
+
+
+class FileBusStreamReader(SimpleDataSourceStreamReader):
     """Offset-tracked micro-batch reader (the Kafka consumer analog).
 
     Offsets are dicts {partition_id_str: next_line}; Spark serializes
     them into the checkpoint, giving group-offsets resume for free.
-    ``maxOffsetsPerTrigger`` caps each micro-batch's admission,
-    distributed across partitions proportionally to backlog — Kafka's
-    own split rule.
+    ``read(start)`` admits the next batch and reads it in the same call
+    (see the module's scale posture): Spark's source runner hands it the
+    previous batch's end, or ``initialOffset()`` on a fresh runner, and
+    keys the prefetched records by that start.  So the records returned
+    are always those in [start, end), and the admission rules below only
+    choose ``end``.  ``maxOffsetsPerTrigger`` caps each micro-batch's
+    admission, distributed across partitions proportionally to backlog —
+    Kafka's own split rule.
 
     **Restart safety** (ADVICE r10): the admission base must never sit
     below the checkpointed start, or a capped first-post-restart batch
-    would plan an end BELOW the checkpoint — partitions() would skip
-    it, the offset log would regress, and the next batch would re-read
+    would plan an end BELOW the checkpoint — the batch would be empty,
+    the offset log would regress, and the next batch would re-read
     committed records.  Three defenses, layered:
 
     * ``commit(end)`` persists committed offsets broker-side
@@ -209,10 +246,10 @@ class FileBusStreamReader(DataSourceStreamReader):
       group-offsets store; a fresh reader instance seeds its base from
       the newest record (group id from ``kafka.group.id``, Kafka's own
       option key);
-    * every offset dict Spark hands us (``partitions`` start/end,
-      ``commit`` end) raises an in-memory floor, covering the
-      restart-with-uncommitted-batch replay where ``partitions`` runs
-      before any ``latestOffset``;
+    * the base is never below ``start`` (after a restart that replays
+      an uncommitted batch, the runner's next ``read`` starts at that
+      batch's end) nor below an in-memory floor that every ``commit``
+      raises;
     * admitted offsets are clamped element-wise to ``>= base`` and the
       base itself to ``<= cur`` (a truncated/recreated log must not
       plan ends past EOF, which would skip later appends).
@@ -221,23 +258,14 @@ class FileBusStreamReader(DataSourceStreamReader):
     does not implement SupportsTriggerAvailableNow (passing
     ``trigger(availableNow=True)`` falls back to one uncapped batch,
     with a warning).  ``filebus.snapshot=true`` gives the same
-    contract under a processing-time trigger: the first
-    ``latestOffset`` call snapshots the topic's end offsets, every
-    later call is clamped to the snapshot, so a
-    ``query.processAllAvailable()`` drain terminates deterministically
-    after ceil(backlog/cap) capped micro-batches and never admits
-    records produced after the stream started."""
+    contract under a processing-time trigger: the first ``read``
+    snapshots the topic's end offsets, every later one is clamped to
+    the snapshot, so a ``query.processAllAvailable()`` drain terminates
+    deterministically after ceil(backlog/cap) capped micro-batches and
+    never admits records produced after the stream started."""
 
     def __init__(self, options) -> None:
-        self.root = options.get("kafka.bootstrap.servers") or options.get("path")
-        if not self.root:
-            raise ValueError(
-                "filebus requires kafka.bootstrap.servers (bus root dir) or path"
-            )
-        topic = options.get("subscribe")
-        if not topic:
-            raise ValueError("filebus requires subscribe=<topic>")
-        self.topic = topic
+        self.root, self.topic = _root_and_topic(options)
         self.starting = (options.get("startingOffsets") or "earliest").lower()
         cap = options.get("maxOffsetsPerTrigger")
         self.cap = int(cap) if cap else None
@@ -247,10 +275,11 @@ class FileBusStreamReader(DataSourceStreamReader):
             "1",
         )
         self._snapshot: dict[str, int] | None = None
-        self._last_end: dict[str, int] | None = None
-        #: floor learned from Spark's own calls (checkpointed starts /
-        #: planned+committed ends) — admission may never end below it
-        self._floor: dict[str, int] = {}
+        #: floor learned from group offsets and Spark's commits —
+        #: admission may never end below it.  Seeded from the broker-side
+        #: group offsets, so a clean restart with backlog > cap can't
+        #: plan below the checkpointed start
+        self._floor: dict[str, int] = self._load_committed()
 
     # -- broker-side committed-offset store (Kafka __consumer_offsets) --
 
@@ -287,68 +316,44 @@ class FileBusStreamReader(DataSourceStreamReader):
             return _end_offsets(self.root, self.topic)
         return {pid: 0 for pid in _end_offsets(self.root, self.topic)}
 
-    def latestOffset(self) -> dict:
+    def _admit(self, start: dict) -> dict:
+        """The end offsets of the batch that begins at ``start``."""
         cur = _end_offsets(self.root, self.topic)
         if self.snapshot_mode:
             if self._snapshot is None:
                 self._snapshot = dict(cur)
             cur = {p: min(cur.get(p, 0), self._snapshot.get(p, 0)) for p in cur}
-        if self._last_end is None:
-            # fresh reader instance: seed the base from the broker-side
-            # group offsets so a clean restart with backlog > cap can't
-            # plan below the checkpointed start
-            self._raise_floor(self._load_committed())
-        base = dict(self._last_end or self.initialOffset())
+        base = {str(p): int(v) for p, v in start.items()}
         for p in cur:
             base[p] = max(base.get(p, 0), self._floor.get(p, 0))
             base[p] = min(base[p], cur[p])  # never plan past EOF
-        if self.cap is None:
-            admitted = {p: max(cur[p], base.get(p, 0)) for p in cur}
-            self._last_end = admitted
-            return admitted
-        backlog = {p: max(cur[p] - base.get(p, 0), 0) for p in cur}
+        backlog = {p: max(cur[p] - base[p], 0) for p in cur}
         total = sum(backlog.values())
-        if total <= self.cap:
-            admitted = {p: max(cur[p], base.get(p, 0)) for p in cur}
-        else:
-            # proportional admission, remainder to the largest backlogs
-            share = {
-                p: base.get(p, 0) + (backlog[p] * self.cap) // total for p in cur
-            }
-            left = self.cap - sum(share[p] - base.get(p, 0) for p in cur)
-            for p in sorted(cur, key=lambda x: backlog[x], reverse=True):
-                if left <= 0:
-                    break
-                if share[p] < cur[p]:
-                    share[p] += 1
-                    left -= 1
-            admitted = share
-        self._last_end = admitted
-        return admitted
+        if self.cap is None or total <= self.cap:
+            return {p: max(cur[p], base[p]) for p in cur}
+        # proportional admission, remainder to the largest backlogs
+        share = {p: base[p] + (backlog[p] * self.cap) // total for p in cur}
+        left = self.cap - sum(share[p] - base[p] for p in cur)
+        for p in sorted(cur, key=lambda x: backlog[x], reverse=True):
+            if left <= 0:
+                break
+            if share[p] < cur[p]:
+                share[p] += 1
+                left -= 1
+        return share
 
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        # Spark's starts/ends are authoritative (offset-log replay on
-        # restart lands here before any latestOffset call) — absorb
-        # them into the admission floor
-        self._raise_floor(start)
-        self._raise_floor(end)
-        out = []
-        for pdir in _partition_dirs(self.root, self.topic):
-            pid = str(int(os.path.basename(pdir)[1:]))
-            s, e = int(start.get(pid, 0)), int(end.get(pid, 0))
-            if e > s:
-                out.append(
-                    _Slice(
-                        os.path.join(pdir, _LOG_NAME), self.topic, int(pid), s, e
-                    )
-                )
-        # Spark requires at least one partition per micro-batch
-        return out or [
-            _Slice(os.path.join(self.root, self.topic, "_empty"), self.topic, 0, 0, 0)
+    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
+        end = self._admit(start)
+        # a list, not a generator: Spark's runner copies the iterator
+        # each time it serves the cached batch
+        rows = [
+            r for s in _slices(self.root, self.topic, start, end) for r in _read_slice(s)
         ]
+        return iter(rows), end
 
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        return _read_slice(partition)
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
+        for s in _slices(self.root, self.topic, start, end):
+            yield from _read_slice(s)
 
     def commit(self, end: dict) -> None:
         # checkpoint holds the offsets Spark trusts; mirror them into
@@ -360,14 +365,17 @@ class FileBusStreamReader(DataSourceStreamReader):
 
 class FileBusBatchReader(DataSourceReader):
     """Batch read of a whole topic (Kafka's batch `read.format("kafka")`
-    twin) — one InputPartition per topic-partition."""
+    twin) — one executor-side InputPartition per topic-partition."""
 
     def __init__(self, options) -> None:
-        self.stream = FileBusStreamReader(options)
+        self.root, self.topic = _root_and_topic(options)
 
     def partitions(self) -> Sequence[InputPartition]:
-        end = _end_offsets(self.stream.root, self.stream.topic)
-        return self.stream.partitions({p: 0 for p in end}, end)
+        end = _end_offsets(self.root, self.topic)
+        # Spark requires at least one partition
+        return _slices(self.root, self.topic, {}, end) or [
+            _Slice(os.path.join(self.root, self.topic, "_empty"), self.topic, 0, 0, 0)
+        ]
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
         return _read_slice(partition)
@@ -381,7 +389,7 @@ class FileBusDataSource(DataSource):
     def schema(self) -> StructType:
         return KAFKA_WIRE_SCHEMA
 
-    def streamReader(self, schema: StructType) -> FileBusStreamReader:
+    def simpleStreamReader(self, schema: StructType) -> FileBusStreamReader:
         return FileBusStreamReader(self.options)
 
     def reader(self, schema: StructType) -> FileBusBatchReader:
@@ -393,14 +401,15 @@ def register_filebus(spark) -> None:
 
     The DataSource class is registered for BY-VALUE cloudpickle
     serialization first: Spark's ``python_streaming_source_runner``
-    (the driver-side offset-management process for Python streaming
-    sources) is launched WITHOUT the session's addPyFile/userFiles
-    sys.path entries, so a by-reference pickle of this class dies there
+    (the driver-side process that plans a Python stream's offsets and,
+    for this reader, reads each micro-batch) is launched WITHOUT the
+    session's addPyFile/userFiles sys.path entries, so a by-reference
+    pickle of this class dies there
     with ModuleNotFoundError whenever the repo is only on the driver's
     sys.path — exactly how the correctness driver invokes us (caught by
     a /tmp-cwd vanilla-session verify, round 11).  By-value pickling
     makes the class and this module's helper functions self-contained;
-    executor-side ``read()`` work needs no import either."""
+    executor-side reads (batch reads, replays) need no import either."""
     import sys
 
     from pyspark import cloudpickle

@@ -78,7 +78,8 @@ import shutil
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datalakehouse_spark import records
@@ -863,8 +864,9 @@ class VersionedTable:
                 )
             touched_vals = {
                 tuple(_canon_value(r[k]) for k in self.partition_by)
-                for r in self._read_files(prev, schema_json=prev_schema)
-                .where(pred_true)
+                for r in self._where(
+                    self._read_files(prev, schema_json=prev_schema), pred_true, cur
+                )
                 .select(*self.partition_by)
                 .distinct()
                 .collect()
@@ -883,9 +885,11 @@ class VersionedTable:
         new_files: list[dict] = []
         new_schema = None
         if touched_files:
-            remainder = self._read_files(
-                touched_files, schema_json=prev_schema
-            ).where(~pred_true)
+            remainder = self._where(
+                self._read_files(touched_files, schema_json=prev_schema),
+                ~pred_true,
+                cur,
+            )
             new_files = self._write_new_files(remainder)
             new_schema = self._last_write_schema
         uniform = (
@@ -910,8 +914,25 @@ class VersionedTable:
         if not cond.deterministic() or not names <= set(self.partition_by):
             return None
         rel, tuples = self.partition_relation(version)
-        rows = rel.where(pred).select(self._PART_IDX).collect()
+        rows = self._where(rel, pred, version).select(self._PART_IDX).collect()
         return {tuples[r[0]] for r in rows}
+
+    def _where(self, df: DataFrame, pred: Column, version: int) -> DataFrame:
+        """``df.where(pred)`` for a predicate written against ``version``.
+
+        A Column taken from a frame this table returned
+        (``t.read()["p"] == 1``) is bound to that frame's attribute ids,
+        which neither the partition relation nor a fresh scan of the
+        files carries.  Such a predicate is analyzed against the
+        version's read (the same frame, from the head-read slot) and
+        rebuilt by column name from the SQL of the result; a predicate
+        that resolves by name as it is passes through unchanged."""
+        try:
+            return df.where(pred)
+        except AnalysisException:
+            scan = self.read(version=version).where(pred)
+            cond = scan._jdf.queryExecution().analyzed().condition()
+            return df.where(F.expr(cond.sql()))
 
     #: index column of :meth:`partition_relation`
     _PART_IDX = "_partition_idx"

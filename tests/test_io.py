@@ -33,3 +33,33 @@ def test_spark_written_ntz_events_load_canonically(spark, tmp_path):
     assert rows(got) == rows(want)
     risk = REGISTRY["risk_score_daily"].fn
     assert sorted(risk(spark, sf_dir).collect()) == sorted(risk(spark, SF).collect())
+
+
+def test_append_writes_leave_no_success_marker(spark, tmp_path):
+    """No write leaves Hadoop's ``_SUCCESS`` marker, whichever way the
+    session was made: ``get_spark``'s builder conf, or
+    ``_ensure_session_contract`` on a session whose marker is on."""
+    from datalakehouse_spark.io import _ensure_session_contract
+    from datalakehouse_spark.session import MARK_SUCCESS_KEY
+
+    def markers(path):
+        return [n for n in os.listdir(path) if "_SUCCESS" in n]
+
+    df = spark.range(10)
+    built = str(tmp_path / "built")
+    df.write.mode("append").parquet(built)
+    df.write.mode("append").parquet(built)
+    assert markers(built) == []
+
+    spark.conf.set(MARK_SUCCESS_KEY, "true")
+    try:
+        on = str(tmp_path / "on")
+        df.write.mode("append").parquet(on)
+        assert "_SUCCESS" in markers(on)  # a marker is visible when on
+        _ensure_session_contract(spark)
+        contract = str(tmp_path / "contract")
+        df.write.mode("append").parquet(contract)
+        df.write.mode("append").parquet(contract)
+        assert markers(contract) == []
+    finally:
+        spark.conf.unset(MARK_SUCCESS_KEY)

@@ -172,3 +172,36 @@ def test_near_dup_session_index_stays_duplicate_free(spark, tmp_path):
     assert overlap == 0, (
         "session index re-indexed buckets the historical index covers"
     )
+
+
+def test_persist_mode_drains_release_their_per_trigger_frame(spark, tmp_path):
+    """ROADMAP 6(d): under ``spark.graft.materialize=persist`` each
+    trigger of both drains caches its classified frame; it is
+    unpersisted once the trigger's commits land, so the cache does not
+    grow with the stream (before the fix: +4 persistent RDDs per
+    4-slice drain)."""
+    from datalakehouse_spark.materialize import CONF_KEY
+    from datalakehouse_spark.operators.dedup import streaming_near_dup_drain
+
+    docs = load_table(spark, SF, "documents")
+    digests = docs.select(
+        "doc_id", "source", prefix_digest(F.col("text")).alias("digest")
+    )
+    pred = F.col("doc_id") % 4 == 3
+
+    def cached() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    spark.conf.set(CONF_KEY, "persist")
+    try:
+        before = cached()
+        streaming_near_dup_drain(
+            spark, docs, str(tmp_path / "nd"), pred, n_slices=4
+        ).collect()
+        assert cached() <= before, "near-dup drain left cached frames"
+        streaming_incremental_dedup_drain(
+            spark, digests, str(tmp_path / "ex"), pred, n_slices=4
+        ).collect()
+        assert cached() <= before, "exact drain left cached frames"
+    finally:
+        spark.conf.unset(CONF_KEY)

@@ -980,3 +980,35 @@ def test_no_commit_path_replaces_an_existing_file(spark, tmp_path, monkeypatch):
     reader.commit({"0": 3})
     reader.commit({"0": 5, "1": 2})
     assert filebus.FileBusStreamReader(opts)._load_committed() == {"0": 5, "1": 2}
+
+
+@pytest.mark.parametrize(
+    "partition_by, pred, metadata_only",
+    [
+        (["p"], lambda df: df["p"] == 1, True),
+        (["p"], lambda df: (df["p"] == 1) & (df["id"] >= 0), False),
+        ([], lambda df: df["p"] == 1, False),
+    ],
+    ids=["partitioned_manifest", "partitioned_scan", "unpartitioned"],
+)
+def test_delete_where_accepts_a_column_of_the_tables_own_read(
+    spark, tmp_path, last_job_id, partition_by, pred, metadata_only
+):
+    """A predicate built from the frame the table returned
+    (``t.read()["p"] == 1``) deletes what ``"p = 1"`` deletes, on the
+    manifest path (still no job) and on both scan paths."""
+    src = spark.createDataFrame(
+        [(i, i % 3, f"s{i}") for i in range(12)], "id long, p long, s string"
+    )
+    bound = VersionedTable(spark, str(tmp_path / "bound"), partition_by=partition_by)
+    by_sql = VersionedTable(spark, str(tmp_path / "sql"), partition_by=partition_by)
+    bound.create(src)
+    by_sql.create(src)
+
+    j0 = last_job_id()
+    bound.delete_where(pred(bound.read()))
+    assert (last_job_id() == j0) == metadata_only
+    by_sql.delete_where("p = 1")
+    got = sorted(map(tuple, bound.read().collect()))
+    assert got == sorted(map(tuple, by_sql.read().collect()))
+    assert len(got) == 8 and all(r[1] != 1 for r in got)
