@@ -42,9 +42,11 @@ score always matches enumeration's (ties may pick a different equal
 segmentation, which is why the oracle-checked entries use
 enumeration).
 
-Scale posture: seeding is ONE substring-explode hash aggregate over
-the word-frequency table (itself one corpus shuffle, the shared
-trainer factoring); each EM round is one Arrow-batched map over the
+It runs on the subword skeleton of operators/bpe.py (word-frequency
+factoring, size-adaptive ``train_auto``, ``rank_table``,
+``tokenize_stats``) with its own trainers and segmenter.  Scale
+posture: seeding is ONE substring-explode hash aggregate over the
+word-frequency table; each EM round is one Arrow-batched map over the
 word table emitting (piece, freq) usage pairs plus one map-side-
 combined hash aggregate, with a vocabulary-sized collect (the
 inventory IS the model — the same bounded driver surface as the
@@ -57,7 +59,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datalakehouse_spark.operators.bpe import PAIR_SEP, WORD_PATTERN
+from datalakehouse_spark.operators.bpe import (
+    PAIR_SEP,
+    rank_table,
+    tokenize_stats,
+    train_auto,
+)
 
 #: (rank, piece, freq): the trained inventory, final Viterbi-EM counts
 UNI_SCHEMA = "rank int, piece string, freq long"
@@ -286,9 +293,7 @@ def unigram_train(
     ranked = sorted(
         ((p, c) for p, c in inv.items() if c > 0), key=lambda x: (-x[1], x[0])
     )
-    rows = [(i + 1, p, c) for i, (p, c) in enumerate(ranked)]
-    out = spark.createDataFrame(rows, UNI_SCHEMA)
-    return out.orderBy("rank"), ranked
+    return rank_table(spark, UNI_SCHEMA, ranked).orderBy("rank"), ranked
 
 
 def unigram_train_auto(
@@ -300,50 +305,19 @@ def unigram_train_auto(
     seed_k: int = SEED_K_DEFAULT,
     local_rows_threshold: int = 65536,
 ) -> tuple[DataFrame, list[tuple[str, int]]]:
-    """Size-adaptive trainer with the fused sentinel probe (the
-    round-15 ``bpe_train_auto`` shape): ONE narrow Spark action for a
-    bounded word table — the single ``coalesce(1).mapInPandas`` task
-    either trains in place or, the moment it has seen threshold + 1
-    rows, emits a ``rank = -1`` sentinel via generator early-exit and
-    the distributed EM loop takes over."""
-    cols = ["rank", "piece", "freq"]
-    threshold = local_rows_threshold
-
-    def train_batches(it):
-        import pandas as _pd
-
-        wf: list[tuple[str, int]] = []
-        for pdf in it:
-            wf.extend(zip(pdf["w"], (int(v) for v in pdf["f"])))
-            if len(wf) > threshold:
-                yield _pd.DataFrame([(-1, "", 0)], columns=cols)
-                return
-        rows = [
-            (i + 1, p, c)
-            for i, (p, c) in enumerate(
-                train_unigram_local(wf, rounds, max_piece_len, min_freq, seed_k)
-            )
-        ]
-        yield _pd.DataFrame(rows, columns=cols)
-
-    probe = (
-        words.where(F.length("w") > 0)
-        .select("w", F.col("f").cast("long").alias("f"))
-        .coalesce(1)
-        .mapInPandas(train_batches, schema=UNI_SCHEMA)
-        .collect()
+    """Unigram-LM on the size-adaptive ``bpe.train_auto``: a bounded
+    word table trains in one executor task (:func:`train_unigram_local`),
+    a larger one in :func:`unigram_train`."""
+    return train_auto(
+        spark,
+        words,
+        UNI_SCHEMA,
+        local_rows_threshold,
+        lambda wf: train_unigram_local(wf, rounds, max_piece_len, min_freq, seed_k),
+        lambda: unigram_train(spark, words, rounds, max_piece_len, min_freq, seed_k),
+        tuple,
+        lambda r: (r["piece"], r["freq"]),
     )
-    if probe and probe[0]["rank"] == -1:
-        return unigram_train(
-            spark, words, rounds, max_piece_len, min_freq, seed_k
-        )
-    ranked = [
-        (r["piece"], int(r["freq"]))
-        for r in sorted(probe, key=lambda r: r["rank"])
-    ]
-    rows = [(i + 1, p, c) for i, (p, c) in enumerate(ranked)]
-    out = spark.createDataFrame(rows, UNI_SCHEMA)
-    return out.orderBy("rank"), ranked
 
 
 def unigram_tokenize_stats(
@@ -354,58 +328,18 @@ def unigram_tokenize_stats(
     min_len: int = 2,
     max_len: int = 8,
 ) -> DataFrame:
-    """Per-document tokenization stats under a trained unigram
-    inventory: ``(doc_id, n_words, n_chars, n_tokens)`` with
-    ``n_tokens`` counted by the exact enumeration argmax under the
-    final piece probabilities.  Characters the trainer never saw join
-    the runtime inventory at probability 0.0 (the UNK-closure: every
-    word stays segmentable; an all-zero-score word resolves to the
-    fewest-pieces segmentation by the tie-break).  Arrow-batched
-    ``mapInPandas``; the inventory rides the closure (it is the model,
-    vocabulary-sized).  Embarrassingly parallel over rows — the same
-    honest-Python tier as the BPE/WordPiece runtimes."""
-    import re as _re
+    """``bpe.tokenize_stats`` under a trained unigram inventory, each
+    word's ``n_tokens`` by the exact enumeration argmax under the final
+    piece probabilities.  Characters the trainer never saw join the
+    runtime inventory at probability 0.0 (the UNK-closure: every word
+    stays segmentable; an all-zero-score word resolves to the
+    fewest-pieces segmentation by the tie-break)."""
+    total = sum(c for _, c in inventory) or 1
+    base_probs = {p: c / total for p, c in inventory}
 
-    pattern = WORD_PATTERN
-    lo, hi = min_len, max_len
-    inv = list(inventory)
-    total = sum(c for _, c in inv) or 1
-    base_probs = {p: c / total for p, c in inv}
+    def count(w: str) -> int:
+        missing = {ch for ch in w if ch not in base_probs}
+        probs = {**base_probs, **{ch: 0.0 for ch in missing}} if missing else base_probs
+        return len(best_segmentation(w, probs))
 
-    src = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-
-    def batches(it):
-        import pandas as _pd
-
-        rx = _re.compile(pattern)
-        memo: dict[str, int] = {}
-
-        def ntok(w: str) -> int:
-            if w not in memo:
-                missing = {ch for ch in w if ch not in base_probs}
-                probs = (
-                    {**base_probs, **{ch: 0.0 for ch in missing}}
-                    if missing
-                    else base_probs
-                )
-                memo[w] = len(best_segmentation(w, probs))
-            return memo[w]
-
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                ws = [
-                    w
-                    for w in rx.findall((text or "").lower())
-                    if lo <= len(w) <= hi
-                ]
-                n_chars = sum(len(w) for w in ws)
-                n_tokens = sum(ntok(w) for w in ws)
-                rows.append((doc_id, len(ws), n_chars, n_tokens))
-            yield _pd.DataFrame(
-                rows, columns=["doc_id", "n_words", "n_chars", "n_tokens"]
-            )
-
-    return src.mapInPandas(
-        batches, schema="doc_id long, n_words int, n_chars int, n_tokens int"
-    )
+    return tokenize_stats(docs, count, text_col, id_col, min_len, max_len)

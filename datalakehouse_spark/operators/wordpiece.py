@@ -1,19 +1,19 @@
-"""Distributed WordPiece vocabulary-merge trainer (round 15).
+"""WordPiece: the likelihood-scored subword trainer (round 15).
 
 The second classical subword trainer (Schuster & Nakajima 2012,
 "Japanese and Korean voice search"; the BERT tokenizer's trainer —
-public literature): same greedy merge loop as BPE
-(operators/bpe.py), but the argmax maximizes the LIKELIHOOD score
+public literature), on the subword skeleton of operators/bpe.py
+(word-frequency factoring, size-adaptive ``train_auto``, the merge
+loop, ``tokenize_stats``).  It is the BPE merge loop with one change:
+the argmax maximizes the LIKELIHOOD score
 
     score(a, b) = count(ab) / (count(a) * count(b))
 
 instead of the raw pair count — merging the pair whose fusion most
 increases corpus likelihood under a unigram model, which prefers
-strongly-associated rare pairs over merely-frequent ones.  Everything
-else is shared with the BPE machinery: the word-frequency factoring
-(ONE corpus shuffle), the greedy left-to-right fold, the merge-replay
-tokenizer (``bpe.apply_merges``), and the size-adaptive single-task
-path with the fused sentinel probe.
+strongly-associated rare pairs over merely-frequent ones.  Its
+runtime is greedy leftmost longest-match over the learned pieces
+(:func:`longest_match_tokenize`), not merge replay.
 
 Determinism contract: the score is one IEEE-754 double division of
 exact integers (``c / (u_l * u_r)``, products far below 2^53 at the
@@ -23,24 +23,20 @@ ties resolve on the pair key in binary string order, so all three
 engines pick the same merge every round.  The REGISTRY output carries
 the integer triple (pair_freq, left_freq, right_freq) rather than the
 double, so the correctness hash never touches a float.
-
-Scale posture: per iteration the distributed loop runs TWO hash
-aggregates over the word table (adjacent pairs + unigram occurrences,
-both map-side combined) and one broadcast join of the pair counts
-against the tiny distinct-symbol table, then a 1-row argmax collect —
-the same bounded driver surface as the BPE loop.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from datalakehouse_spark.operators.bpe import (
-    PAIR_SEP,
-    _PAIRS_EXPR,
-    _merge_fold_expr,
-    apply_merges,
+    merge_item,
+    merge_loop,
+    merge_row,
+    rank_table,
+    tokenize_stats,
+    train_auto,
+    train_merges_local,
 )
 
 #: (rank, left, right, merged, pair_freq, left_freq, right_freq)
@@ -50,41 +46,19 @@ WP_SCHEMA = (
 )
 
 
+def _likelihood(c, ul, ur):
+    """The WordPiece score over Python ints or Spark columns alike
+    (``/`` is true division to a double in both)."""
+    return c / (ul * ur)
+
+
 def train_wordpiece_local(
     word_freqs: list[tuple[str, int]], n_merges: int, min_freq: int = 2
 ) -> list[tuple[str, str, int, int, int]]:
-    """The sequential reference trainer over an in-memory word-frequency
-    list — bit-identical to the distributed loop (same double score,
-    same tie-break).  Used executor-side by ``wordpiece_train_auto``'s
-    small-table path; never called on the driver with corpus data."""
-    words = [(list(w), f) for w, f in word_freqs if w]
-    merges: list[tuple[str, str, int, int, int]] = []
-    for _ in range(n_merges):
-        pair_counts: dict[str, int] = {}
-        uni_counts: dict[str, int] = {}
-        for syms, f in words:
-            for s in syms:
-                uni_counts[s] = uni_counts.get(s, 0) + f
-            for a, b in zip(syms, syms[1:]):
-                key = a + PAIR_SEP + b
-                pair_counts[key] = pair_counts.get(key, 0) + f
-        cand = {k: c for k, c in pair_counts.items() if c >= min_freq}
-        if not cand:
-            break
-
-        def _key(k: str):
-            left, right = k.split(PAIR_SEP)
-            return (-(cand[k] / (uni_counts[left] * uni_counts[right])), k)
-
-        best = min(cand, key=_key)
-        left, right = best.split(PAIR_SEP)
-        merges.append(
-            (left, right, cand[best], uni_counts[left], uni_counts[right])
-        )
-        words = [
-            (apply_merges(syms, [(left, right)]), f) for syms, f in words
-        ]
-    return merges
+    """The sequential trainer: ``bpe.train_merges_local`` under the
+    likelihood score, items ``(left, right, pair_freq, left_freq,
+    right_freq)``."""
+    return train_merges_local(word_freqs, n_merges, min_freq, score=_likelihood)
 
 
 def wordpiece_train(
@@ -93,72 +67,11 @@ def wordpiece_train(
     n_merges: int = 12,
     min_freq: int = 2,
 ) -> tuple[DataFrame, list[tuple[str, str, int, int, int]]]:
-    """The distributed iteration loop: per merge round, two map-side-
-    combined aggregates over the word table (pair counts + unigram
-    occurrence counts), a broadcast join of pairs against the
-    distinct-symbol counts, the likelihood argmax (1-row collect), and
-    the shared JVM ``aggregate`` merge fold with ``localCheckpoint``
-    lineage truncation (the bpe_train pattern)."""
-    cur = words.where(F.length("w") > 0).select(
-        F.expr("filter(split(w, ''), s -> s != '')").alias("syms"),
-        F.col("f").cast("long").alias("f"),
-    ).localCheckpoint(eager=True)
-
-    merges: list[tuple[str, str, int, int, int]] = []
-    for _ in range(n_merges):
-        pairs = (
-            cur.select(F.explode(F.expr(_PAIRS_EXPR)).alias("p"), "f")
-            .groupBy("p")
-            .agg(F.sum("f").alias("c"))
-            .where(F.col("c") >= min_freq)
-        )
-        unis = (
-            cur.select(F.explode("syms").alias("s"), "f")
-            .groupBy("s")
-            .agg(F.sum("f").alias("u"))
-        )
-        sep = PAIR_SEP
-        best = (
-            pairs.withColumn("left", F.split_part("p", F.lit(sep), F.lit(1)))
-            .withColumn("right", F.split_part("p", F.lit(sep), F.lit(2)))
-            # the symbol table is alphabet-bounded — broadcast twice
-            .join(
-                F.broadcast(unis.withColumnRenamed("s", "left")
-                            .withColumnRenamed("u", "ul")),
-                "left",
-            )
-            .join(
-                F.broadcast(unis.withColumnRenamed("s", "right")
-                            .withColumnRenamed("u", "ur")),
-                "right",
-            )
-            .select(
-                "p", "c", "ul", "ur",
-                (F.col("c").cast("double") / (F.col("ul") * F.col("ur"))).alias(
-                    "score"
-                ),
-            )
-            .orderBy(F.desc("score"), F.asc("p"))
-            # 1-row argmax collect per iteration — the bounded driver
-            # surface of the trainer loop
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        row = best[0]
-        left, right = row["p"].split(PAIR_SEP)
-        merges.append((left, right, int(row["c"]), int(row["ul"]), int(row["ur"])))
-        cur = cur.select(
-            F.expr(_merge_fold_expr(left, right)).alias("syms"), "f"
-        ).localCheckpoint(eager=True)
-
-    rows = [
-        (i + 1, left, right, left + right, c, ul, ur)
-        for i, (left, right, c, ul, ur) in enumerate(merges)
-    ]
-    out = spark.createDataFrame(rows, WP_SCHEMA)
-    return out.orderBy("rank"), merges
+    """The distributed trainer: ``bpe.merge_loop`` under the
+    likelihood score (two aggregates and a broadcast join per round).
+    Returns the ``WP_SCHEMA`` table ordered by rank, and the items."""
+    merges = merge_loop(words, n_merges, min_freq, score=_likelihood)
+    return rank_table(spark, WP_SCHEMA, merges, merge_row).orderBy("rank"), merges
 
 
 def wordpiece_train_auto(
@@ -168,58 +81,19 @@ def wordpiece_train_auto(
     min_freq: int = 2,
     local_rows_threshold: int = 65536,
 ) -> tuple[DataFrame, list[tuple[str, str, int, int, int]]]:
-    """Size-adaptive trainer with the fused sentinel probe
-    (bpe_train_auto's round-15 shape): ONE narrow Spark action for a
-    bounded word table (the single task trains, or emits a ``rank=-1``
-    sentinel via generator early-exit when it has seen threshold + 1
-    rows), distributed iteration loop beyond the threshold."""
-    cols = [
-        "rank", "left", "right", "merged",
-        "pair_freq", "left_freq", "right_freq",
-    ]
-    threshold = local_rows_threshold
-
-    def train_batches(it):
-        import pandas as _pd
-
-        wf: list[tuple[str, int]] = []
-        for pdf in it:
-            wf.extend(zip(pdf["w"], (int(v) for v in pdf["f"])))
-            if len(wf) > threshold:
-                yield _pd.DataFrame(
-                    [(-1, "", "", "", 0, 0, 0)], columns=cols
-                )
-                return
-        rows = [
-            (i + 1, left, right, left + right, c, ul, ur)
-            for i, (left, right, c, ul, ur) in enumerate(
-                train_wordpiece_local(wf, n_merges, min_freq)
-            )
-        ]
-        yield _pd.DataFrame(rows, columns=cols)
-
-    probe = (
-        words.where(F.length("w") > 0)
-        .select("w", F.col("f").cast("long").alias("f"))
-        .coalesce(1)
-        .mapInPandas(train_batches, schema=WP_SCHEMA)
-        .collect()
+    """WordPiece on the size-adaptive ``bpe.train_auto``: a bounded
+    word table trains in one executor task, a larger one in
+    :func:`wordpiece_train`."""
+    return train_auto(
+        spark,
+        words,
+        WP_SCHEMA,
+        local_rows_threshold,
+        lambda wf: train_wordpiece_local(wf, n_merges, min_freq),
+        lambda: wordpiece_train(spark, words, n_merges=n_merges, min_freq=min_freq),
+        merge_row,
+        merge_item,
     )
-    if probe and probe[0]["rank"] == -1:
-        return wordpiece_train(
-            spark, words, n_merges=n_merges, min_freq=min_freq
-        )
-    merges = [
-        (r["left"], r["right"], int(r["pair_freq"]),
-         int(r["left_freq"]), int(r["right_freq"]))
-        for r in sorted(probe, key=lambda r: r["rank"])
-    ]
-    rows = [
-        (i + 1, left, right, left + right, c, ul, ur)
-        for i, (left, right, c, ul, ur) in enumerate(merges)
-    ]
-    out = spark.createDataFrame(rows, WP_SCHEMA)
-    return out.orderBy("rank"), merges
 
 
 def longest_match_tokenize(
@@ -267,52 +141,13 @@ def wordpiece_tokenize_stats(
     min_len: int = 2,
     max_len: int = 12,
 ) -> DataFrame:
-    """Per-document tokenization stats under a learned WordPiece
-    inventory: ``(doc_id, n_words, n_chars, n_tokens)`` with
-    ``n_tokens`` counted by greedy longest-match.  Arrow-batched
-    ``mapInPandas``; the piece set rides the closure (bounded by the
-    merge budget).  Embarrassingly parallel over rows — the same
-    honest-Python tier as ``bpe.bpe_tokenize_stats``, with the same
-    bit-exact per-task distinct-word memo (round 16): Zipfian word
-    frequencies mean most longest-match walks repeat verbatim."""
-    import re as _re
-
-    from datalakehouse_spark.operators.bpe import WORD_PATTERN
-
-    pattern = WORD_PATTERN
-    lo, hi = min_len, max_len
+    """``bpe.tokenize_stats`` under a learned WordPiece inventory, each
+    word's ``n_tokens`` by greedy longest-match."""
     pc = frozenset(pieces)
     # inventory-derived cap, computed once per entry (not per word)
     mp = max(map(len, pc), default=1)
 
-    src = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    def count(w: str) -> int:
+        return len(longest_match_tokenize(w, pc, mp))
 
-    def batches(it):
-        import pandas as _pd
-
-        rx = _re.compile(pattern)
-        memo: dict[str, int] = {}
-
-        def ntok(w: str) -> int:
-            if w not in memo:
-                memo[w] = len(longest_match_tokenize(w, pc, mp))
-            return memo[w]
-
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                words = [
-                    w
-                    for w in rx.findall((text or "").lower())
-                    if lo <= len(w) <= hi
-                ]
-                n_chars = sum(len(w) for w in words)
-                n_tokens = sum(ntok(w) for w in words)
-                rows.append((doc_id, len(words), n_chars, n_tokens))
-            yield _pd.DataFrame(
-                rows, columns=["doc_id", "n_words", "n_chars", "n_tokens"]
-            )
-
-    return src.mapInPandas(
-        batches, schema="doc_id long, n_words int, n_chars int, n_tokens int"
-    )
+    return tokenize_stats(docs, count, text_col, id_col, min_len, max_len)

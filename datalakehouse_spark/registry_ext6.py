@@ -3455,19 +3455,157 @@ def q_qoi_pcx_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# bpe_vocab_train / bpe_tokenize_stats: the distributed BPE vocabulary
-# trainer (round 14) — the oracle REPLAYS the full iterative trainer
-# (pair-count -> argmax -> greedy merge) as a recursive CTE carrying
-# the whole bounded word table as list state, then re-applies the
-# learned merges per document.  The wav_codec_decode stateful-oracle
-# pattern, scaled from a per-asset decoder to a corpus-wide trainer.
+# The subword-tokenizer tier (rounds 14-16): BPE, WordPiece and Unigram-LM
+# trainers (operators/bpe.py's skeleton), three entries each — a
+# vocabulary trainer, its runtime over unseen docs, and the runtime over
+# a vocabulary pinned as a versioned artifact.  Every oracle REPLAYS the
+# whole trainer as a recursive CTE carrying the bounded word table as
+# list state (the wav_codec_decode stateful-oracle pattern, scaled from a
+# per-asset decoder to a corpus-wide trainer), then re-applies the model
+# per document.  The shared pieces live here, ahead of the BPE entries.
 # ---------------------------------------------------------------------------
 
-_BPE_TRAIN_DOCS = 40  # training corpus: first 40 printable docs
-_BPE_APPLY_DOCS = 60  # tokenize surface: 20 docs the trainer never saw
-_BPE_WORDS = 120  # top-K word-frequency table carried through training
+_TOK_TRAIN_DOCS = 40  # training corpus: first 40 printable docs
+_TOK_APPLY_DOCS = 60  # tokenize surface: 20 docs the trainer never saw
+_TOK_VERSIONED_DOCS = 30  # versioned tokenize surface: docs 61..90, unseen
+#                           by the trainer (1..40) and the runtimes (1..60)
+_TOK_WORDS = 120  # top-K word-frequency table carried through training
+_TOK_MIN_FREQ = 2
+
+#: the tokenizer entries' doc slices, (limit, offset) over docs by doc_id
+_TOK_APPLY = (_TOK_APPLY_DOCS, 0)
+_TOK_VERSIONED = (_TOK_VERSIONED_DOCS, _TOK_APPLY_DOCS)
+
+
+def _tok_words_sql(wmax: int) -> str:
+    """Trainer CTE head: the first 40 printable docs -> the top-120
+    ``(w, f)`` table over words of length 2..``wmax``."""
+    return f"""d AS (
+    SELECT doc_id, lower(text) AS t
+    FROM (SELECT * FROM documents ORDER BY doc_id LIMIT {_TOK_TRAIN_DOCS})
+    WHERE regexp_matches(text, '^[ -~]*$')
+),
+wa AS (SELECT unnest(regexp_extract_all(t, '[a-z]+')) AS w FROM d),
+wf AS (
+    SELECT w, CAST(COUNT(*) AS BIGINT) AS f
+    FROM wa WHERE length(w) BETWEEN 2 AND {wmax}
+    GROUP BY w ORDER BY f DESC, w LIMIT {_TOK_WORDS}
+)"""
+
+
+#: the merge trainers' initial state: every word as its character list
+_MERGE_INIT_SQL = """init AS (
+    SELECT list({syms: [w[i] FOR i IN range(1, length(w) + 1)], f: f}
+                ORDER BY w) AS words
+    FROM wf
+)"""
+
+
+def _tok_apply_head_sql(doc_limit: int, doc_offset: int, wmax: int) -> str:
+    """Apply CTE head: the doc slice's printable docs (``td``) and each
+    doc's words of length 2..``wmax`` (``tw``)."""
+    offset = f" OFFSET {doc_offset}" if doc_offset else ""
+    return f"""td AS (
+    SELECT doc_id, lower(text) AS t
+    FROM (SELECT * FROM documents ORDER BY doc_id
+          LIMIT {doc_limit}{offset})
+    WHERE regexp_matches(text, '^[ -~]*$')
+),
+tw AS (
+    SELECT doc_id,
+           list_filter(regexp_extract_all(t, '[a-z]+'),
+                       w -> length(w) BETWEEN 2 AND {wmax}) AS words
+    FROM td
+)"""
+
+
+def _tok_stats_cols_sql(versioned: bool) -> str:
+    """The apply oracles' leading output columns; ``versioned`` adds
+    the pinned ``vocab_version = 1``."""
+    version = "\n       CAST(1 AS INTEGER) AS vocab_version," if versioned else ""
+    return f"""tw.doc_id,{version}
+       CAST(len(tw.words) AS INTEGER) AS n_words,
+       CAST(COALESCE(list_sum(list_transform(tw.words, w -> length(w))), 0)
+            AS INTEGER) AS n_chars,"""
+
+
+def _tok_sum_select_sql(versioned: bool, tok_sums: str) -> str:
+    """Final SELECT of an apply oracle whose per-doc token counts come
+    from the ``(doc_id, tok_sum)`` subquery ``tok_sums``."""
+    return f"""SELECT {_tok_stats_cols_sql(versioned)}
+       CAST(COALESCE(s.tok_sum, 0) AS INTEGER) AS n_tokens
+FROM tw
+LEFT JOIN (
+    {tok_sums}
+) s USING (doc_id)
+ORDER BY tw.doc_id"""
+
+
+def _tok_train_words(spark: SparkSession, sf_dir: str, max_len: int = 12) -> DataFrame:
+    """The training word table every trainer entry reads: the first 40
+    printable docs -> ``word_frequencies`` -> the top 120 words."""
+    from datalakehouse_spark.operators.bpe import word_frequencies
+
+    sample = (
+        load_table(spark, sf_dir, "documents")
+        .orderBy("doc_id")
+        .limit(_TOK_TRAIN_DOCS)
+        .where(F.col("text").rlike("^[ -~]*$"))
+    )
+    return (
+        word_frequencies(sample, max_len=max_len)
+        .orderBy(F.desc("f"), F.asc("w"))
+        .limit(_TOK_WORDS)
+    )
+
+
+def _tok_docs(spark: SparkSession, sf_dir: str, limit: int, offset: int) -> DataFrame:
+    """The printable docs of slice ``offset + 1 .. offset + limit`` by
+    doc_id (the oracle's ``LIMIT .. OFFSET ..``), spread over 4 tasks."""
+    return (
+        load_table(spark, sf_dir, "documents")
+        .orderBy("doc_id")
+        .limit(offset + limit)
+        .offset(offset)
+        .where(F.col("text").rlike("^[ -~]*$"))
+        .select("doc_id", "text")
+        .repartition(4)
+    )
+
+
+def _unlearned_bigram(pieces) -> str:
+    """A common English bigram the trainer did not learn: a v2 payload
+    whose leak would re-tokenize every word containing it."""
+    return next(c for c in ("th", "he", "in", "er", "an", "re") if c not in pieces)
+
+
+def _tok_apply_versioned(
+    spark: SparkSession, sf_dir: str, scratch: str, schema: str,
+    items, to_row, leak, stats,
+) -> DataFrame:
+    """The versioned-artifact flow: commit the learned model as v1,
+    append the family's ``leak`` item as v2 (chosen to corrupt the hash
+    on a leak, not alias it), read the PINNED v1 back (the length
+    assert backstops the pin), and tokenize docs 61..90 with it via
+    ``stats(pinned_rows, docs)``, stamped ``vocab_version = 1``."""
+    from datalakehouse_spark.operators.bpe import rank_table
+    from datalakehouse_spark.scratch import fresh_scratch
+    from datalakehouse_spark.versioned import VersionedTable
+
+    vt = VersionedTable(spark, fresh_scratch(scratch))
+    vt.create(rank_table(spark, schema, items, to_row))
+    vt.append(rank_table(spark, schema, [leak], to_row, start=len(items) + 1))
+    pinned = sorted(vt.read(version=1).collect(), key=lambda r: r["rank"])
+    assert len(pinned) == len(items), "version pin leaked a later commit"
+    return (
+        stats(pinned, _tok_docs(spark, sf_dir, *_TOK_VERSIONED))
+        .withColumn("vocab_version", F.lit(1))
+        .select("doc_id", "vocab_version", "n_words", "n_chars", "n_tokens")
+        .orderBy("doc_id")
+    )
+
+
 _BPE_MERGES = 16  # bounded merge budget
-_BPE_MIN_FREQ = 2
 
 # greedy left-to-right merge of (bl, br) over a symbol list: fold with
 # the merged prefix as accumulator — 'aaa' + (a,a) -> [aa, a], exactly
@@ -3479,28 +3617,13 @@ _BPE_FOLD = (
     "ELSE list_concat(acc, x) END)"
 )
 
-# the shared trainer CTE chain (WITH RECURSIVE prefix supplied by the
-# enclosing statement): documents -> word frequencies -> top-K ->
-# recursive (pair-count, argmax with (freq DESC, pair ASC) tie-break,
-# greedy merge) for up to _BPE_MERGES rounds, stopping when the best
-# pair drops under _BPE_MIN_FREQ
+# the BPE trainer CTE chain (WITH RECURSIVE prefix supplied by the
+# enclosing statement): recursive (pair-count, argmax with (freq DESC,
+# pair ASC) tie-break, greedy merge) for up to _BPE_MERGES rounds,
+# stopping when the best pair drops under _TOK_MIN_FREQ
 _BPE_TRAINER_CTES = f"""
-d AS (
-    SELECT doc_id, lower(text) AS t
-    FROM (SELECT * FROM documents ORDER BY doc_id LIMIT {_BPE_TRAIN_DOCS})
-    WHERE regexp_matches(text, '^[ -~]*$')
-),
-wa AS (SELECT unnest(regexp_extract_all(t, '[a-z]+')) AS w FROM d),
-wf AS (
-    SELECT w, CAST(COUNT(*) AS BIGINT) AS f
-    FROM wa WHERE length(w) BETWEEN 2 AND 12
-    GROUP BY w ORDER BY f DESC, w LIMIT {_BPE_WORDS}
-),
-init AS (
-    SELECT list({{syms: [w[i] FOR i IN range(1, length(w) + 1)], f: f}}
-                ORDER BY w) AS words
-    FROM wf
-),
+{_tok_words_sql(12)},
+{_MERGE_INIT_SQL},
 tr AS (
     SELECT 0 AS k, words, CAST(NULL AS VARCHAR) AS bl,
            CAST(NULL AS VARCHAR) AS br, CAST(NULL AS BIGINT) AS bc
@@ -3535,7 +3658,7 @@ tr AS (
             WHERE len(pairs) > 0
         )
     )
-    WHERE bc >= {_BPE_MIN_FREQ}
+    WHERE bc >= {_TOK_MIN_FREQ}
 )
 """
 
@@ -3549,32 +3672,14 @@ FROM tr WHERE k >= 1 ORDER BY rank
 
 #: session memo: one training run per corpus (the ivf_build_stats
 #: build/serve-split pattern) — bpe_tokenize_stats reuses the merges
-#: bpe_vocab_train learned instead of re-running 16 Spark iterations
+#: bpe_vocab_train learned instead of re-running the trainer
 @session_memo("bpe_merges")
 def _bpe_trained(spark: SparkSession, sf_dir: str):
-    from datalakehouse_spark.operators.bpe import (
-        bpe_train_auto,
-        word_frequencies,
-    )
+    from datalakehouse_spark.operators.bpe import bpe_train_auto
 
-    docs = load_table(spark, sf_dir, "documents")
-    sample = (
-        docs.orderBy("doc_id")
-        .limit(_BPE_TRAIN_DOCS)
-        .where(F.col("text").rlike("^[ -~]*$"))
-    )
-    wf = (
-        word_frequencies(sample)
-        .orderBy(F.desc("f"), F.asc("w"))
-        .limit(_BPE_WORDS)
-    )
-    # size-adaptive: the bounded fixture table (<=120 words) takes
-    # the single-task executor path — one job instead of O(merges)
-    # scheduling round trips; corpus-scale word tables take the
-    # distributed iteration loop (see bpe.bpe_train_auto and the
-    # ntile_percent_rank precedent)
     _, merges = bpe_train_auto(
-        spark, wf, n_merges=_BPE_MERGES, min_freq=_BPE_MIN_FREQ
+        spark, _tok_train_words(spark, sf_dir),
+        n_merges=_BPE_MERGES, min_freq=_TOK_MIN_FREQ,
     )
     return merges
 
@@ -3587,56 +3692,41 @@ def _bpe_trained(spark: SparkSession, sf_dir: str):
     builds=("bpe_merges",),
 )
 def q_bpe_vocab_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round 14: the distributed BPE vocabulary-merge trainer
-    (operators/bpe.py — the iterative pair-count → argmax → greedy
-    re-symbolize loop of Sennrich et al. 2016, the last first-class
-    LLM-pipeline operator the registry was missing).  The corpus
-    factors to a ``(word, freq)`` table in ONE shuffle; at corpus scale
-    each of the merge rounds is a ``zip_with`` pair explode + one hash
-    aggregate + a 1-row argmax collect (the bounded driver surface)
-    with a JVM-side ``aggregate`` fold, while the bounded fixture table
-    takes the size-adaptive single-executor-task path
-    (``bpe_train_auto`` — same algorithm, one job; the
-    ntile_percent_rank adaptive precedent).  The DuckDB oracle replays
-    the ENTIRE trainer as a recursive CTE whose state row carries the
-    bounded word table as a list of structs — pair counting via
-    list-lambda math, the same (freq DESC, pair ASC) argmax, the same
-    greedy left-to-right fold — so every merge rank, pair, and
-    frequency must match bit-exactly.
+    """Round 14: the BPE vocabulary-merge trainer (operators/bpe.py —
+    the pair-count → argmax → greedy re-symbolize loop of Sennrich et
+    al. 2016).  The corpus factors to a ``(word, freq)`` table in ONE
+    shuffle; the bounded fixture table takes the size-adaptive
+    single-task path (``bpe_train_auto`` — one job), a corpus-scale one
+    the distributed loop (per round a ``zip_with`` pair explode + one
+    hash aggregate + a 1-row argmax collect, with a JVM-side
+    ``aggregate`` fold).  The DuckDB oracle replays the ENTIRE trainer
+    as a recursive CTE whose state row carries the word table as a
+    list of structs — the same (freq DESC, pair ASC) argmax, the same
+    greedy fold — so every merge rank, pair, and frequency must match
+    bit-exactly.
 
     Scale shape: the fixture bounds training at 40 docs / top-120
     words for oracle tractability; the operator itself is the 100 TB
     shape (docs/SCALING_RESULTS.md ladder) — word-hash-partitioned,
     no driver-side token tables, O(merges) tiny jobs."""
+    from datalakehouse_spark.operators.bpe import BPE_SCHEMA, merge_row, rank_table
+
     merges = _bpe_trained(spark, sf_dir)
-    rows = [
-        (i + 1, left, right, left + right, freq)
-        for i, (left, right, freq) in enumerate(merges)
-    ]
-    return spark.createDataFrame(
-        rows,
-        "rank int, left string, right string, merged string, pair_freq long",
-    ).orderBy("rank")
+    return rank_table(spark, BPE_SCHEMA, merges, merge_row).orderBy("rank")
 
 
-_BPE_APPLY_SQL = f"""
+def _bpe_apply_sql(doc_limit: int, doc_offset: int = 0, versioned: bool = False) -> str:
+    """The BPE runtime oracle over a doc slice: derive the merges with
+    the trainer CTE, then step every document's word symbolizations
+    through a second recursive CTE, one merge per recursion level."""
+    return f"""
 WITH RECURSIVE {_BPE_TRAINER_CTES},
 ml AS (
     SELECT list({{l: bl, r: br}} ORDER BY k) AS ml,
            CAST(COUNT(*) AS INTEGER) AS nm
     FROM tr WHERE k >= 1
 ),
-td AS (
-    SELECT doc_id, lower(text) AS t
-    FROM (SELECT * FROM documents ORDER BY doc_id LIMIT {_BPE_APPLY_DOCS})
-    WHERE regexp_matches(text, '^[ -~]*$')
-),
-tw AS (
-    SELECT doc_id,
-           list_filter(regexp_extract_all(t, '[a-z]+'),
-                       w -> length(w) BETWEEN 2 AND 12) AS words
-    FROM td
-),
+{_tok_apply_head_sql(doc_limit, doc_offset, 12)},
 app AS (
     SELECT doc_id, 0 AS k,
            list_transform(words,
@@ -3650,10 +3740,7 @@ app AS (
                    syms="syms", bl="ml.ml[a.k + 1].l", br="ml.ml[a.k + 1].r")})
     FROM app a, ml WHERE a.k < ml.nm
 )
-SELECT tw.doc_id,
-       CAST(len(tw.words) AS INTEGER) AS n_words,
-       CAST(COALESCE(list_sum(list_transform(tw.words, w -> length(w))), 0)
-            AS INTEGER) AS n_chars,
+SELECT {_tok_stats_cols_sql(versioned)}
        CAST(COALESCE(list_sum(list_transform(fin.ws, s -> len(s))), 0)
             AS INTEGER) AS n_tokens
 FROM tw
@@ -3665,92 +3752,33 @@ ORDER BY doc_id
 
 @register(
     "bpe_tokenize_stats",
-    _BPE_APPLY_SQL,
+    _bpe_apply_sql(*_TOK_APPLY),
     "BPE tokenizer application: learned merges over unseen docs == CTE replay",
     eager=True,  # build/serve split: trains (memoized) in a cold session
 )
 def q_bpe_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round 14: the consumer side of the BPE trainer — apply the
-    16 learned merges to a 60-doc sample (the last 20 docs the trainer
-    never saw, so this pins generalization, not memorization) and
-    report per-document token compression: ``n_words``, ``n_chars``
-    (pre-merge symbol count), ``n_tokens`` (post-merge).  Application
-    replays merges in rank order, each greedy left-to-right — an
-    Arrow-batched ``mapInPandas`` whose closure carries only the
-    ≤16-entry merge list (operators/bpe.py ``apply_merges``).  The
-    oracle derives the SAME merges with the trainer CTE, then steps
-    every document's word symbolizations through a second recursive
-    CTE, one merge per recursion level.
+    16 learned merges to the 60-doc sample (the last 20 docs the
+    trainer never saw, so this pins generalization, not memorization)
+    and report per-document token compression: ``n_words``,
+    ``n_chars`` (pre-merge symbol count), ``n_tokens`` (post-merge),
+    by merge replay in rank order, each merge greedy left-to-right
+    (``bpe_tokenize_stats``).
 
     Scale shape: tokenization is a pure map stage — embarrassingly
     parallel over documents, no shuffle; the training cost is paid
     once per session (shared memo with ``bpe_vocab_train``)."""
     from datalakehouse_spark.operators.bpe import bpe_tokenize_stats
 
-    merges = [(left, right) for left, right, _ in _bpe_trained(spark, sf_dir)]
-    docs = load_table(spark, sf_dir, "documents")
-    sample = (
-        docs.orderBy("doc_id")
-        .limit(_BPE_APPLY_DOCS)
-        .where(F.col("text").rlike("^[ -~]*$"))
-        .select("doc_id", "text")
-        .repartition(4)
+    merges = _bpe_trained(spark, sf_dir)
+    return bpe_tokenize_stats(_tok_docs(spark, sf_dir, *_TOK_APPLY), merges).orderBy(
+        "doc_id"
     )
-    return bpe_tokenize_stats(sample, merges).orderBy("doc_id")
-
-
-_BPE_VERSIONED_DOCS = 30  # tokenize surface: docs 61..90, unseen by BOTH
-#                           the trainer (1..40) and bpe_tokenize_stats (1..60)
-
-_BPE_APPLY_VERSIONED_SQL = f"""
-WITH RECURSIVE {_BPE_TRAINER_CTES},
-ml AS (
-    SELECT list({{l: bl, r: br}} ORDER BY k) AS ml,
-           CAST(COUNT(*) AS INTEGER) AS nm
-    FROM tr WHERE k >= 1
-),
-td AS (
-    SELECT doc_id, lower(text) AS t
-    FROM (SELECT * FROM documents ORDER BY doc_id
-          LIMIT {_BPE_VERSIONED_DOCS} OFFSET {_BPE_APPLY_DOCS})
-    WHERE regexp_matches(text, '^[ -~]*$')
-),
-tw AS (
-    SELECT doc_id,
-           list_filter(regexp_extract_all(t, '[a-z]+'),
-                       w -> length(w) BETWEEN 2 AND 12) AS words
-    FROM td
-),
-app AS (
-    SELECT doc_id, 0 AS k,
-           list_transform(words,
-               w -> [w[i] FOR i IN range(1, length(w) + 1)]) AS ws
-    FROM tw
-    UNION ALL
-    SELECT a.doc_id, a.k + 1,
-           list_transform(
-               a.ws,
-               syms -> {_BPE_FOLD.format(
-                   syms="syms", bl="ml.ml[a.k + 1].l", br="ml.ml[a.k + 1].r")})
-    FROM app a, ml WHERE a.k < ml.nm
-)
-SELECT tw.doc_id,
-       CAST(1 AS INTEGER) AS vocab_version,
-       CAST(len(tw.words) AS INTEGER) AS n_words,
-       CAST(COALESCE(list_sum(list_transform(tw.words, w -> length(w))), 0)
-            AS INTEGER) AS n_chars,
-       CAST(COALESCE(list_sum(list_transform(fin.ws, s -> len(s))), 0)
-            AS INTEGER) AS n_tokens
-FROM tw
-JOIN (SELECT doc_id, ws FROM app, ml WHERE app.k = ml.nm) fin
-  USING (doc_id)
-ORDER BY doc_id
-"""
 
 
 @register(
     "bpe_vocab_apply_versioned",
-    _BPE_APPLY_VERSIONED_SQL,
+    _bpe_apply_sql(*_TOK_VERSIONED, versioned=True),
     "BPE vocab pinned as a versioned artifact: tokenize with v1 while v2 exists",
     eager=True,  # materializing surface: commits vocab v1 + v2, collects the pinned v1
 )
@@ -3759,64 +3787,27 @@ def q_bpe_vocab_apply_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     for a learned tokenizer vocabulary — the merge table is COMMITTED
     through VersionedTable (M8, versioned.py), a NEWER vocabulary lands
     as version 2 (training never stops at 100 TB), and the tokenizer
-    reads the PINNED version 1, so its output is reproducible no matter
-    how far the vocab artifact has advanced.  The entry tokenizes docs
-    61..90 — a slice neither the trainer (1..40) nor
-    ``bpe_tokenize_stats`` (1..60) ever touched — with the v1 merges
-    and stamps the pinned ``vocab_version``.
-
-    The oracle replays the trainer CTE for the merges (they ARE v1 —
-    the versioned round-trip must be lossless, which is exactly what
-    hash-matching this entry proves: a corrupted or mis-pinned read
-    would tokenize differently) and steps the new slice through the
-    same recursive fold.
+    reads the PINNED version 1 over docs 61..90, so its output is
+    reproducible no matter how far the vocab artifact has advanced.
+    The v2 merge ``(qq, qq)`` can never be learned from ``[a-z]+``
+    fixtures ranked by the real trainer, so a leak would corrupt the
+    hash, not alias it.  The oracle's merges ARE v1 — hash-matching
+    proves the versioned round-trip lossless.
 
     Scale shape: the vocab artifact is ≤ n_merges rows — versioning it
-    costs one tiny parquet commit; tokenization stays a pure map stage.
-    The 90-row ``row_number`` slice runs over an already-LIMITed frame
-    (fixture pagination, the serving_page idiom), not the corpus."""
-    from pyspark.sql import Window
-
-    from datalakehouse_spark.operators.bpe import bpe_tokenize_stats
-    from datalakehouse_spark.scratch import fresh_scratch
-    from datalakehouse_spark.versioned import VersionedTable
-
-    schema = (
-        "rank int, left string, right string, merged string, pair_freq long"
+    costs one tiny parquet commit; tokenization stays a pure map stage."""
+    from datalakehouse_spark.operators.bpe import (
+        BPE_SCHEMA,
+        bpe_tokenize_stats,
+        merge_row,
     )
-    merges = _bpe_trained(spark, sf_dir)
-    rows = [
-        (i + 1, left, right, left + right, freq)
-        for i, (left, right, freq) in enumerate(merges)
-    ]
-    vt = VersionedTable(spark, fresh_scratch("bpe_vocab_versioned"))
-    vt.create(spark.createDataFrame(rows, schema))
-    # v2: one more merge learned later — the pinned reader must not see
-    # it ('qq' can never be learned from [a-z]+ fixtures ranked by the
-    # real trainer, so leakage would corrupt the hash, not alias it)
-    vt.append(
-        spark.createDataFrame([(len(rows) + 1, "qq", "qq", "qqqq", 0)], schema)
-    )
-    pinned = sorted(vt.read(version=1).collect(), key=lambda r: r["rank"])
-    assert len(pinned) == len(rows), "version pin leaked a later commit"
-    pinned_merges = [(r["left"], r["right"]) for r in pinned]
 
-    docs = load_table(spark, sf_dir, "documents")
-    head = docs.orderBy("doc_id").limit(_BPE_APPLY_DOCS + _BPE_VERSIONED_DOCS)
-    sliced = (
-        head.withColumn(
-            "_rn", F.row_number().over(Window.orderBy("doc_id"))
-        )
-        .where(F.col("_rn") > _BPE_APPLY_DOCS)
-        .where(F.col("text").rlike("^[ -~]*$"))
-        .select("doc_id", "text")
-        .repartition(4)
-    )
-    return (
-        bpe_tokenize_stats(sliced, pinned_merges)
-        .withColumn("vocab_version", F.lit(1))
-        .select("doc_id", "vocab_version", "n_words", "n_chars", "n_tokens")
-        .orderBy("doc_id")
+    return _tok_apply_versioned(
+        spark, sf_dir, "bpe_vocab_versioned", BPE_SCHEMA,
+        _bpe_trained(spark, sf_dir), merge_row, ("qq", "qq", 0),
+        lambda pinned, docs: bpe_tokenize_stats(
+            docs, [(r["left"], r["right"]) for r in pinned]
+        ),
     )
 
 
@@ -3887,35 +3878,28 @@ def q_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# wordpiece_vocab_train: the likelihood-scored subword trainer (round 15)
-# — the BPE trainer's sibling (Schuster & Nakajima 2012, the BERT
-# tokenizer's trainer): same greedy merge loop, but the argmax maximizes
-# count(ab) / (count(a) * count(b)).  The oracle replays the whole
-# trainer as a recursive CTE like the BPE one, additionally carrying
+# wordpiece_vocab_train / wordpiece_tokenize_stats: the likelihood-scored
+# subword trainer (round 15) — the BPE merge loop whose argmax maximizes
+# count(ab) / (count(a) * count(b)) (Schuster & Nakajima 2012, the BERT
+# tokenizer's trainer).  The oracle's trainer CTE additionally carries
 # per-round unigram occurrence counts for the likelihood score.
 # ---------------------------------------------------------------------------
 
 _WP_MERGES = 12
 
-# the shared WordPiece trainer CTE chain (WITH RECURSIVE prefix
-# supplied by the enclosing statement) — the BPE chain's shape plus
-# per-round unigram counts for the likelihood argmax
-_WP_TRAINER_CTES = f"""d AS (
-    SELECT doc_id, lower(text) AS t
-    FROM (SELECT * FROM documents ORDER BY doc_id LIMIT {_BPE_TRAIN_DOCS})
-    WHERE regexp_matches(text, '^[ -~]*$')
-),
-wa AS (SELECT unnest(regexp_extract_all(t, '[a-z]+')) AS w FROM d),
-wf AS (
-    SELECT w, CAST(COUNT(*) AS BIGINT) AS f
-    FROM wa WHERE length(w) BETWEEN 2 AND 12
-    GROUP BY w ORDER BY f DESC, w LIMIT {_BPE_WORDS}
-),
-init AS (
-    SELECT list({{syms: [w[i] FOR i IN range(1, length(w) + 1)], f: f}}
-                ORDER BY w) AS words
-    FROM wf
-),
+def _wp_uni_sql(i: int) -> str:
+    """The unigram count of candidate pair ``y``'s ``i``-th symbol."""
+    return (
+        "list_sum(list_transform(list_filter(unis, z -> "
+        f"z.s = string_split(y.p, chr(1))[{i}]), z -> z.f))"
+    )
+
+
+# the WordPiece trainer CTE chain (WITH RECURSIVE prefix supplied by
+# the enclosing statement) — the BPE chain's shape plus per-round
+# unigram counts for the likelihood argmax
+_WP_TRAINER_CTES = f"""{_tok_words_sql(12)},
+{_MERGE_INIT_SQL},
 tr AS (
     SELECT 0 AS k, words, CAST(NULL AS VARCHAR) AS bl,
            CAST(NULL AS VARCHAR) AS br, CAST(NULL AS BIGINT) AS bc,
@@ -3938,23 +3922,9 @@ tr AS (
                 list_transform(
                     cands,
                     y -> {{ns: -(CAST(y.c AS DOUBLE) / (
-                              list_sum(list_transform(
-                                  list_filter(unis, z ->
-                                      z.s = string_split(y.p, chr(1))[1]),
-                                  z -> z.f))
-                              * list_sum(list_transform(
-                                  list_filter(unis, z ->
-                                      z.s = string_split(y.p, chr(1))[2]),
-                                  z -> z.f)))),
+                              {_wp_uni_sql(1)} * {_wp_uni_sql(2)})),
                           p: y.p, c: y.c,
-                          ul: list_sum(list_transform(
-                                  list_filter(unis, z ->
-                                      z.s = string_split(y.p, chr(1))[1]),
-                                  z -> z.f)),
-                          ur: list_sum(list_transform(
-                                  list_filter(unis, z ->
-                                      z.s = string_split(y.p, chr(1))[2]),
-                                  z -> z.f))}}
+                          ul: {_wp_uni_sql(1)}, ur: {_wp_uni_sql(2)}}}
                 ))[1] AS best
             FROM (
                 SELECT k, words, unis,
@@ -3965,7 +3935,7 @@ tr AS (
                                          list_filter(pairs, x -> x.p = p),
                                          x -> x.f)),
                                      p: p}}),
-                           y -> y.c >= {_BPE_MIN_FREQ}) AS cands
+                           y -> y.c >= {_TOK_MIN_FREQ}) AS cands
                 FROM (
                     SELECT k, words,
                            flatten(list_transform(words, w ->
@@ -3992,6 +3962,17 @@ FROM tr WHERE k >= 1 ORDER BY rank
 """
 
 
+def _wp_trained(spark: SparkSession, sf_dir: str):
+    """Train the WordPiece vocabulary, cold (no cross-entry memo: every
+    bench timing of a WordPiece entry is a cold build)."""
+    from datalakehouse_spark.operators.wordpiece import wordpiece_train_auto
+
+    return wordpiece_train_auto(
+        spark, _tok_train_words(spark, sf_dir),
+        n_merges=_WP_MERGES, min_freq=_TOK_MIN_FREQ,
+    )
+
+
 @register(
     "wordpiece_vocab_train",
     _WP_TRAIN_SQL,
@@ -4001,61 +3982,33 @@ FROM tr WHERE k >= 1 ORDER BY rank
 def q_wordpiece_vocab_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round 15: the likelihood-scored subword trainer
     (operators/wordpiece.py — Schuster & Nakajima 2012, the BERT
-    tokenizer's trainer), completing the classical tokenizer-trainer
-    family next to BPE.  Same corpus factoring and greedy fold as the
-    BPE entry (identical 40-doc / top-120-word fixture bound), but the
-    per-round argmax maximizes ``count(ab) / (count(a) * count(b))``
-    — the unit test pins a corpus where the two trainers genuinely
-    pick different merges.  The output carries the exact integer
-    triple (pair_freq, left_freq, right_freq), so the correctness
-    hash never compares a floating-point score; the score itself is
-    one IEEE double division of exact integers, bit-identical across
-    Python, Spark SQL, and DuckDB (argmax ties resolve on the pair
-    key).  The oracle replays the ENTIRE trainer as a recursive CTE
-    carrying the word table AND per-round unigram counts as list
-    state.
+    tokenizer's trainer) on the BPE entry's fixture (40 docs, top-120
+    words): the per-round argmax maximizes ``count(ab) / (count(a) *
+    count(b))`` — the unit test pins a corpus where the two trainers
+    genuinely pick different merges.  The output carries the exact
+    integer triple (pair_freq, left_freq, right_freq), so the
+    correctness hash never compares a floating-point score; the score
+    itself is one IEEE double division of exact integers, bit-identical
+    across Python, Spark SQL, and DuckDB (argmax ties resolve on the
+    pair key).
 
     Scale shape: per round, two map-side-combined aggregates over the
     word table + a broadcast join against the alphabet-bounded symbol
     table + a 1-row argmax collect; the bounded fixture takes the
-    fused single-task probe path (ONE narrow Spark action cold —
-    the round-15 bpe_train_auto shape)."""
-    from datalakehouse_spark.operators.bpe import word_frequencies
-    from datalakehouse_spark.operators.wordpiece import wordpiece_train_auto
-
-    docs = load_table(spark, sf_dir, "documents")
-    sample = (
-        docs.orderBy("doc_id")
-        .limit(_BPE_TRAIN_DOCS)
-        .where(F.col("text").rlike("^[ -~]*$"))
-    )
-    wf = (
-        word_frequencies(sample)
-        .orderBy(F.desc("f"), F.asc("w"))
-        .limit(_BPE_WORDS)
-    )
-    out, _ = wordpiece_train_auto(
-        spark, wf, n_merges=_WP_MERGES, min_freq=_BPE_MIN_FREQ
-    )
-    return out
+    fused single-task probe path (ONE narrow Spark action cold)."""
+    return _wp_trained(spark, sf_dir)[0]
 
 
-_WP_APPLY_SQL = f"""
+def _wp_apply_sql(doc_limit: int, doc_offset: int = 0, versioned: bool = False) -> str:
+    """The WordPiece runtime oracle over a doc slice: derive the pieces
+    with the trainer CTE, then step every word through a per-word
+    recursive longest-match CTE."""
+    return f"""
 WITH RECURSIVE {_WP_TRAINER_CTES},
 pieces AS (
     SELECT list_distinct(list(bl || br)) AS pl FROM tr WHERE k >= 1
 ),
-td AS (
-    SELECT doc_id, lower(text) AS t
-    FROM (SELECT * FROM documents ORDER BY doc_id LIMIT {_BPE_APPLY_DOCS})
-    WHERE regexp_matches(text, '^[ -~]*$')
-),
-tw AS (
-    SELECT doc_id,
-           list_filter(regexp_extract_all(t, '[a-z]+'),
-                       w -> length(w) BETWEEN 2 AND 12) AS words
-    FROM td
-),
+{_tok_apply_head_sql(doc_limit, doc_offset, 12)},
 we AS (
     SELECT doc_id, u.i AS widx, u.w AS w
     FROM (
@@ -4080,23 +4033,14 @@ tok AS (
         FROM tok, pieces WHERE pos < length(w)
     )
 )
-SELECT tw.doc_id,
-       CAST(len(tw.words) AS INTEGER) AS n_words,
-       CAST(COALESCE(list_sum(list_transform(tw.words, w -> length(w))), 0)
-            AS INTEGER) AS n_chars,
-       CAST(COALESCE(s.tok_sum, 0) AS INTEGER) AS n_tokens
-FROM tw
-LEFT JOIN (
-    SELECT doc_id, SUM(cnt) AS tok_sum
-    FROM tok WHERE pos = length(w) GROUP BY doc_id
-) s USING (doc_id)
-ORDER BY tw.doc_id
+{_tok_sum_select_sql(versioned, '''SELECT doc_id, SUM(cnt) AS tok_sum
+    FROM tok WHERE pos = length(w) GROUP BY doc_id''')}
 """
 
 
 @register(
     "wordpiece_tokenize_stats",
-    _WP_APPLY_SQL,
+    _wp_apply_sql(*_TOK_APPLY),
     "WordPiece inference: greedy longest-match over the learned pieces == CTE replay",
     eager=True,  # build/serve split: retrains at build, unmemoized
 )
@@ -4105,51 +4049,21 @@ def q_wordpiece_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the learned piece inventory (the BERT tokenizer's inference
     algorithm), which genuinely differs from BPE's merge replay
     (test-pinned: pieces {ab, bc} from rank order [(b,c), (a,b)]
-    tokenize 'abc' as [ab, c] here but [a, bc] under replay).  Applies
-    the 12-piece inventory learned by ``wordpiece_vocab_train``'s
-    trainer to the 60-doc sample (the last 20 unseen by the trainer)
-    and reports per-document compression; the oracle re-derives the
-    SAME pieces with the trainer CTE, then steps every word through a
-    per-word recursive longest-match CTE.
+    tokenize 'abc' as [ab, c] here but [a, bc] under replay), over the
+    60-doc sample (the last 20 unseen by the trainer).
 
     The entry retrains its own vocabulary at build (ONE narrow Spark
     action — the fused probe) instead of memoizing across entries:
     that keeps every bench timing a cold build and avoids the
     build-once/cold-reset machinery (``QuerySpec.builds``) the
-    memoized BPE pair needs.
+    memoized BPE pair needs.  Tokenization is a pure map stage."""
+    from datalakehouse_spark.operators.wordpiece import wordpiece_tokenize_stats
 
-    Scale shape: tokenization is a pure map stage (mapInPandas, piece
-    set in the closure); training cost is the bounded word-table
-    action."""
-    from datalakehouse_spark.operators.bpe import word_frequencies
-    from datalakehouse_spark.operators.wordpiece import (
-        wordpiece_tokenize_stats,
-        wordpiece_train_auto,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    sample = (
-        docs.orderBy("doc_id")
-        .limit(_BPE_TRAIN_DOCS)
-        .where(F.col("text").rlike("^[ -~]*$"))
-    )
-    wf = (
-        word_frequencies(sample)
-        .orderBy(F.desc("f"), F.asc("w"))
-        .limit(_BPE_WORDS)
-    )
-    _, merges = wordpiece_train_auto(
-        spark, wf, n_merges=_WP_MERGES, min_freq=_BPE_MIN_FREQ
-    )
+    _, merges = _wp_trained(spark, sf_dir)
     pieces = {left + right for left, right, *_ in merges}
-    apply_docs = (
-        docs.orderBy("doc_id")
-        .limit(_BPE_APPLY_DOCS)
-        .where(F.col("text").rlike("^[ -~]*$"))
-        .select("doc_id", "text")
-        .repartition(4)
-    )
-    return wordpiece_tokenize_stats(apply_docs, pieces).orderBy("doc_id")
+    return wordpiece_tokenize_stats(
+        _tok_docs(spark, sf_dir, *_TOK_APPLY), pieces
+    ).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -4322,69 +4236,13 @@ def q_streaming_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # wordpiece_vocab_apply_versioned: the WordPiece vocabulary through the
 # versioned-artifact path (round 16, VERDICT r15 #7 — the
-# bpe_vocab_apply_versioned symmetry): commit v1, land a v2, tokenize a
-# fresh doc slice with the PINNED v1 inventory.
+# bpe_vocab_apply_versioned symmetry).
 # ---------------------------------------------------------------------------
-
-_WP_APPLY_VERSIONED_SQL = f"""
-WITH RECURSIVE {_WP_TRAINER_CTES},
-pieces AS (
-    SELECT list_distinct(list(bl || br)) AS pl FROM tr WHERE k >= 1
-),
-td AS (
-    SELECT doc_id, lower(text) AS t
-    FROM (SELECT * FROM documents ORDER BY doc_id
-          LIMIT {_BPE_VERSIONED_DOCS} OFFSET {_BPE_APPLY_DOCS})
-    WHERE regexp_matches(text, '^[ -~]*$')
-),
-tw AS (
-    SELECT doc_id,
-           list_filter(regexp_extract_all(t, '[a-z]+'),
-                       w -> length(w) BETWEEN 2 AND 12) AS words
-    FROM td
-),
-we AS (
-    SELECT doc_id, u.i AS widx, u.w AS w
-    FROM (
-        SELECT doc_id,
-               unnest([{{i: i, w: words[i]}}
-                       FOR i IN range(1, len(words) + 1)]) AS u
-        FROM tw
-    )
-),
-tok AS (
-    SELECT doc_id, widx, w, 0 AS pos, 0 AS cnt FROM we
-    UNION ALL
-    SELECT doc_id, widx, w,
-           pos + length(coalesce(best, substr(w, pos + 1, 1))) AS pos,
-           cnt + 1
-    FROM (
-        SELECT doc_id, widx, w, pos, cnt,
-               list_sort(list_transform(
-                   list_filter(pieces.pl,
-                       p -> substr(w, pos + 1, length(p)) = p),
-                   p -> {{nl: -length(p), p: p}}))[1].p AS best
-        FROM tok, pieces WHERE pos < length(w)
-    )
-)
-SELECT tw.doc_id,
-       CAST(1 AS INTEGER) AS vocab_version,
-       CAST(len(tw.words) AS INTEGER) AS n_words,
-       CAST(COALESCE(list_sum(list_transform(tw.words, w -> length(w))), 0)
-            AS INTEGER) AS n_chars,
-       CAST(COALESCE(s.tok_sum, 0) AS INTEGER) AS n_tokens
-FROM tw
-LEFT JOIN (
-    SELECT doc_id, SUM(cnt) AS tok_sum
-    FROM tok WHERE pos = length(w) GROUP BY doc_id
-) s USING (doc_id)
-ORDER BY tw.doc_id
-"""
 
 
 @register(
     "wordpiece_vocab_apply_versioned",
-    _WP_APPLY_VERSIONED_SQL,
+    _wp_apply_sql(*_TOK_VERSIONED, versioned=True),
     "WordPiece vocab pinned as a versioned artifact: tokenize with v1 while v2 exists",
     # materializing surface: trains, commits v1 + v2, collects the pinned v1
     eager=True,
@@ -4393,89 +4251,28 @@ def q_wordpiece_vocab_apply_versioned(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Round 16 (VERDICT r15 #7): the versioned-artifact persistence
-    contract for the WordPiece vocabulary — the
-    ``bpe_vocab_apply_versioned`` symmetry, re-exercising M8
-    (versioned.py) against the newest trainer.  The learned merge table
-    commits as version 1, a LATER vocabulary lands as version 2, and
-    the tokenizer reads the PINNED v1, so its output is reproducible no
-    matter how far the artifact has advanced.  Tokenizes docs 61..90 —
-    a slice neither the trainer (1..40) nor ``wordpiece_tokenize_stats``
-    (1..60) ever touched — by greedy longest-match over the v1 piece
-    inventory and stamps the pinned ``vocab_version``.
-
-    The v2 payload is chosen to BITE on leakage (stronger than the BPE
-    twin's): a common English bigram the v1 trainer did NOT learn —
-    were the pinned read to leak v2, longest-match would tokenize every
-    word containing that bigram differently and the hash would flip;
-    the length assert backstops the pin either way.
-
-    Scale shape: the vocab artifact is ≤ n_merges rows (one tiny
-    parquet commit per version); tokenization stays a pure map stage
-    (mapInPandas, pieces + inventory-derived length cap in the
-    closure)."""
-    from pyspark.sql import Window
-
-    from datalakehouse_spark.operators.bpe import word_frequencies
+    contract for the WordPiece vocabulary (``_tok_apply_versioned``):
+    the learned merge table commits as version 1, a LATER vocabulary
+    lands as version 2, and longest-match over the PINNED v1 pieces
+    tokenizes docs 61..90.  The v2 payload bites on leakage (stronger
+    than the BPE twin's): a common English bigram the v1 trainer did
+    NOT learn — were the pinned read to leak v2, longest-match would
+    tokenize every word containing that bigram differently and the
+    hash would flip."""
+    from datalakehouse_spark.operators.bpe import merge_row
     from datalakehouse_spark.operators.wordpiece import (
         WP_SCHEMA,
         wordpiece_tokenize_stats,
-        wordpiece_train_auto,
     )
-    from datalakehouse_spark.scratch import fresh_scratch
-    from datalakehouse_spark.versioned import VersionedTable
 
-    docs = load_table(spark, sf_dir, "documents")
-    sample = (
-        docs.orderBy("doc_id")
-        .limit(_BPE_TRAIN_DOCS)
-        .where(F.col("text").rlike("^[ -~]*$"))
-    )
-    wf = (
-        word_frequencies(sample)
-        .orderBy(F.desc("f"), F.asc("w"))
-        .limit(_BPE_WORDS)
-    )
-    _, merges = wordpiece_train_auto(
-        spark, wf, n_merges=_WP_MERGES, min_freq=_BPE_MIN_FREQ
-    )
-    rows = [
-        (i + 1, left, right, left + right, c, ul, ur)
-        for i, (left, right, c, ul, ur) in enumerate(merges)
-    ]
-    vt = VersionedTable(spark, fresh_scratch("wp_vocab_versioned"))
-    vt.create(spark.createDataFrame(rows, WP_SCHEMA))
-    v1_pieces = {left + right for left, right, *_ in merges}
-    # v2: a frequent bigram v1 did not learn — leakage would re-tokenize
-    # every word containing it and corrupt the hash, not alias it
-    leak_bigram = next(
-        c for c in ("th", "he", "in", "er", "an", "re") if c not in v1_pieces
-    )
-    vt.append(
-        spark.createDataFrame(
-            [(len(rows) + 1, leak_bigram[0], leak_bigram[1], leak_bigram,
-              0, 0, 0)],
-            WP_SCHEMA,
-        )
-    )
-    pinned = sorted(vt.read(version=1).collect(), key=lambda r: r["rank"])
-    assert len(pinned) == len(rows), "version pin leaked a later commit"
-    pieces = {r["merged"] for r in pinned}
-
-    head = docs.orderBy("doc_id").limit(_BPE_APPLY_DOCS + _BPE_VERSIONED_DOCS)
-    sliced = (
-        head.withColumn(
-            "_rn", F.row_number().over(Window.orderBy("doc_id"))
-        )
-        .where(F.col("_rn") > _BPE_APPLY_DOCS)
-        .where(F.col("text").rlike("^[ -~]*$"))
-        .select("doc_id", "text")
-        .repartition(4)
-    )
-    return (
-        wordpiece_tokenize_stats(sliced, pieces)
-        .withColumn("vocab_version", F.lit(1))
-        .select("doc_id", "vocab_version", "n_words", "n_chars", "n_tokens")
-        .orderBy("doc_id")
+    _, merges = _wp_trained(spark, sf_dir)
+    leak = _unlearned_bigram({left + right for left, right, *_ in merges})
+    return _tok_apply_versioned(
+        spark, sf_dir, "wp_vocab_versioned", WP_SCHEMA,
+        merges, merge_row, (leak[0], leak[1], 0, 0, 0),
+        lambda pinned, docs: wordpiece_tokenize_stats(
+            docs, {r["merged"] for r in pinned}
+        ),
     )
 
 
@@ -4493,26 +4290,21 @@ def q_wordpiece_vocab_apply_versioned(
 _UNI_MAXP = 6  # longest seeded piece
 _UNI_SEEDK = 40  # multi-char seed cap (chars always kept)
 _UNI_ROUNDS = 3  # hard-EM rounds
-_UNI_WMIN, _UNI_WMAX = 2, 8  # word-length contract: <= 2^7 segmentations
-
-
-def _uni_let1(bind_expr: str, var: str, body: str) -> str:
-    """DuckDB let-binding idiom: single-element list + transform."""
-    return f"list_transform([{bind_expr}], {var} -> {body})[1]"
+_UNI_WMAX = 8  # word-length contract [a-z]{2,8}: <= 2^7 segmentations
 
 
 def _uni_segments_expr(w: str, m: str) -> str:
     """Segmentation of word ``w`` under cut-point bitmask ``m``: bit
     i-1 set => cut before position i (operators/unigram.py's
-    best_segmentation enumerates the identical masks)."""
+    best_segmentation enumerates the identical masks), let-bound as
+    ``b`` by DuckDB's single-element-list + transform idiom."""
     cuts = (
         f"([CAST(0 AS BIGINT)] || [i FOR i IN range(1, length({w})) "
         f"IF (({m} >> (i - 1)) & 1) = 1] || [CAST(length({w}) AS BIGINT)])"
     )
-    return _uni_let1(
-        cuts,
-        "b",
-        f"[substr({w}, b[j] + 1, b[j + 1] - b[j]) FOR j IN range(1, len(b))]",
+    return (
+        f"list_transform([{cuts}], b -> "
+        f"[substr({w}, b[j] + 1, b[j + 1] - b[j]) FOR j IN range(1, len(b))])[1]"
     )
 
 
@@ -4545,23 +4337,13 @@ def _uni_best_expr(w: str) -> str:
     )
 
 
-#: the shared trainer CTE chain (WITH RECURSIVE prefix supplied by the
-#: enclosing statement): documents -> word frequencies -> substring
-#: seed inventory -> ROUNDS of hard-EM (enumeration argmax per word,
-#: integer usage re-counts), the inventory FIXED after seeding with
-#: only counts updating (zero-usage pieces stay valid at score 0.0 —
-#: exactly what train_unigram_local carries).
-_UNI_TRAINER_CTES = f"""d AS (
-    SELECT doc_id, lower(text) AS t
-    FROM (SELECT * FROM documents ORDER BY doc_id LIMIT {_BPE_TRAIN_DOCS})
-    WHERE regexp_matches(text, '^[ -~]*$')
-),
-wa AS (SELECT unnest(regexp_extract_all(t, '[a-z]+')) AS w FROM d),
-wf AS (
-    SELECT w, CAST(COUNT(*) AS BIGINT) AS f
-    FROM wa WHERE length(w) BETWEEN {_UNI_WMIN} AND {_UNI_WMAX}
-    GROUP BY w ORDER BY f DESC, w LIMIT {_BPE_WORDS}
-),
+#: the unigram trainer CTE chain (WITH RECURSIVE prefix supplied by the
+#: enclosing statement): word frequencies -> substring seed inventory
+#: -> ROUNDS of hard-EM (enumeration argmax per word, integer usage
+#: re-counts), the inventory FIXED after seeding with only counts
+#: updating (zero-usage pieces stay valid at score 0.0 — exactly what
+#: train_unigram_local carries).
+_UNI_TRAINER_CTES = f"""{_tok_words_sql(_UNI_WMAX)},
 occ AS (
     SELECT unnest(flatten([[substr(w, i, L) FOR i IN range(1, length(w) - L + 2)]
                            FOR L IN range(1, {_UNI_MAXP} + 1)])) AS p, f
@@ -4572,7 +4354,7 @@ seeds AS (
     SELECT p, c FROM pcnt WHERE length(p) = 1
     UNION ALL
     SELECT p, c FROM (SELECT p, c FROM pcnt
-                      WHERE length(p) >= 2 AND c >= {_BPE_MIN_FREQ}
+                      WHERE length(p) >= 2 AND c >= {_TOK_MIN_FREQ}
                       ORDER BY c DESC, p LIMIT {_UNI_SEEDK})
 ),
 wl AS (SELECT list({{w: w, f: f}} ORDER BY w) AS wl FROM wf),
@@ -4607,6 +4389,20 @@ ORDER BY rank
 """
 
 
+def _uni_trained(spark: SparkSession, sf_dir: str):
+    """Train the unigram inventory, cold (the WordPiece posture)."""
+    from datalakehouse_spark.operators.unigram import unigram_train_auto
+
+    return unigram_train_auto(
+        spark,
+        _tok_train_words(spark, sf_dir, max_len=_UNI_WMAX),
+        rounds=_UNI_ROUNDS,
+        max_piece_len=_UNI_MAXP,
+        min_freq=_TOK_MIN_FREQ,
+        seed_k=_UNI_SEEDK,
+    )
+
+
 @register(
     "unigram_vocab_train",
     _UNI_TRAIN_SQL,
@@ -4616,69 +4412,35 @@ ORDER BY rank
 def q_unigram_vocab_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round 16 (VERDICT r15 #2): the Unigram-LM subword trainer
     (operators/unigram.py — Kudo 2018, the SentencePiece unigram
-    model), the third classical trainer next to BPE and WordPiece and
-    the one a modern LLM data pipeline actually tokenizes with.  The
-    piece inventory seeds from every substring occurrence of the
-    word-frequency table (alphabet always kept; multi-char pieces
+    model), the one a modern LLM data pipeline actually tokenizes
+    with.  The piece inventory seeds from every substring occurrence of
+    the word-frequency table (alphabet always kept; multi-char pieces
     min_freq-gated and top-K-capped), then hard (Viterbi) EM
     re-estimates integer usage counts: the E-step segments each word by
-    EXACT ENUMERATION over cut-point bitmasks (the ``[a-z]{{2,8}}``
+    EXACT ENUMERATION over cut-point bitmasks (the ``[a-z]{2,8}``
     word contract bounds a word at 2^7 segmentations), the M-step
     re-counts.  Hard EM is what makes the trainer oracle-replayable:
     soft EM's forward-backward float sums are order-sensitive across
     engines, while here every cross-engine comparison is a single
     correctly-rounded double division/product in identical operand
-    order (the WordPiece determinism contract, extended to a fold).
-
-    The DuckDB oracle replays the ENTIRE trainer as a recursive CTE
-    whose state carries the (piece, count) inventory, re-deriving the
-    same seeding, the same per-word argmax (same masks, same
-    tie-break), and the same integer re-counts — every output rank,
-    piece, and count must match bit-exactly.
+    order.  The oracle's recursive CTE carries the (piece, count)
+    inventory, so every output rank, piece, and count must match
+    bit-exactly.
 
     Scale shape: seeding is one substring-explode hash aggregate over
     the word table; each EM round is one Arrow-batched usage map + one
     map-side-combined aggregate + an inventory-sized collect (the
     model, not a token table).  The bounded fixture takes the fused
-    single-task probe path (ONE narrow Spark action cold — the
-    bpe_train_auto shape); test_unigram.py pins auto == distributed ==
-    local."""
-    from datalakehouse_spark.operators.bpe import word_frequencies
-    from datalakehouse_spark.operators.unigram import unigram_train_auto
-
-    docs = load_table(spark, sf_dir, "documents")
-    sample = (
-        docs.orderBy("doc_id")
-        .limit(_BPE_TRAIN_DOCS)
-        .where(F.col("text").rlike("^[ -~]*$"))
-    )
-    wf = (
-        word_frequencies(sample, min_len=_UNI_WMIN, max_len=_UNI_WMAX)
-        .orderBy(F.desc("f"), F.asc("w"))
-        .limit(_BPE_WORDS)
-    )
-    out, _ = unigram_train_auto(
-        spark,
-        wf,
-        rounds=_UNI_ROUNDS,
-        max_piece_len=_UNI_MAXP,
-        min_freq=_BPE_MIN_FREQ,
-        seed_k=_UNI_SEEDK,
-    )
-    return out
+    single-task probe path (ONE narrow Spark action cold)."""
+    return _uni_trained(spark, sf_dir)[0]
 
 
 def _uni_apply_sql(doc_limit: int, doc_offset: int = 0,
                    versioned: bool = False) -> str:
-    """The unigram RUNTIME oracle, parameterized over the doc slice:
-    re-derive the final inventory with the trainer CTE, close it over
-    the slice's alphabet, re-run the enumeration argmax per DISTINCT
-    word, join back to occurrences.  ``versioned`` adds the pinned
-    ``vocab_version = 1`` column (the versioned-artifact entry)."""
-    offset = f" OFFSET {doc_offset}" if doc_offset else ""
-    version_col = (
-        "\n       CAST(1 AS INTEGER) AS vocab_version," if versioned else ""
-    )
+    """The unigram RUNTIME oracle over a doc slice: re-derive the final
+    inventory with the trainer CTE, close it over the slice's alphabet,
+    re-run the enumeration argmax per DISTINCT word, join back to
+    occurrences."""
     return f"""
 WITH RECURSIVE {_UNI_TRAINER_CTES},
 finv AS (
@@ -4686,19 +4448,7 @@ finv AS (
            CAST(list_sum(list_transform(inv, z -> z.c)) AS BIGINT) AS total
     FROM em WHERE k = {_UNI_ROUNDS}
 ),
-td AS (
-    SELECT doc_id, lower(text) AS t
-    FROM (SELECT * FROM documents ORDER BY doc_id
-          LIMIT {doc_limit}{offset})
-    WHERE regexp_matches(text, '^[ -~]*$')
-),
-tw AS (
-    SELECT doc_id,
-           list_filter(regexp_extract_all(t, '[a-z]+'),
-                       w -> length(w) BETWEEN {_UNI_WMIN} AND {_UNI_WMAX})
-               AS words
-    FROM td
-),
+{_tok_apply_head_sql(doc_limit, doc_offset, _UNI_WMAX)},
 uw AS (SELECT DISTINCT unnest(words) AS w FROM tw),
 ac AS (SELECT DISTINCT unnest([substr(w, i, 1)
                                FOR i IN range(1, length(w) + 1)]) AS ch
@@ -4714,24 +4464,15 @@ rim AS (
     FROM finv f, mc
 ),
 wtok AS (SELECT w, {_uni_best_expr('w')}.np AS nt FROM uw, rim)
-SELECT tw.doc_id,{version_col}
-       CAST(len(tw.words) AS INTEGER) AS n_words,
-       CAST(COALESCE(list_sum(list_transform(tw.words, w -> length(w))), 0)
-            AS INTEGER) AS n_chars,
-       CAST(COALESCE(s.tok_sum, 0) AS INTEGER) AS n_tokens
-FROM tw
-LEFT JOIN (
-    SELECT doc_id, SUM(nt) AS tok_sum
+{_tok_sum_select_sql(versioned, '''SELECT doc_id, SUM(nt) AS tok_sum
     FROM (SELECT doc_id, unnest(words) AS w FROM tw) dw
-    JOIN wtok USING (w) GROUP BY doc_id
-) s USING (doc_id)
-ORDER BY tw.doc_id
+    JOIN wtok USING (w) GROUP BY doc_id''')}
 """
 
 
 @register(
     "unigram_tokenize_stats",
-    _uni_apply_sql(_BPE_APPLY_DOCS),
+    _uni_apply_sql(*_TOK_APPLY),
     "Unigram-LM inference: exact-argmax segmentation under trained probs == CTE replay",
     eager=True,  # build/serve split: retrains at build, unmemoized
 )
@@ -4739,66 +4480,24 @@ def q_unigram_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round 16: the Unigram-LM RUNTIME — segment each word by the
     exact enumeration argmax under the trained piece probabilities
     (the runtime twin of Viterbi decoding; the word-length contract
-    makes enumeration exact AND oracle-expressible) and report
-    per-document compression over the 60-doc sample (the last 20
-    unseen by the trainer).  Characters the trainer never saw join the
-    runtime inventory at probability 0.0 (the UNK-closure — every word
-    stays segmentable; all-zero-score words resolve to fewest-pieces
-    by the tie-break); zero-usage trained pieces are DROPPED at
-    runtime (the trained artifact is the positive-count table the
-    train entry outputs).
+    makes enumeration exact AND oracle-expressible) over the 60-doc
+    sample (the last 20 unseen by the trainer).  Characters the trainer
+    never saw join the runtime inventory at probability 0.0 (the
+    UNK-closure); zero-usage trained pieces are DROPPED at runtime (the
+    trained artifact is the positive-count table the train entry
+    outputs).  Retrains cold at build, as the WordPiece runtime does;
+    tokenization is a pure map stage."""
+    from datalakehouse_spark.operators.unigram import unigram_tokenize_stats
 
-    The oracle re-derives the same final inventory with the trainer
-    CTE, closes it over the apply corpus's alphabet, and re-runs the
-    same argmax per DISTINCT word (joined back to occurrences).
-
-    The entry retrains its own inventory at build (ONE narrow Spark
-    action — the fused probe, the wordpiece_tokenize_stats posture:
-    every bench timing is a cold build, no cross-entry memo).  Scale
-    shape: tokenization is a pure map stage (mapInPandas, the
-    vocabulary-sized inventory in the closure) with per-batch word
-    memoization."""
-    from datalakehouse_spark.operators.bpe import word_frequencies
-    from datalakehouse_spark.operators.unigram import (
-        unigram_tokenize_stats,
-        unigram_train_auto,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    sample = (
-        docs.orderBy("doc_id")
-        .limit(_BPE_TRAIN_DOCS)
-        .where(F.col("text").rlike("^[ -~]*$"))
-    )
-    wf = (
-        word_frequencies(sample, min_len=_UNI_WMIN, max_len=_UNI_WMAX)
-        .orderBy(F.desc("f"), F.asc("w"))
-        .limit(_BPE_WORDS)
-    )
-    _, ranked = unigram_train_auto(
-        spark,
-        wf,
-        rounds=_UNI_ROUNDS,
-        max_piece_len=_UNI_MAXP,
-        min_freq=_BPE_MIN_FREQ,
-        seed_k=_UNI_SEEDK,
-    )
-    apply_docs = (
-        docs.orderBy("doc_id")
-        .limit(_BPE_APPLY_DOCS)
-        .where(F.col("text").rlike("^[ -~]*$"))
-        .select("doc_id", "text")
-        .repartition(4)
-    )
+    _, ranked = _uni_trained(spark, sf_dir)
     return unigram_tokenize_stats(
-        apply_docs, ranked, min_len=_UNI_WMIN, max_len=_UNI_WMAX
+        _tok_docs(spark, sf_dir, *_TOK_APPLY), ranked, max_len=_UNI_WMAX
     ).orderBy("doc_id")
 
 
 @register(
     "unigram_vocab_apply_versioned",
-    _uni_apply_sql(_BPE_VERSIONED_DOCS, doc_offset=_BPE_APPLY_DOCS,
-                   versioned=True),
+    _uni_apply_sql(*_TOK_VERSIONED, versioned=True),
     "Unigram vocab pinned as a versioned artifact: tokenize with v1 while v2 exists",
     # materializing surface: trains, commits v1 + v2, collects the pinned v1
     eager=True,
@@ -4807,82 +4506,23 @@ def q_unigram_vocab_apply_versioned(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Round 16: the versioned-artifact persistence contract for the
-    Unigram-LM inventory, completing the trainer × versioned-artifact
-    matrix (BPE r15, WordPiece r16, unigram here — all three vocabulary
-    kinds a production pipeline pins).  The trained ``(rank, piece,
-    freq)`` table commits as version 1, a LATER inventory lands as
-    version 2, and the tokenizer reads the PINNED v1 over docs 61..90
-    (a slice unseen by the trainer and by ``unigram_tokenize_stats``).
-
-    The v2 payload bites HARDER here than in the merge-trainer twins: a
-    leaked extra piece with a large count changes ``total`` and hence
-    EVERY piece probability — any leak re-scores every segmentation,
-    not just words containing the new piece.  The length assert
-    backstops the pin either way.
-
-    Scale shape: the inventory artifact is vocabulary-sized (one tiny
-    parquet commit per version); tokenization stays a pure map stage."""
-    from pyspark.sql import Window
-
-    from datalakehouse_spark.operators.bpe import word_frequencies
+    Unigram-LM inventory (``_tok_apply_versioned``), completing the
+    trainer × versioned-artifact matrix.  The v2 payload bites HARDER
+    here than in the merge-trainer twins: a leaked extra piece with a
+    large count changes ``total`` and hence EVERY piece probability —
+    any leak re-scores every segmentation, not just words containing
+    the new piece."""
     from datalakehouse_spark.operators.unigram import (
         UNI_SCHEMA,
         unigram_tokenize_stats,
-        unigram_train_auto,
     )
-    from datalakehouse_spark.scratch import fresh_scratch
-    from datalakehouse_spark.versioned import VersionedTable
 
-    docs = load_table(spark, sf_dir, "documents")
-    sample = (
-        docs.orderBy("doc_id")
-        .limit(_BPE_TRAIN_DOCS)
-        .where(F.col("text").rlike("^[ -~]*$"))
-    )
-    wf = (
-        word_frequencies(sample, min_len=_UNI_WMIN, max_len=_UNI_WMAX)
-        .orderBy(F.desc("f"), F.asc("w"))
-        .limit(_BPE_WORDS)
-    )
-    _, ranked = unigram_train_auto(
-        spark,
-        wf,
-        rounds=_UNI_ROUNDS,
-        max_piece_len=_UNI_MAXP,
-        min_freq=_BPE_MIN_FREQ,
-        seed_k=_UNI_SEEDK,
-    )
-    rows = [(i + 1, p, c) for i, (p, c) in enumerate(ranked)]
-    vt = VersionedTable(spark, fresh_scratch("uni_vocab_versioned"))
-    vt.create(spark.createDataFrame(rows, UNI_SCHEMA))
-    # v2: a new high-count piece — leakage would shift total and every
-    # probability, re-scoring every word's segmentation
-    pieces = {p for p, _ in ranked}
-    leak = next(
-        c for c in ("th", "he", "in", "er", "an", "re") if c not in pieces
-    )
-    vt.append(
-        spark.createDataFrame([(len(rows) + 1, leak, 10_000)], UNI_SCHEMA)
-    )
-    pinned = sorted(vt.read(version=1).collect(), key=lambda r: r["rank"])
-    assert len(pinned) == len(rows), "version pin leaked a later commit"
-    pinned_inv = [(r["piece"], int(r["freq"])) for r in pinned]
-
-    head = docs.orderBy("doc_id").limit(_BPE_APPLY_DOCS + _BPE_VERSIONED_DOCS)
-    sliced = (
-        head.withColumn(
-            "_rn", F.row_number().over(Window.orderBy("doc_id"))
-        )
-        .where(F.col("_rn") > _BPE_APPLY_DOCS)
-        .where(F.col("text").rlike("^[ -~]*$"))
-        .select("doc_id", "text")
-        .repartition(4)
-    )
-    return (
-        unigram_tokenize_stats(
-            sliced, pinned_inv, min_len=_UNI_WMIN, max_len=_UNI_WMAX
-        )
-        .withColumn("vocab_version", F.lit(1))
-        .select("doc_id", "vocab_version", "n_words", "n_chars", "n_tokens")
-        .orderBy("doc_id")
+    _, ranked = _uni_trained(spark, sf_dir)
+    leak = _unlearned_bigram({p for p, _ in ranked})
+    return _tok_apply_versioned(
+        spark, sf_dir, "uni_vocab_versioned", UNI_SCHEMA,
+        ranked, tuple, (leak, 10_000),
+        lambda pinned, docs: unigram_tokenize_stats(
+            docs, [(r["piece"], r["freq"]) for r in pinned], max_len=_UNI_WMAX
+        ),
     )
