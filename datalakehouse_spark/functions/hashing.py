@@ -88,16 +88,6 @@ def device_bucket(col: Column | str, n_buckets: int = 32) -> Column:
     return F.pmod(F.abs(h), F.lit(n_buckets)).cast("int")
 
 
-def java_hashcode_duckdb_sql(expr: str) -> str:
-    """The DuckDB-SQL twin of :func:`java_hashcode` (oracle side)."""
-    return (
-        "(CASE WHEN h >= 2147483648 THEN h - 4294967296 ELSE h END) FROM ("
-        f"SELECT list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        f"list_transform(string_split({expr}, ''), c -> CAST(ord(c) AS BIGINT))), "
-        "(a, b) -> (a * 31 + b) % 4294967296) AS h)"
-    )
-
-
 def device_bucket_duckdb_expr(expr: str, n_buckets: int = 32) -> str:
     """Inline DuckDB expression computing device_bucket(expr)."""
     h_unsigned = (

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datalakehouse_spark.session import MARK_SUCCESS_KEY, PARALLEL_LISTING_THRESHOLD
+from datalakehouse_spark.session import SESSION_CONTRACT
 
 TABLES = (
     "region",
@@ -95,15 +95,9 @@ def _ensure_session_contract(spark: SparkSession) -> None:
     The correctness driver hands us ITS session; these are SQL confs, so
     they can be set per-session without restarting the JVM.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # no Spark job to list a version's files (see session.py)
-    spark.conf.set(
-        "spark.sql.sources.parallelPartitionDiscovery.threshold",
-        PARALLEL_LISTING_THRESHOLD,
-    )
+    for k, v in SESSION_CONTRACT.items():
+        spark.conf.set(k, v)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # no _SUCCESS marker rewritten by each append (see session.py)
-    spark.conf.set(MARK_SUCCESS_KEY, "false")
     _ship_package(spark)
 
 

@@ -54,6 +54,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datalakehouse_spark.io import _ship_package
+
 #: pair-key separator: sorts below every printable symbol, so the
 #: (score DESC, pair ASC) tie-break is identical in Spark and DuckDB
 #: (both compare binary UTF-8).
@@ -148,6 +150,8 @@ def train_auto(
         rows = [(i + 1, *to_row(m)) for i, m in enumerate(train_local(wf))]
         yield _pd.DataFrame(rows, columns=cols)
 
+    # the stage unpickles package functions on the workers
+    _ship_package(spark)
     probe = (
         words.where(F.length("w") > 0)
         .select("w", F.col("f").cast("long").alias("f"))
@@ -413,6 +417,7 @@ def tokenize_stats(
                 rows, columns=["doc_id", "n_words", "n_chars", "n_tokens"]
             )
 
+    _ship_package(docs.sparkSession)  # count_tokens is a package function
     return src.mapInPandas(
         batches, schema="doc_id long, n_words int, n_chars int, n_tokens int"
     )

@@ -100,16 +100,6 @@ def md5_hash60(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
 
 
-def exact_dups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Groups with >1 identical text: (keep_id, n_copies)."""
-    return (
-        df.groupBy(F.col(text_col).alias("dup_text"))
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
-        .where(F.col("n_copies") > 1)
-        .select("keep_id", "n_copies")
-    )
-
-
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep the min-id representative of every exact-duplicate group."""
     keep = df.groupBy(F.col(text_col).alias("_t")).agg(F.min(id_col).alias(id_col))

@@ -1,30 +1,34 @@
 """Similarity search over embedding columns (array<float>).
 
 Extension surface for LLM-data pipelines: nearest-neighbor retrieval
-over a corpus of embeddings.
+over a corpus of embeddings, in four tiers.
 
-Tiers:
-- brute-force cosine top-k: the exact baseline. All math in built-in
-  higher-order functions (zip_with -> aggregate) in DOUBLE with a fixed
-  sequential accumulation order — deterministic across partitionings and
-  bit-comparable against the DuckDB oracle.
-- IVF (inverted-file) search: the scale path. K-means-style coarse
-  centroids (here: seeded by deterministic assignment), probe the
-  nearest n_probe centroids, exact-search only those clusters. At 100 TB
-  the corpus is partitioned by cluster id, so a query touches
-  n_probe/n_clusters of the data; centroids are a broadcast table.
+- Exact: brute-force cosine top-k (:func:`knn_brute_force`).  All math
+  in built-in higher-order functions (zip_with -> aggregate) in DOUBLE
+  with a fixed sequential accumulation order — deterministic across
+  partitionings and bit-comparable against the DuckDB oracle.
+- IVF (inverted file): the corpus is persisted PARTITIONED BY its
+  k-means cluster (:func:`build_ivf_index`); a query ranks the k
+  centroids driver-side and scans only its n_probe nearest partitions
+  (:func:`ivf_search_indexed`).  At 100 TB a query touches
+  n_probe/n_clusters of the data; the centroids are a literal table.
+- PQ (product quantization): one k-means codebook per contiguous
+  subspace (:func:`pq_codebooks`) encodes each vector as m code ids
+  (:func:`pq_encode`); serving is ADC over the codes (:func:`pq_adc_topk`).
+- IVF-PQ: the PQ codes partitioned by the IVF cluster
+  (:func:`build_ivfpq_index`, :func:`ivfpq_search`).
 
-No UDFs in the hot path; a pandas_udf variant exists for very high
-dimensions where JVM higher-order-function overhead would dominate
-(vectorized numpy dot over Arrow batches).
+Every model is trained by ONE seeded Lloyd loop, :func:`_lloyd`: it
+trains any number of k-means models (a coarse quantizer, each k of an
+elbow sweep, each PQ subspace) with one corpus scan, one grouped
+aggregate and one collect per iteration, and the DuckDB oracle replays
+the same iterations.  No UDFs in the hot path.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def _dvec(col: Column | str) -> Column:
@@ -58,7 +62,7 @@ def knn_brute_force(
 
     Plan shape: narrow map (per-row cosine) -> TakeOrderedAndProject.
     No shuffle; at 100 TB this is a full scan, which is exactly what the
-    exact baseline costs — use ivf_search to prune.
+    exact baseline costs — the IVF tier prunes it.
     """
     q = _darray_lit(query_vec)
     scored = embeddings.select(
@@ -66,27 +70,6 @@ def knn_brute_force(
         F.round(cosine(_dvec(vec_col), q), 9).alias("cosine_sim"),
     )
     return scored.orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc()).limit(k)
-
-
-def centroids_by_label(
-    embeddings: DataFrame, label_col: str = "label", vec_col: str = "embedding", dim: int = 64
-) -> DataFrame:
-    """Per-cluster mean vector. The fixture's `label` column stands in
-    for a k-means assignment (the assignment step is orthogonal to the
-    search plumbing being exercised).
-
-    posexplode -> groupBy(label, pos) -> avg -> re-assemble via
-    array_agg sorted by pos. Shuffle size = n_clusters × dim.
-    """
-    exploded = embeddings.select(
-        F.col(label_col), F.posexplode(_dvec(vec_col)).alias("pos", "v")
-    )
-    per_dim = exploded.groupBy(label_col, "pos").agg(F.avg("v").alias("c"))
-    return (
-        per_dim.groupBy(label_col)
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
-        .select(label_col, F.transform("pc", lambda s: s["c"]).alias("centroid"))
-    )
 
 
 def _dlit_sql(x: float) -> str:
@@ -119,20 +102,6 @@ def _darray2_lit(rows: list[list[float]]) -> Column:
     )
 
 
-def _sq_dist_to_literal(v: Column, centroid: list[float]) -> Column:
-    """Sequential-fold squared L2 distance to a literal centroid —
-    deterministic accumulation order, O(dim) per row.  The centroid is
-    ONE array literal node (not dim Literal nodes): with k centroids
-    per assignment expression, per-element literals made Catalyst
-    analysis time the dominant k-means cost at small scale."""
-    c = _darray_lit(centroid)
-    return F.aggregate(
-        F.zip_with(v, c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
-
-
 def _argmin_cluster(v: Column, cent_rows: list[tuple[int, list[float]]]) -> Column:
     """Nearest-centroid id as ONE nested-loop expression.
 
@@ -146,23 +115,104 @@ def _argmin_cluster(v: Column, cent_rows: list[tuple[int, list[float]]]) -> Colu
     break toward the lower id — bit-identical to the struct-least form
     (and the DuckDB oracle's ``list_position`` twin).
     """
-    cents = _darray2_lit([c for _, c in cent_rows])
-    # plain int literals parse as array<int> — a DELIBERATE narrowing
-    # from the array<bigint> F.lit used to infer for a Python int list
-    # (cluster ids are small non-negative indices, k <= a few hundred);
-    # every consumer compares/casts the id, none relies on the wider
-    # element type (ADVICE r16: the prior comment misstated F.lit's
-    # inference)
+    # plain int literals parse as array<int>: cluster ids are small
+    # non-negative indices, and every consumer compares or casts the id
     ids = F.expr("array(" + ",".join(str(int(cid)) for cid, _ in cent_rows) + ")")
-    dists = F.transform(
-        cents,
+    dists = _sq_dists(v, cent_rows)
+    return F.element_at(ids, F.array_position(dists, F.array_min(dists)).cast("int"))
+
+
+def _sq_dists(v: Column, cent_rows: list[tuple[int, list[float]]]) -> Column:
+    """Sequential-fold squared L2 distance of ``v`` to each centroid."""
+    return F.transform(
+        _darray2_lit([c for _, c in cent_rows]),
         lambda c: F.aggregate(
             F.zip_with(v, c, lambda x, y: (x - y) * (x - y)),
             F.lit(0.0),
             lambda acc, d: acc + d,
         ),
     )
-    return F.element_at(ids, F.array_position(dists, F.array_min(dists)).cast("int"))
+
+
+def _corpus(
+    embeddings: DataFrame, id_col: str, vec_col: str
+) -> tuple[DataFrame, int]:
+    """``(_id, _raw)`` over the corpus, and the vector width (one job).
+
+    The RAW vector is carried and cast per SCALAR at each use site:
+    staging a transform-cast array looks cheaper, but project
+    collapsing may inline the whole-array cast into every one of the
+    dim sum expressions — O(dim²) per row."""
+    base = embeddings.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_raw"))
+    return base, len(base.select("_raw").first()[0])
+
+
+def _lloyd(
+    base: DataFrame, groups: list[tuple[int, slice]], iters: int
+) -> list[tuple[Column, list[tuple[int, list[float]]]]]:
+    """Deterministic Lloyd k-means of every group at once.
+
+    A group ``(k, part)`` clusters the ``part`` slice of ``base._raw``
+    (the whole vector, or one PQ subspace) into k clusters.
+
+    - init: cluster = md5-prefix-hash(id) % k — seeded, reproducible
+      across engines (the DuckDB oracle replays the identical
+      iterations), no sampling step.
+    - each iteration: ONE hash aggregate of per-(group, cluster) counts
+      and dim sums (map-side partials; shuffle = Σk × (width+1)
+      doubles per task), ONE collect of those Σk rows, then every
+      vector is reassigned to its argmin squared-L2 centroid by a
+      literal-centroid expression — a narrow projection, never a join
+      or shuffle on the corpus.  The corpus is scanned once per
+      iteration however many groups train.
+    - one group aggregates a plain projection; several explode each
+      row into one ``(group, cluster, slice)`` struct per group, which
+      would cost a lone group ~10% (k=8, 3 iterations, sf0.1, 4-core
+      VM: median 3.68 s against 3.31 s).  The sums see the same addends
+      either way: the fixture's float32-precision values make the
+      double sums exactly associative, which is also why the
+      sequential DuckDB replay matches bit for bit.
+
+    Returns per group (its final assignment expression over ``_raw``,
+    its centroids sorted by cluster id).  Empty clusters drop out
+    (standard Lloyd behavior); ties break toward the lower cluster id.
+    """
+    from datalakehouse_spark.operators.dedup import md5_hash60
+
+    seed = md5_hash60(F.col("_id").cast("string"))
+    assign = [(seed % k).cast("int") for k, _ in groups]
+    parts = [(p.start, p.stop - p.start) for _, p in groups]
+    cents: list[list[tuple[int, list[float]]]] = [[] for _ in groups]
+    for _ in range(iters):
+        if len(groups) == 1:
+            [(lo, width)] = parts
+            tagged = base.select("_raw", assign[0].alias("c"))
+            keys, elem = ["c"], lambda i: F.col("_raw")[lo + i]
+        else:
+            structs = [
+                F.struct(F.lit(g).alias("g"), a.alias("c"), F.slice("_raw", lo + 1, w).alias("v"))
+                for g, (a, (lo, w)) in enumerate(zip(assign, parts))
+            ]
+            tagged = base.select(F.explode(F.array(*structs)).alias("x")).select("x.*")
+            # get() (not []) past a narrower slice reads NULL, which SUM
+            # skips: one aggregate serves every width
+            keys, elem = ["g", "c"], lambda i: F.get(F.col("v"), i)
+        sums = [
+            F.sum(elem(i).cast("double")).alias(f"s{i}") for i in range(max(w for _, w in parts))
+        ]
+        # Σk rows × width doubles — tiny by construction
+        rows = tagged.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"), *sums).collect()
+        for g, (_, width) in enumerate(parts):
+            cents[g] = sorted(
+                (r["c"], [r[f"s{i}"] / r["_n"] for i in range(width)])
+                for r in rows
+                if len(groups) == 1 or r["g"] == g
+            )
+        assign = [
+            _argmin_cluster(_dvec(F.slice("_raw", lo + 1, width)), c)
+            for (lo, width), c in zip(parts, cents)
+        ]
+    return list(zip(assign, cents))
 
 
 def kmeans_clusters(
@@ -172,58 +222,13 @@ def kmeans_clusters(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
-    """Deterministic Lloyd k-means as DataFrame ops.
-
-    - init: cluster = md5-prefix-hash(id) % k — seeded, reproducible
-      across engines (the DuckDB oracle replays the identical
-      iterations), no sampling step.
-    - iterate ``iters`` times: per-cluster per-dim mean (posexplode →
-      avg → reassemble), then reassign every vector to the argmin
-      squared-L2 centroid.  Centroids are k×dim doubles — collected to
-      the driver and embedded as LITERALS, so reassignment is one
-      narrow whole-stage-codegen projection per iteration (k folds of
-      dim each, the inherent k·dim assignment flops), never a join or
-      shuffle on the corpus.
-    - shuffle per iteration = the centroid aggregate only: map-side
-      partial avg, k×dim rows on the wire.  Ties break toward the
-      lower cluster id (struct-min ordering) in both engines.
-    - local-bench note: wall time is dominated by ONE-TIME whole-stage
-      codegen compilation of the dim-column aggregate (~1.4 s compile
-      vs 0.07 s execution on the fixture) — fixed driver overhead that
-      amortizes away at real scale.
+    """Seeded Lloyd k-means (:func:`_lloyd`) of the whole vector.
 
     Returns (assignment DataFrame ``(id, cluster)``, final centroid
-    list).  Empty clusters simply drop out (standard Lloyd behavior).
-    """
-    from datalakehouse_spark.operators.dedup import md5_hash60
-
-    # carry the RAW vector and cast per-SCALAR at each use site: staging
-    # a transform-cast array ("_v") looks cheaper but project collapsing
-    # may inline the whole-array cast into every one of the dim sum
-    # expressions below — O(dim²) per row; scalar casts keep it O(dim)
-    base = embeddings.select(F.col(id_col), F.col(vec_col).alias("_raw"))
-    dim = len(base.select("_raw").first()[0])
-    assign = base.withColumn(
-        "cluster", (md5_hash60(F.col(id_col).cast("string")) % k).cast("int")
-    )
-    cent_rows: list[tuple[int, list[float]]] = []
-    for _ in range(iters):
-        # one flat hash aggregate with dim sum columns (all codegen'd,
-        # map-side partials; shuffle = k × (dim+1) doubles per task) —
-        # cheaper than posexplode (n×dim row blow-up) + reassembly
-        sums = assign.groupBy("cluster").agg(
-            F.count(F.lit(1)).alias("_n"),
-            *[F.sum(F.col("_raw")[i].cast("double")).alias(f"s{i}") for i in range(dim)],
-        )
-        # k rows × dim doubles — tiny by construction, safe to collect
-        cent_rows = sorted(
-            (r["cluster"], [r[f"s{i}"] / r["_n"] for i in range(dim)])
-            for r in sums.collect()
-        )
-        assign = base.withColumn(
-            "cluster", _argmin_cluster(_dvec(F.col("_raw")), cent_rows)
-        )
-    return assign.select(id_col, "cluster"), cent_rows
+    list)."""
+    base, dim = _corpus(embeddings, id_col, vec_col)
+    [(assign, cent_rows)] = _lloyd(base, [(k, slice(0, dim))], iters)
+    return base.select(F.col("_id").alias(id_col), assign.alias("cluster")), cent_rows
 
 
 def kmeans_elbow_sweep(
@@ -233,83 +238,23 @@ def kmeans_elbow_sweep(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Fused multi-k Lloyd elbow sweep: `(k, n_clusters, inertia)` for
-    every candidate k from ONE tagged pass per iteration.
-
-    Per-k math is bit-identical to running :func:`kmeans_clusters` at
-    each k (same md5 seeding, same per-(k,cluster) dim-sum centroids,
-    same first-minimum tie-break) — the fusion only changes HOW MANY
-    times the corpus is read: each Lloyd iteration explodes every row
-    into |ks| ``(k, cluster)`` tags and feeds one grouped aggregate, so
-    the sweep costs ``iters + 1`` corpus scans total instead of
-    ``|ks| * (iters + 2)`` (and, locally, one whole-stage-codegen
-    compile of the wide dim-column aggregate per iteration instead of
-    one per (k, iteration) — the compile was the dominant wall cost).
-    Eager class: centroids (Σk × dim doubles) collect per iteration.
-    """
-    from datalakehouse_spark.operators.dedup import md5_hash60
-
-    base = embeddings.select(F.col(id_col), F.col(vec_col).alias("_raw"))
-    dim = len(base.select("_raw").first()[0])
-    assign_expr: dict[int, Column] = {
-        k: (md5_hash60(F.col(id_col).cast("string")) % k).cast("int") for k in ks
-    }
-    cents: dict[int, list[tuple[int, list[float]]]] = {}
-    for _ in range(iters):
-        tagged = base.select(
-            "_raw",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(k).alias("k"), assign_expr[k].alias("cluster")
-                        )
-                        for k in ks
-                    ]
-                )
-            ).alias("kc"),
-        )
-        sums = tagged.groupBy(
-            F.col("kc.k").alias("k"), F.col("kc.cluster").alias("cluster")
-        ).agg(
-            F.count(F.lit(1)).alias("_n"),
-            *[
-                F.sum(F.col("_raw")[i].cast("double")).alias(f"s{i}")
-                for i in range(dim)
-            ],
-        )
-        rows = sums.collect()  # Σk rows × dim doubles — tiny by construction
-        cents = {
-            k: sorted(
-                (r["cluster"], [r[f"s{i}"] / r["_n"] for i in range(dim)])
-                for r in rows
-                if r["k"] == k
-            )
-            for k in ks
-        }
-        assign_expr = {
-            k: _argmin_cluster(_dvec(F.col("_raw")), cents[k]) for k in ks
-        }
+    """Multi-k elbow sweep: `(k, n_clusters, inertia)` for every
+    candidate k, each k one :func:`_lloyd` group — the math per k is
+    :func:`kmeans_clusters` at that k, and the sweep reads the corpus
+    ``iters + 1`` times in all, not ``|ks| * (iters + 2)``.  Eager
+    class: centroids (Σk × dim doubles) collect per iteration."""
+    base, dim = _corpus(embeddings, id_col, vec_col)
+    fits = _lloyd(base, [(k, slice(0, dim)) for k in ks], iters)
     # final metrics, also fused: per row emit (k, min-dist, cluster) for
     # every k, then one grouped aggregate over the k tag
     structs = []
-    for k in ks:
-        cent_arr = _darray2_lit([c for _, c in cents[k]])
-        dists = F.transform(
-            cent_arr,
-            lambda c: F.aggregate(
-                F.zip_with(_dvec(F.col("_raw")), c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, d: acc + d,
-            ),
-        )
+    for k, (assign, cents) in zip(ks, fits):
+        dists = _sq_dists(_dvec(F.col("_raw")), cents)
         structs.append(
             F.struct(
                 F.lit(k).alias("k"),
-                F.round(F.array_min(dists), 9)
-                .cast("decimal(28,9)")
-                .alias("m"),
-                assign_expr[k].alias("cluster"),
+                F.round(F.array_min(dists), 9).cast("decimal(28,9)").alias("m"),
+                assign.alias("cluster"),
             )
         )
     exploded = base.select(F.explode(F.array(*structs)).alias("s"))
@@ -319,45 +264,9 @@ def kmeans_elbow_sweep(
             F.count_distinct(F.col("s.cluster")).alias("n_clusters"),
             F.round(F.sum("s.m").cast("double"), 6).alias("inertia"),
         )
-        # deterministic output order (the pre-fusion implementation
-        # emitted rows in _INERTIA_KS order; a bare groupBy is
+        # deterministic output order (a bare groupBy is
         # partitioning-dependent and flakes ordered consumers)
         .orderBy("k")
-    )
-
-
-def ivf_search(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = 8,
-    kmeans_iters: int = 2,
-) -> DataFrame:
-    """One-shot IVF search: k-means build + probe + exact re-rank in a
-    single call.  BUILD-PATH DEMO ONLY — this recomputes the coarse
-    quantizer per invocation, which is the wrong shape for a serving
-    path (at 100 TB every query would re-scan the corpus; the round-4
-    verdict flagged exactly this).  Production is the build/serve
-    split: :func:`build_ivf_index` once, :func:`ivf_search_indexed`
-    per query (partition pruning over the persisted layout) — which is
-    also what the registry's scored `ivf_search` entry runs.
-
-    Results are value-identical to the split by construction (same
-    seeded deterministic Lloyd iterations, same ranking).
-    """
-    _, cent_rows = kmeans_clusters(
-        embeddings, k=n_clusters, iters=kmeans_iters, id_col=id_col, vec_col=vec_col
-    )
-    probe = rank_probes(cent_rows, query_vec, n_probe)
-    # the final assignment is a LITERAL-centroid argmin expression, so
-    # pruning is a narrow filter — no join; with the corpus partitioned
-    # by a persisted cluster column this is partition pruning instead
-    pruned = embeddings.where(_argmin_cluster(_dvec(vec_col), cent_rows).isin(probe))
-    return knn_brute_force(pruned, query_vec, k, id_col, vec_col).withColumn(
-        "probed_clusters", F.lit(len(probe))
     )
 
 
@@ -425,28 +334,13 @@ def ivf_search_indexed(
     driver-side (k-row math), then scan ONLY those hive partitions —
     the cluster IN-list is a partition filter, so n_probe/n_clusters of
     the files are even opened (plan-asserted in tests/test_plans.py).
-    Results are identical to :func:`ivf_search` by construction (same
-    centroids, same assignment, same exact re-ranking).
+    Each hit carries the exact tier's cosine score.
     """
     probe = rank_probes(cent_rows, query_vec, n_probe)
     pruned = spark.read.parquet(index_path).where(F.col("cluster").isin(probe))
     return knn_brute_force(pruned, query_vec, k, id_col, vec_col).withColumn(
         "probed_clusters", F.lit(len(probe))
     )
-
-
-@F.pandas_udf(T.DoubleType())
-def _cosine_pandas(v: pd.Series, q: pd.Series) -> pd.Series:
-    """Arrow-vectorized cosine for very high dims (numpy per batch)."""
-    import numpy as np
-
-    out = []
-    for a, b in zip(v, q):
-        a = np.asarray(a, dtype=np.float64)
-        b = np.asarray(b, dtype=np.float64)
-        na, nb = np.linalg.norm(a), np.linalg.norm(b)
-        out.append(float(a.dot(b) / (na * nb)) if na and nb else float("nan"))
-    return pd.Series(out)
 
 
 def quantize_int8(vec_col: Column | str) -> tuple[Column, Column]:
@@ -616,77 +510,23 @@ def pq_codebooks(
     vec_col: str = "embedding",
 ) -> tuple[list[list[tuple[int, list[float]]]], int]:
     """Train product-quantization codebooks: split the vector into
-    ``m`` contiguous subspaces and run the SAME seeded deterministic
-    Lloyd k-means (:func:`kmeans_clusters`) per subspace.
+    ``m`` contiguous subspaces and train each one's ``codes``-means as
+    a :func:`_lloyd` group — one corpus pass and one collect per
+    iteration for all m codebooks, whatever m is.
 
-    Returns (per-subspace centroid lists, subspace width).
-
-    All m subspace k-means loops are FUSED: the seeded init
-    (md5-hash(id) % codes) is subspace-independent, so every Lloyd
-    iteration runs as ONE corpus pass — explode each vector into its m
-    (subspace, cluster, slice) rows and hash-aggregate on
-    (subspace, cluster).  The exploded bytes equal the original vector
-    (m slices of dim/m), the shuffle is m·codes×(dim/m+1) doubles of
-    map-side partials, and the driver collects all m codebooks from a
-    single job.  Versus m sequential :func:`kmeans_clusters` calls this
-    is m× fewer corpus scans per iteration (measured 9.0 s → see bench
-    at sf0.1) and the pass count is independent of m — the shape a
-    100 TB build needs.  Sums are bit-identical to the per-subspace
-    form: the fixture's float32-precision addends make the double sums
-    exactly associative, which is also why the sequential DuckDB
-    oracle replay hash-matches."""
-    dim = len(embeddings.select(vec_col).first()[0])
+    Returns (per-subspace centroid lists, subspace width)."""
+    base, dim = _corpus(embeddings, id_col, vec_col)
     sub = dim // m
-    from datalakehouse_spark.operators.dedup import md5_hash60
+    fits = _lloyd(base, [(codes, slice(s * sub, (s + 1) * sub)) for s in range(m)], iters)
+    return [book for _, book in fits], sub
 
-    base = embeddings.select(F.col(id_col), F.col(vec_col).alias("_raw"))
-    init = (md5_hash60(F.col(id_col).cast("string")) % codes).cast("int")
-    # assignment state: one cluster column per subspace (all start equal)
-    assign = base.select("*", *[init.alias(f"_c{s}") for s in range(m)])
-    books: list[list[tuple[int, list[float]]]] = []
-    for _ in range(iters):
-        pairs = assign.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).alias("s"),
-                            F.col(f"_c{s}").alias("c"),
-                            F.slice(_dvec(F.col("_raw")), s * sub + 1, sub).alias(
-                                "v"
-                            ),
-                        )
-                        for s in range(m)
-                    ]
-                )
-            ).alias("x")
-        )
-        sums = pairs.groupBy(
-            F.col("x.s").alias("s"), F.col("x.c").alias("c")
-        ).agg(
-            F.count(F.lit(1)).alias("_n"),
-            *[F.sum(F.col("x.v")[i]).alias(f"s{i}") for i in range(sub)],
-        )
-        rows = sums.collect()  # m·codes rows × dim/m doubles — tiny
-        books = []
-        for s in range(m):
-            books.append(
-                sorted(
-                    (r["c"], [r[f"s{i}"] / r["_n"] for i in range(sub)])
-                    for r in rows
-                    if r["s"] == s
-                )
-            )
-        assign = base.select(
-            "*",
-            *[
-                _argmin_cluster(
-                    F.slice(_dvec(F.col("_raw")), s * sub + 1, sub), books[s]
-                ).alias(f"_c{s}")
-                for s in range(m)
-            ],
-        )
-    return books, sub
+
+def _code_cols(v: Column, books: list[list[tuple[int, list[float]]]], sub: int) -> list[Column]:
+    """``code_s``: the nearest codeword of each subspace of ``v``."""
+    return [
+        _argmin_cluster(F.slice(v, s * sub + 1, sub), book).alias(f"code_{s}")
+        for s, book in enumerate(books)
+    ]
 
 
 def pq_encode(
@@ -700,12 +540,7 @@ def pq_encode(
     whole-stage-codegen projection (literal codebooks, no join, no
     shuffle): the 4-byte-per-subspace compressed representation that
     replaces the raw vector at serve time."""
-    v = _dvec(vec_col)
-    code_cols = [
-        _argmin_cluster(F.slice(v, s * sub + 1, sub), books[s]).alias(f"code_{s}")
-        for s in range(len(books))
-    ]
-    return embeddings.select(F.col(id_col), *code_cols)
+    return embeddings.select(F.col(id_col), *_code_cols(_dvec(vec_col), books, sub))
 
 
 def _seq_sqdist(a: list[float], b: list[float]) -> float:
@@ -788,103 +623,31 @@ def pq_adc_search(
 def build_ivfpq_index(
     embeddings: DataFrame,
     path: str,
-    n_clusters: int = 8,
-    kmeans_iters: int = 2,
-    m: int = 4,
-    codes: int = 16,
+    coarse: list[tuple[int, list[float]]],
+    books: list[list[tuple[int, list[float]]]],
+    sub: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-):
-    """IVF-PQ build: coarse k-means partitions the corpus, PQ codebooks
-    compress it — the persisted index is (id, code_0..code_{m-1})
-    PARTITIONED BY cluster.  Serving composes both accelerations:
-    partition pruning cuts the scan to n_probe/n_clusters of the
-    files, and each surviving row is m bytes of codes, not dim floats.
+) -> None:
+    """IVF-PQ build from trained models: the coarse centroids
+    (:func:`build_ivf_index` / :func:`kmeans_clusters`) partition the
+    corpus and the PQ books (:func:`pq_codebooks`) compress it — the
+    persisted index is (id, code_0..code_{m-1}) PARTITIONED BY cluster.
+    Codes and cluster come from ONE literal-model projection: no
+    training, no join.  Serving composes both accelerations: partition
+    pruning cuts the scan to n_probe/n_clusters of the files, and each
+    surviving row is m codes, not dim floats.
 
     This is the no-residual IVF-PQ variant (codes quantize the RAW
     vectors, not cluster residuals): the deterministic-replay oracle
     stays expressible, and at fixture dims the recall difference is
-    immaterial.  Returns (coarse centroids, books, sub).
-
-    Round-8 fusion: the coarse k-means and the m subspace codebook
-    k-means share ONE tagged corpus pass per Lloyd iteration (the
-    :func:`kmeans_elbow_sweep` trick) — each row explodes into a
-    ``s = -1`` (coarse, full vector) struct plus m ``(s, slice)``
-    structs, one grouped aggregate computes every centroid sum, and
-    the driver collects coarse + all codebooks from a single job.
-    Corpus scans per iteration drop 2 → 1 and total scanned bytes are
-    unchanged (full vector + m slices == 2× vector, same as the two
-    separate passes).  Per-(cluster) sums see the identical addend
-    multisets as :func:`kmeans_clusters` / :func:`pq_codebooks`, so
-    the trained model is bit-identical (same exactly-associative
-    double sums as the other fusions).  Encoding is likewise fused:
-    codes and the coarse assignment are ONE literal-expression
-    projection — the previous codes⋈assignment shuffle join is gone.
-    """
-    from datalakehouse_spark.operators.dedup import md5_hash60
-
-    base = embeddings.select(F.col(id_col), F.col(vec_col).alias("_raw"))
-    dim = len(base.select("_raw").first()[0])
-    sub = dim // m
-    init = md5_hash60(F.col(id_col).cast("string"))
-    coarse_assign = (init % n_clusters).cast("int")
-    pq_assign = [(init % codes).cast("int") for _ in range(m)]
-    coarse: list[tuple[int, list[float]]] = []
-    books: list[list[tuple[int, list[float]]]] = []
-    for _ in range(kmeans_iters):
-        structs = [
-            F.struct(
-                F.lit(-1).alias("s"),
-                coarse_assign.alias("c"),
-                _dvec(F.col("_raw")).alias("v"),
-            )
-        ] + [
-            F.struct(
-                F.lit(s).alias("s"),
-                pq_assign[s].alias("c"),
-                F.slice(_dvec(F.col("_raw")), s * sub + 1, sub).alias("v"),
-            )
-            for s in range(m)
-        ]
-        sums = (
-            base.select(F.explode(F.array(*structs)).alias("x"))
-            .groupBy(F.col("x.s").alias("s"), F.col("x.c").alias("c"))
-            .agg(
-                F.count(F.lit(1)).alias("_n"),
-                # get() (not []) past a slice's width reads NULL under
-                # ANSI and SUM skips it, so one dim-wide aggregate
-                # serves both the full-vector and slice shapes
-                *[F.sum(F.get(F.col("x.v"), i)).alias(f"s{i}") for i in range(dim)],
-            )
-        )
-        rows = sums.collect()  # (m·codes + n_clusters) rows — tiny
-        coarse = sorted(
-            (r["c"], [r[f"s{i}"] / r["_n"] for i in range(dim)])
-            for r in rows
-            if r["s"] == -1
-        )
-        books = [
-            sorted(
-                (r["c"], [r[f"s{i}"] / r["_n"] for i in range(sub)])
-                for r in rows
-                if r["s"] == s
-            )
-            for s in range(m)
-        ]
-        coarse_assign = _argmin_cluster(_dvec(F.col("_raw")), coarse)
-        pq_assign = [
-            _argmin_cluster(F.slice(_dvec(F.col("_raw")), s * sub + 1, sub), books[s])
-            for s in range(m)
-        ]
-    encoded = base.select(
+    immaterial."""
+    v = _dvec(vec_col)
+    embeddings.select(
         F.col(id_col),
-        *[pq_assign[s].alias(f"code_{s}") for s in range(m)],
-        coarse_assign.alias("cluster"),
-    )
-    encoded.repartition("cluster").write.mode("overwrite").partitionBy(
-        "cluster"
-    ).parquet(path)
-    return coarse, books, sub
+        *_code_cols(v, books, sub),
+        _argmin_cluster(v, coarse).alias("cluster"),
+    ).repartition("cluster").write.mode("overwrite").partitionBy("cluster").parquet(path)
 
 
 def ivfpq_search(

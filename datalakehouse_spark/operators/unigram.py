@@ -59,6 +59,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datalakehouse_spark.io import _ship_package
 from datalakehouse_spark.operators.bpe import (
     PAIR_SEP,
     rank_table,
@@ -231,6 +232,7 @@ def unigram_train(
     the model, merge-table-sized) plus one map-side-combined aggregate
     and an inventory-sized collect.  Identical algorithm to
     :func:`train_unigram_local` (contract-tested)."""
+    _ship_package(spark)  # the usage map calls best_segmentation on the workers
     src = (
         words.where(F.length("w") > 0)
         .select("w", F.col("f").cast("long").alias("f"))

@@ -175,12 +175,6 @@ def compile_seek_request(
     )
 
 
-def day_bounds_for_pruning(start: dt.datetime, end: dt.datetime) -> tuple[dt.date, dt.date]:
-    """The redundant day-range predicate the API adds purely so the
-    engine prunes day partitions (P6, main.py:258-259,275)."""
-    return start.date(), end.date()
-
-
 def compile_page_request(
     df: DataFrame,
     *,

@@ -1054,18 +1054,15 @@ def _ivfpq_index_for(spark: SparkSession, sf_dir: str):
     key = (os.path.abspath(sf_dir), 8, _PQ_M, _PQ_CODES, _PQ_ITERS)
     tag = "ivfpq_index_" + hashlib.md5(repr(key).encode()).hexdigest()[:8]
     path = os.path.join(stable_scratch(tag), "index")
-    # compose from the session's existing builds (deterministic, so
-    # identical to retraining): PQ codes + IVF cluster assignment
-    # join once and persist partitioned — no second k-means
+    # compose from the session's IVF and PQ builds (deterministic, so
+    # identical to retraining): one literal-model projection of the
+    # corpus writes codes + cluster — no second k-means, no join
+    from datalakehouse_spark.operators.similarity import build_ivfpq_index
     from datalakehouse_spark.registry_ext import ivf_index_for
 
-    ivf_path, coarse = ivf_index_for(spark, sf_dir)
-    codes_path, books, sub = _pq_index_for(spark, sf_dir)
-    assign = spark.read.parquet(ivf_path).select("vec_id", "cluster")
-    codes = spark.read.parquet(codes_path)
-    codes.join(assign, "vec_id").repartition("cluster").write.mode(
-        "overwrite"
-    ).partitionBy("cluster").parquet(path)
+    _ivf_path, coarse = ivf_index_for(spark, sf_dir)
+    _codes_path, books, sub = _pq_index_for(spark, sf_dir)
+    build_ivfpq_index(load_table(spark, sf_dir, "embeddings"), path, coarse, books, sub)
     return path, coarse, books, sub
 
 

@@ -54,6 +54,21 @@ PARALLEL_LISTING_THRESHOLD = str(2**31 - 1)
 #: context start only, so setting it later does nothing).
 MARK_SUCCESS_KEY = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
 
+#: The session contract: the confs every engine read and write relies
+#: on, applied by ``get_spark``'s builder and, to a session built
+#: elsewhere, by ``io._ensure_session_contract``.  A key without the
+#: ``spark.`` prefix is a Hadoop key (see ``MARK_SUCCESS_KEY``).
+SESSION_CONTRACT = {
+    # events.parquet carries TIMESTAMP(NANOS), which Spark has no
+    # native type for; read the physical int64 as long and decode it
+    # explicitly (datalakehouse_spark.io normalizes it)
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # no Spark job to list a version's files
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": PARALLEL_LISTING_THRESHOLD,
+    # no _SUCCESS marker rewritten by each append
+    MARK_SUCCESS_KEY: "false",
+}
+
 
 def default_parallelism() -> int:
     env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -82,20 +97,13 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # events.parquet carries TIMESTAMP(NANOS) which Spark has no native
-        # type for; read the physical int64 as long and decode explicitly
-        # (datalakehouse_spark.io normalizes it).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            PARALLEL_LISTING_THRESHOLD,
-        )
-        .config(f"spark.hadoop.{MARK_SUCCESS_KEY}", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    for k, v in SESSION_CONTRACT.items():
+        builder = builder.config(k if k.startswith("spark.") else f"spark.hadoop.{k}", v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

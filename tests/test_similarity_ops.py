@@ -48,14 +48,16 @@ def test_kmeans_deterministic_and_total(spark):
     assert a1.where((F.col("cluster") < 0) | (F.col("cluster") >= 4)).count() == 0
 
 
-def test_ivf_kmeans_probe_subset_of_exact(spark):
+def test_ivf_kmeans_probe_subset_of_exact(spark, tmp_path):
     """IVF results are drawn from the probed clusters and scored with
     the same cosine as the exact path: every IVF hit appearing in the
     exact top-k must carry the identical score."""
     emb = load_table(spark, SF, "embeddings")
     q = list(emb.where(F.col("vec_id") == 0).first().embedding)
     exact = {r.vec_id: r.cosine_sim for r in S.knn_brute_force(emb, q, k=50).collect()}
-    ivf = S.ivf_search(emb, q, k=10, n_probe=2).collect()
+    path = str(tmp_path / "ivf")
+    cent_rows = S.build_ivf_index(emb, path)
+    ivf = S.ivf_search_indexed(spark, path, cent_rows, q, k=10, n_probe=2).collect()
     assert 0 < len(ivf) <= 10
     for r in ivf:
         if r.vec_id in exact:
@@ -123,25 +125,34 @@ def test_simhash_pairs_bucket_cap(spark):
     )
 
 
+def test_multi_group_lloyd_matches_single_group_runs(spark):
+    """One ``_lloyd`` run trains the coarse k=8 quantizer and the four
+    PQ subspace codebooks together (one aggregate and one collect per
+    iteration); each group's centroids are those of that group trained
+    alone, which takes the plain-projection path."""
+    emb = load_table(spark, SF, "embeddings")
+    base, dim = S._corpus(emb, "vec_id", "embedding")
+    sub = dim // 4
+    groups = [(8, slice(0, dim))] + [(16, slice(s * sub, (s + 1) * sub)) for s in range(4)]
+    fused = S._lloyd(base, groups, 2)
+    assert len(fused) == len(groups)
+    for group, (_, cents) in zip(groups, fused):
+        [(_, alone)] = S._lloyd(base, [group], 2)
+        assert cents and cents == alone
+
+
 def test_build_ivfpq_fused_matches_sequential_training(spark, tmp_path):
-    """Round-8 fusion: build_ivfpq_index trains coarse k-means and all
-    m PQ codebooks off ONE tagged pass per Lloyd iteration.  The model
-    and the persisted index must be bit-identical to the sequential
-    kmeans_clusters + pq_codebooks + encode-join composition, and the
-    fused job count per iteration is one (asserted by equivalence, the
-    contract that matters)."""
+    """``build_ivfpq_index`` writes codes and cluster from ONE
+    literal-model projection of the trained models; its rows equal the
+    sequential composition: ``pq_encode`` joined with the
+    ``kmeans_clusters`` assignment."""
     emb = load_table(spark, SF, "embeddings")
     path = str(tmp_path / "ivfpq")
-    coarse_f, books_f, sub_f = S.build_ivfpq_index(
-        emb, path, n_clusters=8, kmeans_iters=2, m=4, codes=16
-    )
-    assign, coarse_s = S.kmeans_clusters(emb, k=8, iters=2)
-    books_s, sub_s = S.pq_codebooks(emb, m=4, codes=16, iters=2)
-    assert sub_f == sub_s
-    assert coarse_f == coarse_s
-    assert books_f == books_s
+    assign, coarse = S.kmeans_clusters(emb, k=8, iters=2)
+    books, sub = S.pq_codebooks(emb, m=4, codes=16, iters=2)
+    S.build_ivfpq_index(emb, path, coarse, books, sub)
     idx = spark.read.parquet(path)
-    composed = S.pq_encode(emb, books_s, sub_s).join(assign, "vec_id")
+    composed = S.pq_encode(emb, books, sub).join(assign, "vec_id")
     got = sorted(
         (r["vec_id"], r["code_0"], r["code_1"], r["code_2"], r["code_3"], int(r["cluster"]))
         for r in idx.collect()
@@ -154,6 +165,26 @@ def test_build_ivfpq_fused_matches_sequential_training(spark, tmp_path):
     # serving still composes: partition-pruned probe + ADC over codes
     qv = [float(x) for x in emb.where(F.col("vec_id") == 0).select("embedding").first()[0]]
     hits = S.ivfpq_search(
-        spark, path, coarse_f, books_f, sub_f, qv, k=5, n_probe=2, exclude_id=0
+        spark, path, coarse, books, sub, qv, k=5, n_probe=2, exclude_id=0
     ).collect()
     assert len(hits) == 5
+
+
+@pytest.mark.parametrize(
+    "train, iters",
+    [
+        (lambda emb: S.kmeans_clusters(emb, k=8, iters=3), 3),
+        (lambda emb: S.pq_codebooks(emb, m=4, codes=16, iters=2), 2),
+    ],
+    ids=["kmeans_k8_iters3", "pq_m4_iters2"],
+)
+def test_cold_lloyd_build_runs_one_collect_per_iteration(spark, last_job_id, train, iters):
+    """A cold build runs the dim probe plus ONE collect per Lloyd
+    iteration, however many models the loop trains (one k-means, or m
+    codebooks).  With AQE on, each iteration's collect is two Spark
+    jobs: the aggregate's shuffle-map stage, then the result stage."""
+    emb = load_table(spark, SF, "embeddings")
+    emb.count()  # warm the scan: load_table's schema read is not the build's
+    before = last_job_id()
+    train(emb)
+    assert last_job_id() - before == 1 + 2 * iters

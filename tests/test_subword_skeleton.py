@@ -4,10 +4,15 @@ wires into it: BPE, WordPiece and Unigram-LM.
 Pins: every trainer's rank table plans as an Arrow ``LocalRelation``
 (collecting it runs no Spark job), a cold small-table train is exactly
 ONE Spark job for every family (the fused probe), and both paths of a
-``*_train_auto`` call apply one input rule to the learned symbols.
+``*_train_auto`` call apply one input rule to the learned symbols, and
+an operator ships the package to a vanilla session's Python workers.
 """
 
 from __future__ import annotations
+
+import os
+import subprocess
+import sys
 
 import pytest
 
@@ -103,3 +108,44 @@ def test_both_paths_reject_symbols_outside_the_alphabet(spark, family, threshold
     words = spark.createDataFrame([("AB", 5), ("AB", 4)], "w string, f long")
     with pytest.raises(ValueError, match="alphabet"):
         train(spark, words, local_rows_threshold=threshold)
+
+
+_VANILLA_DRIVER = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+spark = (
+    SparkSession.builder.master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+)
+from datalakehouse_spark.operators.bpe import bpe_train_auto
+words = spark.createDataFrame(
+    [("banana", 10), ("bandana", 7), ("anagram", 5), ("pan", 4)], "w string, f long"
+)
+print("merges", len(bpe_train_auto(spark, words, n_merges=4)[1]))
+spark.stop()
+"""
+
+
+def test_operator_ships_the_package_to_a_vanilla_session(tmp_path):
+    """A vanilla session (no ``load_table`` has run, so no session
+    contract) whose driver has the repo only on ``sys.path``: the
+    trainer's ``mapInPandas`` tasks unpickle package functions by
+    import path, so the operator itself must ship the package to the
+    Python workers, or every task fails with ModuleNotFoundError."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p
+        for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.abspath(p) != repo
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _VANILLA_DRIVER, repo],
+        cwd=tmp_path,  # not the repo: a worker must not import it from its cwd
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "merges 4" in proc.stdout
